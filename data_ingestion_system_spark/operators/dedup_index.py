@@ -206,6 +206,12 @@ def probe_index(spark: SparkSession, path: str, batch: DataFrame,
     files predating the stamp read as null (null-safe comparison) and
     migrated/sentinel rows carry ``mb=-1``, which no non-negative batch
     id matches.
+
+    NOTE: this function is EAGER.  Its two ``localCheckpoint(eager=True)``
+    calls (the candidate pairs, then the implicated docs' shingles) run
+    real Spark jobs when the DataFrame is BUILT, before any caller
+    action: the banded probe ⋈ index join and the text explode.
+    Explain-only callers pay them too.
     """
     probe = banded_rows(batch, id_col=id_col, text_col=text_col)
     # explicit schema: a freshly-bootstrapped index may hold zero files

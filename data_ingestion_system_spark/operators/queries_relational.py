@@ -1888,6 +1888,9 @@ def pagerank_iterate(pairs: DataFrame, *, iters: int = _PR_ITERS,
     # a checkpoint added a full write+read of the O(edges) relation —
     # fine at sf0.1 but measured +60% on the whole query at sf1
     # (12.9s -> 20.5s) before this was downgraded to a cache mark.
+    # persist/unpersist are not refcounted: a cache the caller made is
+    # the caller's to release, so _finish leaves it alone.
+    caller_cached = pairs.is_cached
     pairs = pairs.persist()
     # explode-symmetrize, not union-of-swap: a union reads the pairs
     # cache on TWO branches, and during the first fill both branches
@@ -1919,7 +1922,8 @@ def pagerank_iterate(pairs: DataFrame, *, iters: int = _PR_ITERS,
         # its caches are released by the session's cache clear, as the
         # bench does between queries.
         out = ranks.localCheckpoint()
-        for cached in (ranks, edges_deg, deg, pairs):
+        owned = (ranks, edges_deg, deg) + (() if caller_cached else (pairs,))
+        for cached in owned:
             if cached.is_cached:
                 cached.unpersist()
         return out

@@ -1944,8 +1944,10 @@ def text_nb_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum("lnc").alias("s_hit")))
     lang_side = ls.join(F.broadcast(prior), "cand")
     # tiny distinct over the materialized model; same value as the old
-    # ls⋈prior count (prior's langs are a superset of the model's)
-    n_langs = cw_counts.select("cand").distinct().count()
+    # ls⋈prior count (prior's langs are a superset of the model's, and
+    # a NULL lang never matched that join, so it is not counted here)
+    n_langs = (cw_counts.filter(F.col("cand").isNotNull())
+               .select("cand").distinct().count())
     if n_langs > 1000:
         raise ValueError(
             f"lang cardinality {n_langs} exceeds the 1000-language grid "

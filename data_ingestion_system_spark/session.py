@@ -12,15 +12,26 @@ correct at both scales:
   UTC-naive values.
 * Arrow enabled for every pandas interchange (Pandas UDFs are the only
   sanctioned Python hot path).
+* File listing runs at most one task per core.  Above 32 paths Spark lists
+  in a parallel job with one task per path (up to 10000); the streaming
+  file source re-lists each micro-batch's objects that way, so a batch of
+  200 one-record objects would run 200 tasks on 4 cores.  Capping
+  ``spark.sql.sources.parallelPartitionDiscovery.parallelism`` at the
+  core count keeps the job parallel on a cluster and drops the per-task
+  overhead; lists of 32 paths or fewer still list serially on the driver.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+_LISTING_PARALLELISM = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
+# what conf.set raises for a key that cannot change after start-up
+_STATIC_CONF_ERRORS = ("CANNOT_MODIFY_STATIC_CONFIG", "CANNOT_MODIFY_CONFIG")
 
 
 def get_spark(app_name: str = "data_ingestion_system_spark",
@@ -37,6 +48,7 @@ def get_spark(app_name: str = "data_ingestion_system_spark",
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", cpus)
+        .config(_LISTING_PARALLELISM, cpus)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -110,18 +122,20 @@ def ship_package(spark: SparkSession) -> None:
 def tune_session(spark: SparkSession) -> SparkSession:
     """Apply the runtime-settable subset of our tuning to a session we did
     not create (e.g. the driver's).  Static configs (driver memory) can't
-    change post-start and are left alone."""
+    change post-start and are left alone; any other failure raises."""
     for k, v in {
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
+        _LISTING_PARALLELISM: str(spark.sparkContext.defaultParallelism),
     }.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # conf may be static on this session; keep going
+        except AnalysisException as e:
+            if e.getCondition() not in _STATIC_CONF_ERRORS:
+                raise
     return spark
 
 

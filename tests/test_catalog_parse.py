@@ -29,6 +29,8 @@ def test_parse_bytes_whitespace_and_case():
 
 
 def test_parse_bytes_garbage_raises():
-    # the guard must fail LOUDLY on unparseable values, not no-op
-    with pytest.raises((ValueError, KeyError)):
-        _parse_bytes("128xyz")
+    # the guard must fail LOUDLY on unparseable values, not no-op; int()
+    # alone would accept "1_000"
+    for garbage in ("128xyz", "1_000", "12 8m", "128bk"):
+        with pytest.raises(ValueError):
+            _parse_bytes(garbage)

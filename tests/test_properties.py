@@ -477,3 +477,23 @@ def test_pagerank_tol_early_exit(spark):
     rows = pr.collect()
     assert len(rows) == 4
     assert all(abs(r["pr"] - 0.25) < 1e-12 for r in rows)
+
+
+def test_pagerank_tol_keeps_caller_cache(spark):
+    """The tol path releases the caches it made, not one the caller made:
+    persist/unpersist are not refcounted, so unpersisting a caller-cached
+    ``pairs`` would silently drop the caller's own reuse."""
+    from data_ingestion_system_spark.operators.queries_relational import (
+        pagerank_iterate,
+    )
+
+    nodes = ["n0", "n1", "n2", "n3"]
+    rows = [(a, b) for i, a in enumerate(nodes) for b in nodes[i + 1:]]
+    cached = spark.createDataFrame(rows, "a string, b string").cache()
+    pagerank_iterate(cached, iters=50, tol=1e-12).collect()
+    assert cached.is_cached
+    cached.unpersist()
+
+    owned = spark.createDataFrame(rows, "a string, b string")
+    pagerank_iterate(owned, iters=50, tol=1e-12).collect()
+    assert not owned.is_cached
