@@ -31,6 +31,11 @@ class Catalog:
     """Lazy name->DataFrame registry for one scale-factor directory."""
 
     def __init__(self, spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR):
+        from data_ingestion_system_spark.session import (
+            set_runtime_conf,
+            ship_package,
+        )
+
         self.spark = spark
         self.sf_dir = sf_dir
         self._cache: dict[str, DataFrame] = {}
@@ -42,21 +47,15 @@ class Catalog:
         # oracle comparison stays bit-exact).  Current fixtures store
         # native TIMESTAMP(MICROS); the conf is then a no-op and ts
         # loads as timestamp directly (both paths are tested).
-        try:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            # timestamps must render as UTC-naive to match the DuckDB
-            # oracle no matter what session the driver hands us
-            spark.conf.set("spark.sql.session.timeZone", "UTC")
-        except Exception:
-            pass
+        set_runtime_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true")
+        # timestamps must render as UTC-naive to match the DuckDB
+        # oracle no matter what session the caller hands us
+        set_runtime_conf(spark, "spark.sql.session.timeZone", "UTC")
         # executor Python workers must be able to import this package for
-        # mapInPandas/pandas_udf closures, whatever cwd the driver runs from
-        from data_ingestion_system_spark.session import ship_package
-
-        try:
-            ship_package(spark)
-        except Exception:
-            pass
+        # mapInPandas/pandas_udf closures, whatever cwd the driver runs
+        # from; a failed ship raises here, not as a later executor
+        # ImportError
+        ship_package(spark)
 
     def path(self, name: str) -> str:
         return os.path.join(self.sf_dir, f"{name}.parquet")

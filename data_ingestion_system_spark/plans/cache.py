@@ -140,8 +140,9 @@ class ResultCache:
 class CachedSearchService:
     """The reference's search endpoint shape: cache probe -> engine -> fill.
 
-    ``search_fn(filters) -> DataFrame``; results are collected (the driver
-    of the reference does the same — rows go over the wire as JSON).
+    ``search_fn(filters) -> DataFrame`` (a subclass's ``search`` may pass
+    other arguments); results are collected (the driver of the reference
+    does the same — rows go over the wire as JSON).
 
     **Degraded mode** (``audit.services.ts:35-87`` parity): a failing
     cache backend must never fail the query — on the first cache error
@@ -149,7 +150,7 @@ class CachedSearchService:
     request straight from the engine; ``enable_cache()`` re-arms it
     (the reference re-arms on Redis reconnect)."""
 
-    def __init__(self, search_fn: Callable[[Mapping[str, Any]], DataFrame],
+    def __init__(self, search_fn: Callable[..., DataFrame],
                  cache: ResultCache | None = None):
         self._search = search_fn
         self.cache = cache or ResultCache()
@@ -160,7 +161,14 @@ class CachedSearchService:
         self.cache_enabled = True
 
     def search(self, filters: Mapping[str, Any]) -> list[Row]:
-        key = canonical_key("audit", filters)
+        return self._serve(canonical_key("audit", filters),
+                           lambda: self._search(filters).collect())
+
+    def _serve(self, key: str, run: Callable[[], list[Row]]) -> list[Row]:
+        """Probe ``key``; on a miss, ``run()`` and fill.  The first cache
+        error turns the cache off (degraded mode)."""
+        # broad catch: any backend error degrades to uncached serving, as
+        # the reference's Redis path does (audit.services.ts:35-87)
         if self.cache_enabled:
             try:
                 cached = self.cache.get(key)
@@ -170,7 +178,7 @@ class CachedSearchService:
             else:
                 if cached is not None:
                     return cached
-        value = self._search(filters).collect()
+        value = run()
         if self.cache_enabled:
             try:
                 self.cache.put(key, value)
@@ -210,10 +218,9 @@ class VersionedSearchService(CachedSearchService):
                  search_fn: Callable[[DataFrame, Mapping[str, Any]],
                                      DataFrame],
                  cache: ResultCache | None = None):
-        super().__init__(search_fn=None, cache=cache)
+        super().__init__(search_fn, cache=cache)
         self._spark = spark
         self._root = root
-        self._search2 = search_fn
 
     def search(self, filters: Mapping[str, Any],
                as_of_version: int | None = None) -> list[Row]:
@@ -225,21 +232,6 @@ class VersionedSearchService(CachedSearchService):
         version = (as_of_version if as_of_version is not None
                    else latest_version(self._root))
         key = canonical_key(f"audit@{self._root}@v{version}", filters)
-        if self.cache_enabled:
-            try:
-                cached = self.cache.get(key)
-            except Exception:
-                self.cache_errors += 1
-                self.cache_enabled = False
-            else:
-                if cached is not None:
-                    return cached
-        snap = read_snapshot(self._spark, self._root, version)
-        value = self._search2(snap, filters).collect()
-        if self.cache_enabled:
-            try:
-                self.cache.put(key, value)
-            except Exception:
-                self.cache_errors += 1
-                self.cache_enabled = False
-        return value
+        return self._serve(key, lambda: self._search(
+            read_snapshot(self._spark, self._root, version), filters
+        ).collect())

@@ -119,10 +119,20 @@ def ship_package(spark: SparkSession) -> None:
     _SHIPPED.add(sc.applicationId)
 
 
+def set_runtime_conf(spark: SparkSession, key: str, value: str) -> None:
+    """``spark.conf.set`` on a session we may not have created: a key that
+    cannot change after start-up (a static config such as driver memory)
+    is left alone; any other failure raises."""
+    try:
+        spark.conf.set(key, value)
+    except AnalysisException as e:
+        if e.getCondition() not in _STATIC_CONF_ERRORS:
+            raise
+
+
 def tune_session(spark: SparkSession) -> SparkSession:
     """Apply the runtime-settable subset of our tuning to a session we did
-    not create (e.g. the driver's).  Static configs (driver memory) can't
-    change post-start and are left alone; any other failure raises."""
+    not create (e.g. the one `__spark_entry__.entry` receives)."""
     for k, v in {
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -131,11 +141,7 @@ def tune_session(spark: SparkSession) -> SparkSession:
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         _LISTING_PARALLELISM: str(spark.sparkContext.defaultParallelism),
     }.items():
-        try:
-            spark.conf.set(k, v)
-        except AnalysisException as e:
-            if e.getCondition() not in _STATIC_CONF_ERRORS:
-                raise
+        set_runtime_conf(spark, k, v)
     return spark
 
 

@@ -40,6 +40,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from data_ingestion_system_spark.session import set_runtime_conf
+
 AUDIT_SCHEMA = StructType([
     StructField("transaction_id", StringType()),
     StructField("app_id", StringType()),
@@ -164,12 +166,8 @@ class AuditHttpLogDataSource(DataSource):
 def register_audit_source(spark) -> None:
     """Idempotently register the connector with a session."""
     # runtime-settable; without it Spark refuses a reader that implements
-    # pushFilters rather than silently skipping the pushdown
-    try:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:
-        # conf absent/static on this Spark build: registration still
-        # works, pushdown simply doesn't engage (the engine-side filter
-        # applies regardless) — same degrade posture as Catalog
-        pass
+    # pushFilters rather than silently skipping the pushdown.  Where a
+    # session pins it, registration still works and the engine-side
+    # filter applies regardless.
+    set_runtime_conf(spark, "spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(AuditHttpLogDataSource)

@@ -7,26 +7,16 @@ with the key space forever.  That regime is what the RocksDB state
 store exists for (state ≫ executor heap, changelog checkpointing —
 pinned in tests/test_streaming_windowed.py).
 
-Two implementations of the same contract, (user_id) -> updated
-(n_events, total_value, max_value) row per micro-batch:
-
-* ``lifetime_profiles`` — ``applyInPandasWithState`` with NoTimeout
-  (state deliberately never expires).  The tested default.
-* ``lifetime_profiles_tws`` — the same processor on Spark 4's
-  ``transformWithStateInPandas`` (typed ValueState, composable state
-  variables, RocksDB-only by construction).  The runtime path needs the
-  protobuf-backed state-server wire format, so availability is gated:
-  ``HAS_TWS`` is False when ``google.protobuf`` is absent and the
-  function raises with a clear message instead of crashing the stream.
-
-State reads/writes are one get/update per key per batch — O(keys
-touched in the batch), never O(all keys).
+``lifetime_profiles`` — ``applyInPandasWithState`` with NoTimeout (state
+deliberately never expires) — emits, per micro-batch, one updated
+(user_id, n_events, total_value, max_value) row for every user the
+batch touched.  State reads/writes are one get/update per key per batch
+— O(keys touched in the batch), never O(all keys).
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -46,17 +36,9 @@ OUTPUT_SCHEMA = T.StructType([
     T.StructField("max_value", T.DoubleType()),
 ])
 
-# The TWS wire format needs protobuf at runtime.  pyspark treats it as
-# an optional extra, so environments legitimately lack it — r9 vendors
-# a minimal pure-Python runtime (vendor/protobuf_shim, public wire spec)
-# and falls back to it, which lights this module's previously
-# environment-gated happy path.  A real installation always wins.
-from data_ingestion_system_spark.vendor import ensure_protobuf, ship_protobuf
 
-HAS_TWS = ensure_protobuf()
-
-
-def _fold_batches(pdfs: Iterator[pd.DataFrame]) -> tuple[int, float, float]:
+def _update_one(key: tuple, pdfs: Iterator[pd.DataFrame],
+                state: GroupState) -> Iterator[pd.DataFrame]:
     n, total, mx = 0, 0.0, float("-inf")
     for pdf in pdfs:
         vals = pdf["value"].dropna()
@@ -64,21 +46,10 @@ def _fold_batches(pdfs: Iterator[pd.DataFrame]) -> tuple[int, float, float]:
         total += float(vals.sum())
         if len(vals):
             mx = max(mx, float(vals.max()))
-    return n, total, mx
-
-
-def _merged_profile(n: int, total: float, mx: float,
-                    prev: tuple | None) -> tuple[int, float, float]:
-    if prev is not None:
-        pn, ptotal, pmx = prev
+    if state.exists:
+        pn, ptotal, pmx = state.get
         n, total, mx = n + pn, total + ptotal, max(mx, pmx)
-    return n, total, (0.0 if mx == float("-inf") else mx)
-
-
-def _update_one(key: tuple, pdfs: Iterator[pd.DataFrame],
-                state: GroupState) -> Iterator[pd.DataFrame]:
-    n, total, mx = _merged_profile(
-        *_fold_batches(pdfs), state.get if state.exists else None)
+    mx = 0.0 if mx == float("-inf") else mx  # no non-null value seen yet
     state.update((n, total, mx))
     yield pd.DataFrame({
         "user_id": [key[0]], "n_events": [n],
@@ -97,49 +68,5 @@ def lifetime_profiles(events: DataFrame) -> DataFrame:
             stateStructType=STATE_SCHEMA,
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def lifetime_profiles_tws(events: DataFrame) -> DataFrame:
-    """transformWithStateInPandas form of ``lifetime_profiles`` (typed
-    ValueState; RocksDB provider required by the API itself)."""
-    if not HAS_TWS:
-        raise ImportError(
-            "transformWithStateInPandas needs google.protobuf at runtime; "
-            "use lifetime_profiles (applyInPandasWithState) instead")
-    # the state-server client runs in the PYTHON WORKERS — ship the
-    # vendored runtime there too (no-op where protobuf is installed)
-    ship_protobuf(events.sparkSession)
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class LifetimeProfileProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._profile = handle.getValueState("profile", STATE_SCHEMA)
-
-        def handleInputRows(self, key: tuple, rows: Iterator[pd.DataFrame],
-                            timerValues: Any):  # noqa: N802, N803
-            n, total, mx = _merged_profile(
-                *_fold_batches(rows),
-                self._profile.get() if self._profile.exists() else None)
-            self._profile.update((n, total, mx))
-            yield pd.DataFrame({
-                "user_id": [key[0]], "n_events": [n],
-                "total_value": [total], "max_value": [mx],
-            })
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=LifetimeProfileProcessor(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
         )
     )

@@ -3,6 +3,8 @@ cache-aside service behavior."""
 
 from __future__ import annotations
 
+import pytest
+
 from data_ingestion_system_spark.plans.cache import (
     CacheBackend,
     CachedSearchService,
@@ -136,6 +138,32 @@ def test_degraded_mode_on_fill_failure(spark):
     r1 = svc.search({"x": 9})                        # probe misses, fill dies
     assert [row.id for row in r1] == [0]
     assert svc.cache_enabled is False and svc.cache_errors == 1
+
+
+@pytest.mark.parametrize("fail_on", ["get", "put"])
+def test_versioned_degraded_mode(spark, tmp_path, fail_on):
+    """The versioned service shares the degraded mode: a failing probe
+    or fill serves the snapshot's rows and turns the cache off."""
+    from data_ingestion_system_spark.plans.cache import (
+        VersionedSearchService,
+    )
+    from data_ingestion_system_spark.sources.versioned import commit_snapshot
+
+    root = str(tmp_path / "t")
+    commit_snapshot(spark.range(3).toDF("id"), root)
+    runs = []
+
+    def search_fn(snap, filters):
+        runs.append(dict(filters))
+        return snap.filter(snap.id >= filters["min_id"]).orderBy("id")
+
+    svc = VersionedSearchService(spark, root, search_fn,
+                                 cache=ExplodingCache(fail_on=fail_on))
+    r1 = svc.search({"min_id": 1})
+    assert [row.id for row in r1] == [1, 2]
+    assert svc.cache_enabled is False and svc.cache_errors == 1
+    assert svc.search({"min_id": 1}) == r1 and len(runs) == 2
+    assert svc.cache_errors == 1                     # no repeat probing
 
 
 class FakeRedisBackend(CacheBackend):

@@ -1,5 +1,6 @@
-"""Session tuning: the file-listing job is capped at the core count, and
-``tune_session`` tolerates only the static-config error from ``conf.set``."""
+"""Session tuning: the file-listing job is capped at the core count,
+``tune_session`` tolerates only the static-config error from ``conf.set``,
+and a ``Catalog`` whose package ship fails raises when it is built."""
 
 from __future__ import annotations
 
@@ -8,6 +9,8 @@ from types import SimpleNamespace
 import pytest
 from pyspark.errors import AnalysisException
 
+from data_ingestion_system_spark import session
+from data_ingestion_system_spark.catalog import Catalog
 from data_ingestion_system_spark.session import tune_session
 from data_ingestion_system_spark.sources.ingest import REQUEST_SCHEMA
 
@@ -72,3 +75,14 @@ def test_tune_session_skips_static_conf():
 def test_tune_session_raises_other_errors():
     with pytest.raises(AnalysisException):
         tune_session(_session("UNSUPPORTED_FEATURE"))
+
+
+def test_catalog_raises_when_ship_fails(spark, sf_dir, monkeypatch):
+    """Executors that cannot import the package fail every UDF later;
+    the failure must surface where it happens."""
+    def refuse(_spark):
+        raise OSError("cannot write the package zip")
+
+    monkeypatch.setattr(session, "ship_package", refuse)
+    with pytest.raises(OSError, match="package zip"):
+        Catalog(spark, sf_dir)

@@ -1,5 +1,6 @@
 """Lifetime (never-expiring) per-key state: running user profiles
-accumulate across micro-batches; the TWS twin is availability-gated."""
+accumulate across micro-batches, on the default state store and on
+RocksDB."""
 
 from __future__ import annotations
 
@@ -7,14 +8,12 @@ import json
 
 import pytest
 
-from data_ingestion_system_spark.streaming.lifetime import (
-    HAS_TWS,
-    lifetime_profiles,
-    lifetime_profiles_tws,
-)
+from data_ingestion_system_spark.streaming.lifetime import lifetime_profiles
+
+_PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
 
 
-def _run_batch(spark, landing, ckpt, out, rows, i, profiles_fn):
+def _run_batch(spark, landing, ckpt, out, rows, i):
     (landing / f"b{i}.json").write_text(
         "\n".join(json.dumps(r) for r in rows))
     stream = spark.readStream.schema("user_id long, value double").json(
@@ -25,23 +24,43 @@ def _run_batch(spark, landing, ckpt, out, rows, i, profiles_fn):
         batch_df.withColumn("batch_id", F.lit(batch_id)) \
             .write.mode("append").parquet(out)
 
-    q = (profiles_fn(stream).writeStream.outputMode("update")
+    q = (lifetime_profiles(stream).writeStream.outputMode("update")
          .option("checkpointLocation", ckpt)
          .trigger(availableNow=True)
          .foreachBatch(sink).start())
     assert q.awaitTermination(120), "micro-batch did not finish in 120s"
 
 
-def test_lifetime_profiles_accumulate_across_batches(spark, tmp_path):
+@pytest.fixture(params=[
+    None,
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+], ids=["default", "rocksdb"])
+def state_store(spark, request):
+    """Run the test on the given state-store provider (None: Spark's
+    default), restoring the session's setting afterwards."""
+    old = spark.conf.get(_PROVIDER_CONF, None)
+    if request.param is not None:
+        spark.conf.set(_PROVIDER_CONF, request.param)
+    try:
+        yield request.param
+    finally:
+        if old is None:
+            spark.conf.unset(_PROVIDER_CONF)
+        else:
+            spark.conf.set(_PROVIDER_CONF, old)
+
+
+def test_lifetime_profiles_accumulate_across_batches(spark, state_store,
+                                                     tmp_path):
     landing = tmp_path / "landing"
     landing.mkdir()
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
     _run_batch(spark, landing, ckpt, out,
                [{"user_id": 1, "value": 10.0}, {"user_id": 1, "value": 5.0},
-                {"user_id": 2, "value": 1.0}], 0, lifetime_profiles)
+                {"user_id": 2, "value": 1.0}], 0)
     _run_batch(spark, landing, ckpt, out,
                [{"user_id": 1, "value": 2.0}, {"user_id": 3, "value": 7.0}],
-               1, lifetime_profiles)
+               1)
     rows = {(r.batch_id, r.user_id): (r.n_events, r.total_value, r.max_value)
             for r in spark.read.parquet(out).collect()}
     assert rows[(0, 1)] == (2, 15.0, 10.0)
@@ -51,47 +70,8 @@ def test_lifetime_profiles_accumulate_across_batches(spark, tmp_path):
     assert rows[(1, 3)] == (1, 7.0, 7.0)
     # untouched key emits nothing in batch 1
     assert (1, 2) not in rows
-
-
-def test_tws_twin_contract(spark, tmp_path):
-    """The TWS twin's contract is availability-dependent BY DESIGN
-    (transformWithStateInPandas needs the protobuf-backed state-server
-    wire format, which pyspark declares as an optional dependency), so
-    this single test pins whichever leg the runtime supports: parity
-    with the applyInPandasWithState form when protobuf resolves, the
-    clean ImportError (never a mid-stream executor crash) when it
-    doesn't.  Since r9 the vendored pure-Python protobuf runtime
-    (vendor/protobuf_shim, VERDICT r8 #6) makes the PARITY leg the one
-    that runs in this sandbox — a real JVM state-server round-trip over
-    shim-encoded wire bytes, RocksDB provider and all; the ImportError
-    leg remains reachable only where even the shim cannot load.
-    Environment contract documented in COVERAGE.md."""
-    if not HAS_TWS:
-        with pytest.raises(ImportError, match="applyInPandasWithState"):
-            lifetime_profiles_tws(None)
-        return
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    conf = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(conf, None)
-    spark.conf.set(
-        conf,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider")
-    try:
-        _run_batch(spark, landing, ckpt, out,
-                   [{"user_id": 1, "value": 10.0},
-                    {"user_id": 1, "value": 5.0}], 0, lifetime_profiles_tws)
-        _run_batch(spark, landing, ckpt, out,
-                   [{"user_id": 1, "value": 2.0}], 1, lifetime_profiles_tws)
-        rows = {(r.batch_id, r.user_id):
-                (r.n_events, r.total_value, r.max_value)
-                for r in spark.read.parquet(out).collect()}
-        assert rows[(0, 1)] == (2, 15.0, 10.0)
-        assert rows[(1, 1)] == (3, 17.0, 10.0)
-    finally:
-        if old is None:
-            spark.conf.unset(conf)
-        else:
-            spark.conf.set(conf, old)
+    # the offset log records the provider the state operator ran on
+    offsets = (tmp_path / "ckpt" / "offsets" / "0").read_text().splitlines()
+    provider = json.loads(offsets[1])["conf"][_PROVIDER_CONF]
+    assert provider == (state_store or "org.apache.spark.sql.execution."
+                        "streaming.state.HDFSBackedStateStoreProvider")
