@@ -80,24 +80,24 @@ class Catalog:
         queries ran their heaviest stage on 1 of 32 cores
         (ingest_try_safe_exprs: the whole query was one 2.0 s task).
         The split estimate comes from the file fingerprint already
-        taken for the handle cache (size / maxPartitionBytes) — no
-        ``df.rdd`` probe, no job.  At real scale the estimate exceeds
+        taken for the handle cache (size / maxPartitionBytes) — no JVM
+        probe, no job — and it does not count byte-range splits, which
+        a single row group leaves empty but one.  This is the engine's
+        one scan-widening decision.  At real scale the estimate exceeds
         the core count and this is ``table(name)`` verbatim; the
         round-robin exchange only exists where the data is provably
         tiny.  Scan-light queries (filter + top-k, plain aggregates)
         should stay on ``table()`` — for them the exchange costs more
         than it recovers."""
         df = self.table(name)
-        try:
-            _, size, _ = _file_fingerprint(self.path(name))
-            max_split = _parse_bytes(self.spark.conf.get(
-                "spark.sql.files.maxPartitionBytes",
-                str(128 * 1024 * 1024)))
-            cores = self.spark.sparkContext.defaultParallelism
-            if size // max(max_split, 1) + 1 < cores:
-                return df.repartition(cores)
-        except OSError:
-            pass  # fixture path missing/unreadable: scan decides alone
+        # a file that vanished after table() cached its handle raises
+        # here, at plan time, rather than at the scan
+        _, size, _ = _file_fingerprint(self.path(name))
+        max_split = _parse_bytes(self.spark.conf.get(
+            "spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024)))
+        cores = self.spark.sparkContext.defaultParallelism
+        if size // max(max_split, 1) + 1 < cores:
+            return df.repartition(cores)
         return df
 
     def events_between(self, lo_iso: str, hi_iso: str) -> DataFrame:

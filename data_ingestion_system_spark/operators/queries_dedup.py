@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 from data_ingestion_system_spark.catalog import Catalog
 from data_ingestion_system_spark.operators import dedup as D
 from data_ingestion_system_spark.registry import register
-from data_ingestion_system_spark.session import ensure_input_parallelism
 
 JACCARD_THRESHOLD = 0.5
 COSINE_NEAR_DUP = 0.35  # fixture embeddings are near-orthogonal; 0.35 marks the tail
@@ -868,19 +867,10 @@ def dedup_duplicate_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = Catalog(spark, sf_dir)
     k = _PASSAGE_K
     w = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    toks = (cat.documents.select("doc_id", w.alias("w"))
+    # wide_table: the window-slide + xxhash projection, run once per
+    # consumer, is the heaviest stage
+    toks = (cat.wide_table("documents").select("doc_id", w.alias("w"))
             .filter(F.size("w") >= k))
-    # Input-parallelism guard (r9): the window-slide + xxhash projection
-    # is this query's heaviest stage and it ran single-task on the one
-    # parquet split — twice, once per consumer (the count_distinct
-    # aggregate's below-exchange partial-distinct defeats exchange
-    # sharing).  Widening the scan fixes the serialization; the double
-    # compute itself was measured a wash to materialize away (best-of-3:
-    # plain 1.73s / guard 1.54s / guard+checkpoint 1.59s) because both
-    # consumers are map-side parallel passes.
-    from data_ingestion_system_spark.session import ensure_input_parallelism
-
-    toks = ensure_input_parallelism(toks, spark)
     grams = toks.select(
         "doc_id",
         F.posexplode(F.expr(
@@ -1340,11 +1330,9 @@ def dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     DISTINCT, src/services/audit.services.ts); north-star scope.
     """
     cat = Catalog(spark, sf_dir)
-    docs = cat.documents.select("doc_id", "text")
-    # input-parallelism guard (shared helper — VERDICT r8 #7): the
-    # per-token md5 + array-HOF projection is the heaviest stage, and a
-    # small parquet file scans as 1-2 splits, serializing it.
-    docs = ensure_input_parallelism(docs, spark)
+    # wide_table: the per-token md5 + array-HOF projection is the
+    # heaviest stage, single-task on a one-row-group file
+    docs = cat.wide_table("documents").select("doc_id", "text")
     chunked = D.cdc_chunks(docs, "doc_id", "text")
     # 8-byte shuffle key; the chunk text never moves cross-partition.
     # Examined in r9 and deliberately left double-computed: the hashed
@@ -1354,9 +1342,9 @@ def dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Measured A/B/C at sf0.1 (plain 2.41s / localCheckpoint 2.70s /
     # shared repartition 2.39s, best-of-3 each): a materialization
     # barrier pays its write cost back exactly once and nets ~nothing,
-    # while a keyed repartition CollapseRepartition-folds the input
-    # guard's round-robin away and serializes the md5 work onto the
-    # single scan split.  Keep the simple shape.
+    # while a keyed repartition CollapseRepartition-folds wide_table's
+    # round-robin away and serializes the md5 work onto the single scan
+    # split.  Keep the simple shape.
     hashed = chunked.select("doc_id", F.xxhash64("chunk").alias("ch"))
     shared = (hashed.groupBy("ch")
               .agg(F.count_distinct("doc_id").alias("nd"))

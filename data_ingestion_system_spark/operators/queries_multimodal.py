@@ -21,31 +21,26 @@ from data_ingestion_system_spark.operators.multimodal import (
     media_features,
 )
 from data_ingestion_system_spark.registry import register
-from data_ingestion_system_spark.session import ensure_input_parallelism
 
 
 def _media_from_documents(spark: SparkSession, sf_dir: str,
                           parallel: bool = False) -> DataFrame:
     """documents -> typed media rows: blob = utf-8 bytes, kind by id.
 
-    ``parallel=True`` applies the input-parallelism guard for consumers
+    ``parallel=True`` scans through ``Catalog.wide_table`` for consumers
     whose heaviest stage is Arrow-batched Python over these rows
-    (features, demux, near-dup): a media-sized corpus fits one parquet
-    split well past sf1 (sf10's documents = 60 MB = ONE 128 MB split),
-    which serializes the whole decode chain onto a single task — r9's
-    second-decade sweep measured scene-cuts riding that single task to
-    a 9.7x decade ratio.  No-op at real scale, where the scan itself
-    has thousands of splits; pure-JVM consumers (multimodal_meta) skip
-    the guard so they don't buy a shuffle they never amortize."""
+    (features, frame sample, near-dup): a media-sized corpus is one
+    parquet row group well past sf1 (sf10's documents = one 60 MB row
+    group), so one task would run the whole decode chain.  Pure-JVM
+    consumers (multimodal_meta) read ``table`` so they don't buy a
+    shuffle they never amortize."""
     cat = Catalog(spark, sf_dir)
     kind = (
         F.when(F.col("doc_id") % 3 == 0, "image")
         .when(F.col("doc_id") % 3 == 1, "audio")
         .otherwise("video")
     )
-    docs = cat.documents
-    if parallel:
-        docs = ensure_input_parallelism(docs, spark)
+    docs = cat.wide_table("documents") if parallel else cat.documents
     return docs.select(
         F.col("doc_id").alias("media_id"),
         kind.alias("kind"),
@@ -325,8 +320,7 @@ def multimodal_video_demux(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"media_id": pdf["doc_id"],
                                 "content": content})
 
-    media = ensure_input_parallelism(
-        cat.documents.select("doc_id", "text"), spark).mapInPandas(
+    media = cat.wide_table("documents").select("doc_id", "text").mapInPandas(
         mux, out_schema)
     stats = video_demux_stats(media)
     return stats.select(
@@ -480,8 +474,7 @@ def multimodal_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"media_id": pdf["doc_id"],
                                 "content": content})
 
-    media = ensure_input_parallelism(
-        cat.documents.select("doc_id", "text"), spark).mapInPandas(
+    media = cat.wide_table("documents").select("doc_id", "text").mapInPandas(
         mux, out_schema)
     return audio_stats(media).select(
         "media_id", "n_channels", "sample_rate", "n_samples",
@@ -530,9 +523,9 @@ def multimodal_image_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     HEAVIEST Python per byte in the repo (zlib deflate+inflate and the
     full unfilter chain per image), so input parallelism is the whole
     game: a small parquet file scans as 1-2 splits and would serialize
-    the codec on 2 cores (measured: 30.6s at sf1 before the guard,
-    ~6s after).  The guard below repartitions ONLY when the scan
-    yields fewer partitions than cores — at 100 TB the scan has
+    the codec on 2 cores (measured: 30.6s at sf1 unwidened, ~6s
+    widened).  ``wide_table`` repartitions ONLY when the file's split
+    estimate is below the core count — at 100 TB the scan has
     thousands of row-group splits, so no shuffle is ever added where
     it would actually hurt."""
     import pandas as pd
@@ -566,8 +559,7 @@ def multimodal_image_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "media_id", "width", "height", "filter_type",
                 "n_pixels", "sum_pixel"])
 
-    docs = ensure_input_parallelism(
-        cat.documents.select("doc_id", "text"), spark)
+    docs = cat.wide_table("documents").select("doc_id", "text")
     stats = docs.mapInPandas(
         roundtrip,
         "media_id long, width int, height long, filter_type int, "
@@ -662,8 +654,7 @@ def multimodal_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"media_id": pdf["doc_id"],
                                 "content": content})
 
-    media = ensure_input_parallelism(
-        cat.documents.select("doc_id", "text"), spark).mapInPandas(
+    media = cat.wide_table("documents").select("doc_id", "text").mapInPandas(
         mux, out_schema)
     return (video_scene_deltas(media, threshold=_SCENE_CUT_THRESHOLD)
             .filter(F.col("demux_error").isNull())

@@ -144,20 +144,3 @@ def tune_session(spark: SparkSession) -> SparkSession:
         set_runtime_conf(spark, k, v)
     return spark
 
-
-def ensure_input_parallelism(df, spark: SparkSession):
-    """Repartition ``df`` to the session's core count ONLY when its scan
-    has fewer splits — the input-parallelism guard for queries whose
-    heaviest stage is a per-row projection over a small file (the
-    multimodal_image_roundtrip lesson, SCALING.md r7).  A no-op at real
-    scale, where the scan itself has thousands of row-group splits.
-
-    One shared helper (VERDICT r8 #7) so the probe idiom lives in one
-    place: ``df.rdd.getNumPartitions()`` is plan-time only (it builds
-    the RDD handle without running a job), but it is still a JVM
-    round-trip + conversion boundary object — callers should hit it
-    once per query, through here."""
-    cores = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < cores:
-        return df.repartition(cores)
-    return df

@@ -7,12 +7,14 @@ For each named query (or the top-N from BENCH_FULL.json):
   jobs like the pair-budget mass probe or progressive-LSH gates) and the
   EXECUTE phase (noop sink) separately, best-of-R;
 * labels jobs via setJobDescription so any UI/eventlog stays readable;
-* optionally dumps ``explain("formatted")`` to plans/r09/<query>_<tag>.txt.
+* optionally dumps ``explain("formatted")`` to
+  plans/<ROUND>/<query>_<tag>.txt.
 
 Usage:
     python scripts/measure_query.py [--plans TAG] [--runs N] [query ...]
 
-Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32).
+Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32),
+SPARK_GRAFT_PLANS_ROUND (the plans/ subdirectory, default r10).
 """
 
 from __future__ import annotations
@@ -33,7 +35,9 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="*")
     ap.add_argument("--plans", default=None,
-                    help="dump explain(formatted) to plans/r09/<q>_<TAG>.txt")
+                    help="dump explain(formatted) to "
+                    "plans/$SPARK_GRAFT_PLANS_ROUND/<q>_<TAG>.txt "
+                    "(default round r10)")
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("--explain-only", action="store_true",
                     help="dump plans without timing (contended-host mode)")

@@ -1,8 +1,10 @@
 """large-star/small-star connected components: agreement with min-label
-propagation on real near-dup graphs, and correctness on the adversarial
-long-chain case where capped min-label propagation would mislabel."""
+propagation on real near-dup graphs, correctness on the adversarial
+long-chain case, and a loud failure when either form hits its round cap."""
 
 from __future__ import annotations
+
+import pytest
 
 from data_ingestion_system_spark.operators.dedup import (
     connected_components,
@@ -29,13 +31,26 @@ def test_star_matches_minlabel_on_random_components(spark):
 
 def test_star_handles_long_chain_in_logarithmic_rounds(spark):
     """A 200-link chain has diameter 200: min-label propagation needs 200
-    rounds (its default 25-round cap would stop early), the star rounds
-    finish in O(log^2 n)."""
+    rounds (past its default 25-round cap), the star rounds finish in
+    O(log^2 n)."""
     n = 200
     df = spark.createDataFrame([(i, i + 1) for i in range(n)],
                                "id_a long, id_b long")
     got = _labels(connected_components_star(df, max_iter=15))
     assert got == {i: 0 for i in range(n + 1)}
+
+
+@pytest.mark.parametrize("cc, kwargs", [
+    (connected_components, {}),
+    (connected_components_star, {"max_iter": 3}),
+], ids=["minlabel", "star"])
+def test_round_cap_raises_instead_of_mislabeling(spark, cc, kwargs):
+    """A 60-link chain outlasts both caps: the convergence probe that
+    runs every round must raise, not hand back unconverged labels."""
+    df = spark.createDataFrame([(i, i + 1) for i in range(60)],
+                               "id_a long, id_b long")
+    with pytest.raises(RuntimeError, match="max_iter"):
+        cc(df, **kwargs)
 
 
 def test_star_two_chains_do_not_merge(spark):

@@ -391,10 +391,10 @@ def test_video_demux_is_map_only(spark, sf_dir):
     column-pruned scan and no KEYED exchange anywhere — container stats
     are embarrassingly parallel (the PLANS.md claim, pinned).
 
-    r9: the input-parallelism guard may insert ONE round-robin
-    repartition when the scan has fewer splits than cores (always true
-    at test scale, a no-op at real scale) — that exchange carries no
-    key and is the documented exception; any hash/range exchange still
+    ``Catalog.wide_table`` may insert ONE round-robin repartition when
+    the file's split estimate is below the core count (always true at
+    test scale, a no-op at real scale) — that exchange carries no key
+    and is the documented exception; any hash/range exchange still
     fails the pin."""
     plan = plan_of(spark, sf_dir, "multimodal_video_demux")
     assert plan.count("MapInPandas") == 2
