@@ -1,10 +1,11 @@
-"""Custom grouped-map surface: ``groupBy().applyInPandas`` (GROUPED_MAP).
+"""Grouped pandas surface: ``cogroup().applyInPandas`` (COGROUPED_MAP).
 
 Completes the Python-function API family (scalar/GROUPED_AGG pandas UDFs
 in functions/udaf.py, UDTF in functions/udtf.py, mapInPandas in
-operators/multimodal.py, applyInPandasWithState in streaming/
-stateful.py): a GROUPED_MAP function receives one whole group as a
-pandas DataFrame and returns a DataFrame — the escape hatch for
+operators/multimodal.py, GROUPED_MAP applyInPandas in
+operators/queries_dedup.py, applyInPandasWithState in
+streaming/lifetime.py): a grouped pandas function receives whole groups
+as pandas DataFrames and returns a DataFrame — the escape hatch for
 group-local logic with no built-in decomposition (per-group model fits,
 library calls, ...).
 
@@ -12,9 +13,8 @@ Scale notes: every raw row of a group crosses the shuffle into a single
 task and materializes as one pandas frame — group size must be bounded
 by design (a user's events, a label's vectors), never corpus-scale.
 And like the UDAF, anything WITH a built-in decomposition should use it:
-the z-score below decomposes into two windowed aggregates, which is what
-the declared query (`agg_zscore_by_user`) runs; the pandas twin exists
-as the API surface and is pinned equivalent in tests/test_text_ops.py.
+the per-user z-score (`zscore_builtin`, run by the declared query
+`agg_zscore_by_user`) is two windowed aggregates, not a pandas function.
 """
 
 from __future__ import annotations
@@ -23,29 +23,10 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-_ZSCORE_SCHEMA = "event_id long, user_id long, zscore double"
-
-
-def zscore_grouped_map(events: DataFrame) -> DataFrame:
-    """Per-user z-score of `value` via GROUPED_MAP (one pandas frame per
-    user).  ddof=1 matches stddev_samp in the built-in form."""
-
-    def norm(pdf: pd.DataFrame) -> pd.DataFrame:
-        v = pdf["value"]
-        return pd.DataFrame({
-            "event_id": pdf["event_id"],
-            "user_id": pdf["user_id"],
-            "zscore": ((v - v.mean()) / v.std(ddof=1)).round(4),
-        })
-
-    return (events.select("event_id", "user_id", "value")
-            .groupBy("user_id").applyInPandas(norm, _ZSCORE_SCHEMA))
-
 
 def zscore_builtin(events: DataFrame) -> DataFrame:
-    """The decomposed built-in form — two windowed aggregates over the
-    same partition, one shuffle, fully codegen'd; numerically equal to
-    the pandas twin well past 4 decimals."""
+    """Per-user z-score of `value` (stddev_samp) as two windowed
+    aggregates over the same partition — one shuffle, fully codegen'd."""
     w = Window.partitionBy("user_id")
     # + 0.0 normalizes IEEE negative zero: round() of a tiny negative
     # deviation yields -0.0, which value-level canonicalizers ("%g")

@@ -19,7 +19,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 
@@ -46,10 +45,3 @@ def n_values(v: pd.Series) -> int:
     wanting both must express both as pandas UDFs (or split the agg)."""
     return len(v)
 
-
-def geometric_mean_builtin(col) -> "F.Column":
-    """The decomposed built-in form — partial-aggregating, shuffle-light;
-    bit-compatible with the UDAF to well past 4 decimals.  The when()
-    guard nulls out non-positive values so avg skips them, matching the
-    UDAF's positive-subset semantics."""
-    return F.exp(F.avg(F.ln(F.when(col > 0, col))))

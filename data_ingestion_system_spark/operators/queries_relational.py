@@ -711,10 +711,7 @@ FROM events
 def agg_zscore_by_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group normalization (z-score of value within each user): two
     windowed aggregates over one user partition — a single shuffle, no
-    pandas.  The GROUPED_MAP applyInPandas twin
-    (functions/grouped.py::zscore_grouped_map) is the API surface for
-    group-local logic with no such decomposition; equivalence is pinned
-    in tests/test_text_ops.py."""
+    pandas."""
     from data_ingestion_system_spark.functions.grouped import zscore_builtin
 
     cat = Catalog(spark, sf_dir)

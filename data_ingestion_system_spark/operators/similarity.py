@@ -64,20 +64,6 @@ def srp_buckets_udf(dim: int = DIM, n_bits: int = N_BITS, n_tables: int = N_TABL
     return buckets
 
 
-def srp_bucket_udf(dim: int = DIM, n_bits: int = N_BITS):
-    """Single-table variant (bucket id per embedding), kept for tests/demos."""
-    planes = _hyperplanes(dim, n_bits, 1)
-    weights = (1 << np.arange(n_bits)).astype(np.int64)
-
-    @F.pandas_udf("long")
-    def bucket(emb: pd.Series) -> pd.Series:
-        mat = np.vstack(emb.to_numpy())
-        bits = (mat @ planes.T) > 0
-        return pd.Series(bits @ weights)
-
-    return bucket
-
-
 def topk_bruteforce(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Exact cosine top-k: broadcast queries x full corpus, window rank.
 

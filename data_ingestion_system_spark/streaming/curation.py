@@ -15,7 +15,7 @@ the stream is partitioned or resumed.
 Exactly-once effects under foreachBatch's at-least-once contract:
 
 * the clean corpus and the rejects table publish through the snapshot
-  log by default (one append commit per batch, the batch id as the
+  log (one append commit per batch, the batch id as the
   idempotence key — sources/versioned.py::commit_stream_batch), so a
   replayed batch's commit is a no-op and readers get consistent,
   time-travelable snapshots; the internal signature index stays
@@ -75,50 +75,41 @@ DOC_SCHEMA = T.StructType([
 _EMPTY_CLEAN_SCHEMA = "doc_id long, text string, lang string"
 
 
-def _clean_store(spark: SparkSession, path: str,
-                 versioned: bool = True) -> DataFrame:
-    if versioned:
-        # consistent snapshot through the log: a replay that already
-        # committed this batch's accepted docs is visible here, which is
-        # harmless — their signatures are mb-excluded from the probe, so
-        # they can never surface as candidates against themselves
-        if latest_version(path) > 0:
-            return read_snapshot(spark, path).select(
-                "doc_id", "text", "lang")
-        # Empty log + raw parquet on disk = a pre-versioned (r7-) store
-        # being resumed with versioned=True (the r8 default).  Probing
-        # against an EMPTY corpus here would silently re-accept every
-        # cross-batch duplicate of the legacy history — fail loudly and
-        # name both exits instead (ADVICE r8).  Parquet inside d-*/ is
-        # NOT legacy: an uncommitted (crashed-before-log-append) write
-        # is correctly invisible and must not trip the migration error.
-        def _legacy_parquet() -> bool:
-            if not os.path.isdir(path):
-                return False
-            for entry in os.listdir(path):
-                if entry.startswith("d-") or entry == "_log":
-                    continue
-                p = os.path.join(path, entry)
-                if entry.endswith(".parquet") and os.path.isfile(p):
-                    return True
-                if os.path.isdir(p) and any(
-                        f.endswith(".parquet")
-                        for _, _, fs in os.walk(p) for f in fs):
-                    return True
+def _clean_store(spark: SparkSession, path: str) -> DataFrame:
+    # consistent snapshot through the log: a replay that already
+    # committed this batch's accepted docs is visible here, which is
+    # harmless — their signatures are mb-excluded from the probe, so
+    # they can never surface as candidates against themselves
+    if latest_version(path) > 0:
+        return read_snapshot(spark, path).select("doc_id", "text", "lang")
+    # Empty log + raw parquet on disk = a pre-versioned (r7-) store.
+    # Probing against an EMPTY corpus here would silently re-accept every
+    # cross-batch duplicate of the legacy history — fail loudly and name
+    # the migration instead (ADVICE r8).  Parquet inside d-*/ is NOT
+    # legacy: an uncommitted (crashed-before-log-append) write is
+    # correctly invisible and must not trip the migration error.
+    def _legacy_parquet() -> bool:
+        if not os.path.isdir(path):
             return False
+        for entry in os.listdir(path):
+            if entry.startswith("d-") or entry == "_log":
+                continue
+            p = os.path.join(path, entry)
+            if entry.endswith(".parquet") and os.path.isfile(p):
+                return True
+            if os.path.isdir(p) and any(
+                    f.endswith(".parquet")
+                    for _, _, fs in os.walk(p) for f in fs):
+                return True
+        return False
 
-        if _legacy_parquet():
-            raise ValueError(
-                f"clean store at {path!r} holds raw parquet but no "
-                "snapshot log: it predates the versioned layout. "
-                "Either resume with versioned=False (legacy raw-dir "
-                "probing) or migrate once by committing the raw files "
-                "as snapshot v1 (sources/versioned.py) before "
-                "restarting the stream.")
-        return spark.createDataFrame([], _EMPTY_CLEAN_SCHEMA)
-    if os.path.isdir(path) and any(
-            f.endswith(".parquet") for _, _, fs in os.walk(path) for f in fs):
-        return spark.read.parquet(path).select("doc_id", "text", "lang")
+    if _legacy_parquet():
+        raise ValueError(
+            f"clean store at {path!r} holds raw parquet but no "
+            "snapshot log: it predates the versioned layout. Migrate it "
+            "once by committing the raw files as snapshot v1 "
+            "(sources/versioned.py::commit_snapshot) before restarting "
+            "the stream.")
     return spark.createDataFrame([], _EMPTY_CLEAN_SCHEMA)
 
 
@@ -157,7 +148,6 @@ def start_curation_stream(
     available_now: bool = True,
     processing_time: str = "1 second",
     result_cache=None,
-    versioned: bool = True,
 ) -> StreamingQuery:
     """Landing JSON docs -> accepted corpus + rejected-dup audit + index.
 
@@ -175,10 +165,8 @@ def start_curation_stream(
     must not outlive the data they summarize (the freshness hook
     pipeline.py already gives the bronze stream; SURVEY §7.4).
 
-    ``versioned=True`` (the DEFAULT since r8 — VERDICT r7 #5: silver
-    tables publish through the snapshot log unless a caller opts out):
-    ``clean_dir`` and ``rejects_dir`` become versioned table roots —
-    each micro-batch is one append commit (sources/versioned.py::
+    ``clean_dir`` and ``rejects_dir`` are versioned table roots: each
+    micro-batch is one append commit (sources/versioned.py::
     commit_stream_batch), readers resolve consistent snapshots
     (read_snapshot) and can time-travel any batch boundary, and a
     replayed batch no-ops on the log's ``batch:<id>`` idempotence key
@@ -187,8 +175,7 @@ def start_curation_stream(
     dynamic-overwrite scheme (it is an internal structure, probed with
     same-batch exclusion, not a served table), and the commit marker
     still short-circuits fully-committed batches so a marker-present
-    replay skips even the recompute.  ``versioned=False`` is the legacy
-    raw-dir path (micro_batch-partitioned dynamic overwrite)."""
+    replay skips even the recompute."""
     if not os.path.isdir(index_dir):
         # bootstrap an empty, schema-complete index so the first batch's
         # probe is uniform with every later one
@@ -220,7 +207,7 @@ def start_curation_stream(
                 survivors = batch.join(self_losers, "doc_id", "left_anti")
                 # (3) probe accepted history via the signature index,
                 # excluding any partial same-batch write from a replay
-                corpus = _clean_store(spark, clean_dir, versioned)
+                corpus = _clean_store(spark, clean_dir)
                 hits = probe_index(spark, index_dir, survivors, corpus,
                                    threshold=threshold,
                                    exclude_mb=batch_id).persist()
@@ -234,23 +221,11 @@ def start_curation_stream(
                                                F.lit(batch_id)))
                     stamped = accepted.withColumn("micro_batch",
                                                   F.lit(batch_id))
-                    if versioned:
-                        # one append commit per output per batch; the
-                        # batch id rides the idempotence key, so a
-                        # replay whose commit already landed is a no-op
-                        commit_stream_batch(stamped, clean_dir, batch_id)
-                        commit_stream_batch(all_rejects, rejects_dir,
-                                            batch_id)
-                    else:
-                        # legacy raw dirs: micro_batch partitioning +
-                        # dynamic overwrite so a replayed batch replaces
-                        # itself, never appends
-                        (stamped.write.mode("overwrite")
-                         .option("partitionOverwriteMode", "dynamic")
-                         .partitionBy("micro_batch").parquet(clean_dir))
-                        (all_rejects.write.mode("overwrite")
-                         .option("partitionOverwriteMode", "dynamic")
-                         .partitionBy("micro_batch").parquet(rejects_dir))
+                    # one append commit per output per batch; the batch
+                    # id rides the idempotence key, so a replay whose
+                    # commit already landed is a no-op
+                    commit_stream_batch(stamped, clean_dir, batch_id)
+                    commit_stream_batch(all_rejects, rejects_dir, batch_id)
                     # (5) tomorrow's probe sees today's accepted docs
                     append_index(accepted, index_dir, mb=batch_id)
                     # (6) commit marker LAST: anything before this line can

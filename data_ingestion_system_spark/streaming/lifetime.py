@@ -5,7 +5,7 @@ products genuinely need the UNBOUNDED form — per-user lifetime totals,
 first-seen timestamps, monotone high-water marks — where state grows
 with the key space forever.  That regime is what the RocksDB state
 store exists for (state ≫ executor heap, changelog checkpointing —
-pinned in tests/test_streaming_windowed.py).
+pinned in tests/test_streaming_lifetime.py).
 
 ``lifetime_profiles`` — ``applyInPandasWithState`` with NoTimeout (state
 deliberately never expires) — emits, per micro-batch, one updated

@@ -65,13 +65,17 @@ def stream_stream_correlate(
     transaction_id, with the response bounded to ``join_window`` after its
     request.
 
-    This is the third face of the reference's core correlation (O-16)
-    alongside the batch merge and the applyInPandasWithState operator —
-    here both sides are unbounded and Spark buffers rows in the state
-    store.  The time-bound condition + both-sides watermarks are what make
-    that state finite: a buffered request is evicted once the watermark
-    passes request_time + join_window, so state is O(in-flight
-    transactions), never O(stream).  Without the time bound Spark would
+    This is the streaming form of the reference's core correlation (O-16)
+    beside the batch merge (operators/correlate.py): both sides are
+    unbounded and Spark buffers rows in the state store.  It emits one
+    row per matching response — a transaction answered twice yields two
+    rows; the latest-wins pick is ``correlate.latest_per_key`` over this
+    output, as in ``pipeline.silver_view``.
+
+    The time-bound condition + both-sides watermarks are what make that
+    state finite: a buffered request is evicted once the watermark passes
+    request_time + join_window, so state is O(in-flight transactions),
+    never O(stream).  Without the time bound Spark would
     have to keep EVERY request forever (any future response could match) —
     the unbounded-state mistake this function exists to rule out.
     """

@@ -193,11 +193,11 @@ def test_cached_search_not_stale_across_batch_commit(spark, tmp_path):
         "cached search served a pre-batch result after the commit"
 
 
-def test_legacy_raw_store_with_versioned_true_raises(spark, tmp_path):
+def test_legacy_raw_store_raises_migration_error(spark, tmp_path):
     """ADVICE r8 (medium): a pre-versioned clean store (raw parquet,
-    no snapshot log) resumed under the versioned=True default must NOT
-    probe against an empty corpus (silently re-accepting every
-    cross-batch duplicate) — it must raise a loud migration error.
+    no snapshot log) must NOT be probed as an empty corpus (silently
+    re-accepting every cross-batch duplicate) — it must raise a loud
+    error naming the one-time migration to snapshot v1.
     An uncommitted d-*/ data dir (crash before log append) is not
     legacy and stays invisible without raising."""
     import os
@@ -210,10 +210,9 @@ def test_legacy_raw_store_with_versioned_true_raises(spark, tmp_path):
     spark.createDataFrame(
         [(1, DOC_A, "en")], "doc_id long, text string, lang string"
     ).write.parquet("file://" + legacy)
-    with pytest.raises(ValueError, match="predates the versioned"):
-        _clean_store(spark, legacy, versioned=True)
-    # the documented legacy exit still reads it
-    assert _clean_store(spark, legacy, versioned=False).count() == 1
+    with pytest.raises(ValueError, match="predates the versioned") as err:
+        _clean_store(spark, legacy)
+    assert "snapshot v1" in str(err.value)
 
     # orphan uncommitted write: d-*/ parquet, empty log -> empty corpus
     orphan = tmp_path / "orphan_clean"
@@ -221,4 +220,4 @@ def test_legacy_raw_store_with_versioned_true_raises(spark, tmp_path):
     spark.createDataFrame(
         [(2, DOC_A, "en")], "doc_id long, text string, lang string"
     ).write.parquet("file://" + os.path.join(str(orphan), "d-deadbeef"))
-    assert _clean_store(spark, str(orphan), versioned=True).count() == 0
+    assert _clean_store(spark, str(orphan)).count() == 0

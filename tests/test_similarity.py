@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from data_ingestion_system_spark.operators.similarity import (
-    srp_bucket_udf,
+    srp_buckets_udf,
     topk_bruteforce,
     topk_lsh,
 )
@@ -39,7 +39,7 @@ def test_bruteforce_topk_shape(spark, sf_dir):
 
 def test_lsh_bucket_determinism(spark, sf_dir):
     corpus, _ = _load(spark, sf_dir)
-    b = srp_bucket_udf()
+    b = srp_buckets_udf()
     one = corpus.withColumn("bucket", b(F.col("embedding"))).collect()
     two = corpus.withColumn("bucket", b(F.col("embedding"))).collect()
     assert {r.vec_id: r.bucket for r in one} == {r.vec_id: r.bucket for r in two}

@@ -211,3 +211,60 @@ def test_streaming_write_audit_publish(spark, tmp_path):
     got = spark.read.parquet(pub)
     assert got.count() == 1
     assert got.collect()[0].transaction_id == "t1"
+
+
+_SILVER_COLS = ["transaction_id", "app_id", "endpoint", "workflow_id",
+                "action", "timestamp", "status_code", "request_s3_key",
+                "response_s3_key"]
+
+
+def test_stream_stream_join_matches_silver_view(spark, dirs, tmp_path):
+    """The streaming correlation (watermarked stream-stream join) and the
+    batch silver view agree on the shared fixture: latest-wins over the
+    join's one-row-per-response output equals silver's answered rows.
+    Then the response-first order: responses drain before their request
+    lands, and the request still joins every buffered response."""
+    from pyspark.sql import functions as F
+
+    from data_ingestion_system_spark.operators.correlate import latest_per_key
+    from data_ingestion_system_spark.streaming.windowed import (
+        start_stream_stream_correlate,
+    )
+
+    def correlate(req_landing, resp_landing, out, ckpt):
+        q = start_stream_stream_correlate(
+            spark, req_landing, resp_landing, out, ckpt)
+        assert q.awaitTermination(120), "micro-batch did not finish in 120s"
+        return spark.read.parquet(out)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(*_SILVER_COLS).collect())
+
+    # same drain: both landings hold everything
+    joined = correlate(dirs["req_landing"], dirs["resp_landing"],
+                       str(tmp_path / "ss_out"), str(tmp_path / "ss_ckpt"))
+    assert joined.filter(F.col("transaction_id") == "t1").count() == 2
+    latest = latest_per_key(joined, "transaction_id", "response_ts",
+                            ["response_s3_key"])
+    _drain(spark, dirs)
+    silver = silver_view(spark, dirs["req_bronze"], dirs["resp_bronze"])
+    want = rows(silver.filter(F.col("status_code").isNotNull()))
+    assert [r[0] for r in want] == ["t1"]
+    assert rows(latest) == want
+
+    # response first: responses drain alone, the request lands later
+    req_landing, resp_landing = tmp_path / "rf_req", tmp_path / "rf_resp"
+    req_landing.mkdir()
+    resp_landing.mkdir()
+    out, ckpt = str(tmp_path / "rf_out"), str(tmp_path / "rf_ckpt")
+    for i, rec in enumerate(RESPS):
+        (resp_landing / f"p{i}.json").write_text(json.dumps(rec))
+    first = correlate(str(req_landing), str(resp_landing), out, ckpt)
+    assert first.count() == 0
+    for i, rec in enumerate(REQS):
+        (req_landing / f"r{i}.json").write_text(json.dumps(rec))
+    late = correlate(str(req_landing), str(resp_landing), out, ckpt)
+    assert sorted((r.transaction_id, r.status_code)
+                  for r in late.collect()) == [("t1", 200), ("t1", 500)]
+    assert rows(latest_per_key(late, "transaction_id", "response_ts",
+                               ["response_s3_key"])) == want

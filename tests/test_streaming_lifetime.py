@@ -11,6 +11,8 @@ import pytest
 from data_ingestion_system_spark.streaming.lifetime import lifetime_profiles
 
 _PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
+_CHANGELOG_CONF = ("spark.sql.streaming.stateStore.rocksdb."
+                   "changelogCheckpointing.enabled")
 
 
 def _run_batch(spark, landing, ckpt, out, rows, i):
@@ -29,6 +31,7 @@ def _run_batch(spark, landing, ckpt, out, rows, i):
          .trigger(availableNow=True)
          .foreachBatch(sink).start())
     assert q.awaitTermination(120), "micro-batch did not finish in 120s"
+    return q
 
 
 @pytest.fixture(params=[
@@ -37,17 +40,22 @@ def _run_batch(spark, landing, ckpt, out, rows, i):
 ], ids=["default", "rocksdb"])
 def state_store(spark, request):
     """Run the test on the given state-store provider (None: Spark's
-    default), restoring the session's setting afterwards."""
-    old = spark.conf.get(_PROVIDER_CONF, None)
+    default), restoring the session's settings afterwards.  RocksDB runs
+    with changelog checkpointing, so a commit ships the delta, not a full
+    snapshot."""
+    old = {c: spark.conf.get(c, None)
+           for c in (_PROVIDER_CONF, _CHANGELOG_CONF)}
     if request.param is not None:
         spark.conf.set(_PROVIDER_CONF, request.param)
+        spark.conf.set(_CHANGELOG_CONF, "true")
     try:
         yield request.param
     finally:
-        if old is None:
-            spark.conf.unset(_PROVIDER_CONF)
-        else:
-            spark.conf.set(_PROVIDER_CONF, old)
+        for conf, value in old.items():
+            if value is None:
+                spark.conf.unset(conf)
+            else:
+                spark.conf.set(conf, value)
 
 
 def test_lifetime_profiles_accumulate_across_batches(spark, state_store,
@@ -58,9 +66,9 @@ def test_lifetime_profiles_accumulate_across_batches(spark, state_store,
     _run_batch(spark, landing, ckpt, out,
                [{"user_id": 1, "value": 10.0}, {"user_id": 1, "value": 5.0},
                 {"user_id": 2, "value": 1.0}], 0)
-    _run_batch(spark, landing, ckpt, out,
-               [{"user_id": 1, "value": 2.0}, {"user_id": 3, "value": 7.0}],
-               1)
+    q = _run_batch(spark, landing, ckpt, out,
+                   [{"user_id": 1, "value": 2.0},
+                    {"user_id": 3, "value": 7.0}], 1)
     rows = {(r.batch_id, r.user_id): (r.n_events, r.total_value, r.max_value)
             for r in spark.read.parquet(out).collect()}
     assert rows[(0, 1)] == (2, 15.0, 10.0)
@@ -75,3 +83,7 @@ def test_lifetime_profiles_accumulate_across_batches(spark, state_store,
     provider = json.loads(offsets[1])["conf"][_PROVIDER_CONF]
     assert provider == (state_store or "org.apache.spark.sql.execution."
                         "streaming.state.HDFSBackedStateStoreProvider")
+    if state_store is not None:
+        # the RocksDB store actually engaged, not just the conf
+        metrics = q.lastProgress["stateOperators"][0]["customMetrics"]
+        assert any(k.startswith("rocksdb") for k in metrics), metrics

@@ -158,27 +158,6 @@ def test_redact_pii_idempotent(spark):
         assert r.once == r.twice
 
 
-def test_zscore_grouped_map_matches_builtin(spark, sf_dir):
-    """GROUPED_MAP pandas twin and the windowed built-in decomposition
-    agree to the rounded precision on every row."""
-    from data_ingestion_system_spark.functions.grouped import (
-        zscore_builtin,
-        zscore_grouped_map,
-    )
-
-    ev = Catalog(spark, sf_dir).events
-    a = {(r.event_id, r.user_id): r.zscore
-         for r in zscore_grouped_map(ev).collect()}
-    b = {(r.event_id, r.user_id): r.zscore
-         for r in zscore_builtin(ev).collect()}
-    assert a.keys() == b.keys() and len(a) > 0
-    for k in a:
-        if a[k] is None or b[k] is None:
-            assert a[k] == b[k]
-        else:
-            assert abs(a[k] - b[k]) <= 1e-4
-
-
 def test_hash_sample_monotone_and_partition_invariant(spark, sf_dir):
     """The two guarantees the hash-threshold sampler makes that RNG
     sampling cannot: halving fractions yields a SUBSET, and the kept set
