@@ -26,8 +26,11 @@ though its candidate signatures aren't.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from data_ingestion_system_spark.operators.text import normalized_text
 
@@ -422,162 +425,89 @@ def simhash_near_pairs(sig: DataFrame, id_col: str = "doc_id",
     )
 
 
+# Edge count at or under which the components finish on the driver: 2^22
+# pairs of 64-bit ids is about 64 MB, one task's worth of data.  Not a
+# knob: the round loop already counts the edge set, and above this size
+# the distributed rounds are the only path that fits.
+_ONE_TASK_EDGES = 1 << 22
+
+
+def _union_find(u: np.ndarray, v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(nodes, labels) over the undirected edges (u[i], v[i]), each label
+    the minimum node of its component.  Ids are compacted with
+    ``np.unique`` (sorted, so the smallest index is the smallest id);
+    each round hooks every root to the smallest root across its edges
+    and pointer-jumps until every node points at a root.  Roots only
+    ever hook to smaller roots, so a component's minimum stays a root
+    and ends as its label; edges inside one tree drop out each round."""
+    nodes, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
+    a, b = inv[:len(u)], inv[len(u):]
+    parent = np.arange(len(nodes))
+    while len(a):
+        ra, rb = parent[a], parent[b]
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+        split = parent[a] != parent[b]
+        a, b = a[split], b[split]
+    return nodes, nodes[parent]
+
+
 def connected_components(pairs: DataFrame, a_col: str = "id_a",
-                         b_col: str = "id_b", max_iter: int = 25) -> DataFrame:
+                         b_col: str = "id_b",
+                         max_iter: int = 20) -> DataFrame:
     """Connected components over an undirected pair list -> (node,
     cluster_id) with cluster_id = min node id in the component.
 
-    Iterative min-label propagation: each round every node takes the min
-    of its own label and its neighbors' labels (one join + one hash agg —
-    both shuffles land on the same node key, so AQE reuses the
-    partitioning).  Converges in graph-diameter rounds; near-dup graphs
-    are short transitive chains, so a handful.  ``localCheckpoint`` after
-    each round truncates lineage — without it the plan doubles per
-    iteration and the driver, not the data, becomes the bottleneck.  For
-    adversarial diameters at 100 TB, swap the propagation body for the
-    alternating large-star/small-star rounds (same loop skeleton, doubly-
-    logarithmic rounds).  Raises ``RuntimeError`` when the labels are
-    still changing after ``max_iter`` rounds, rather than return
-    unconverged labels.
-    """
-    # Symmetrize via explode, not union-of-swap (r9): a union reads the
-    # `pairs` plan twice, and for the gated dedup consumers that plan is
-    # the whole shingle -> common-shingle-join -> Jaccard pipeline; AQE
-    # reuse dedupes only the exchanges, not the per-branch post-shuffle
-    # work.  One explode emits both directions from a single scan.
-    edges = (
-        pairs.select(F.explode(F.array(
-            F.struct(F.col(a_col).alias("src"), F.col(b_col).alias("dst")),
-            F.struct(F.col(b_col).alias("src"), F.col(a_col).alias("dst")),
-        )).alias("e"))
-        .select("e.src", "e.dst")
-        .persist()
-    )
-    # Fused initialization + first propagation round (r9): with identity
-    # labels, round 1's edges⋈labels join is vacuous — the neighbor
-    # label IS the neighbor id — so the first round collapses to one
-    # aggregate: label(n) = min(n, min neighbor id).  Saves a checkpoint
-    # job, a probe job, and one join pass per query; the loop below then
-    # starts from round 1's output with identical semantics.
-    #
-    # LAZY checkpoints fused with the convergence probe (r10, VERDICT
-    # r9 #1): ``localCheckpoint(eager=False)`` marks the round's output
-    # for executor-local materialization, and the probe aggregate right
-    # after it is the FIRST action — so one job both materializes the
-    # round and reads the convergence scalar, instead of the r9 shape's
-    # two (eager checkpoint pass + probe pass).  Safe because the probe
-    # is the sole consumer until materialization completes; the next
-    # round's two reads (join + union) then hit the stored partitions.
-    labels = (
-        edges.groupBy(F.col("dst").alias("node"))
-        .agg(F.min("src").alias("mn"))
-        .select("node", F.least(F.col("node"), F.col("mn"))
-                .alias("cluster_id"))
-        .localCheckpoint(eager=False)
-    )
+    Nodes are the endpoints of the deduped non-self-loop edge set (a
+    pure self-pair (x, x) contributes no node — every caller emits
+    strict id_a < id_b pairs, where the distinction cannot arise).  That
+    edge set is persisted and probed once for an order-insensitive
+    checksum and its size; the size picks the finish:
 
-    def label_sum(lab: DataFrame):
-        # convergence probe: labels only ever DECREASE (min over self +
-        # neighbors includes self), so an unchanged sum proves every
-        # label is unchanged.  One map-combined aggregate — no shuffle
-        # join per round like a changed-row count would need; decimal
-        # accumulator so billions of 64-bit ids cannot overflow.  Runs
-        # as the lazy checkpoint's materializing action (one job per
-        # round: checkpoint write + probe read).
-        return lab.agg(
-            F.sum(F.col("cluster_id").cast("decimal(38,0)")).alias("s")
-        ).collect()[0][0]
+    * **one task** (at most ``_ONE_TASK_EDGES`` edges): the edges come
+      to the driver, a numpy union-find (``_union_find``) labels them,
+      and the persisted edges are released before the labels return.
+    * **otherwise** one alternating large-star / small-star round
+      (Kiveris et al., "Connected Components in MapReduce and Beyond",
+      SoCC 2014) runs and the edge set is probed again.  The rounds
+      need O(log^2 n) of them, not diameter-many, so long chains
+      (adversarial diameters) stay cheap; they also shrink near-dup
+      cliques, c(c-1)/2 edges to c-1, so clique-heavy graphs reach the
+      one-task finish.  If the checksum stops changing while the stars
+      are still above one task, the labels are derived distributed
+      from the converged stars.  ``RuntimeError`` if the edge set still
+      changes after ``max_iter`` rounds.
 
-    prev_sum = label_sum(labels)
-    for _ in range(max_iter):
-        neighbor = (
-            edges.join(labels, edges.src == labels.node)
-            .select(F.col("dst").alias("node"), "cluster_id")
-        )
-        new_labels = (
-            labels.unionAll(neighbor)
-            .groupBy("node").agg(F.min("cluster_id").alias("cluster_id"))
-            .localCheckpoint(eager=False)
-        )
-        cur_sum = label_sum(new_labels)
-        labels = new_labels
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    else:
-        edges.unpersist()
-        raise RuntimeError(
-            f"connected_components: labels still changing after "
-            f"max_iter={max_iter} rounds (graph diameter exceeds the cap)")
-    edges.unpersist()
-    return labels
+    Each round re-points every node's neighbors at its neighborhood
+    minimum: **large-star** emits (v, m) for every neighbor v > u, with
+    m = min(N(u) + {u}); **small-star** emits (v, m) for every neighbor
+    v <= u, plus (u, m).  ONE job and THREE shuffles per round (r10):
 
-
-def connected_components_star(pairs: DataFrame, a_col: str = "id_a",
-                              b_col: str = "id_b",
-                              max_iter: int = 20) -> DataFrame:
-    """Connected components by alternating large-star / small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") ->
-    (node, cluster_id) with cluster_id = min node id in the component.
-
-    Replaces min-label propagation's diameter-many rounds with
-    O(log^2 n) rounds: each round every node re-points its neighbors at
-    its neighborhood minimum —
-
-    * **large-star**: for each node u emit (v, m) for every neighbor
-      v > u, where m = min(N(u) + {u});
-    * **small-star**: emit (v, m) for every neighbor v <= u, plus
-      (u, m) itself.
-
-    Both rounds are one groupBy + one join on the node key.  Nodes are
-    derived from the deduped non-self-loop edge set (a pure self-pair
-    (x, x) contributes no node — every caller emits strict id_a < id_b
-    pairs, where the distinction cannot arise).  This is the
-    right form when the pair graph can contain LONG CHAINS (adversarial
-    diameters): a 200-link chain finishes in a handful of rounds where
-    min-label propagation would exhaust its round cap and raise
-    (pinned in tests/test_dedup_star.py).  Convergence = the edge set's
-    order-insensitive checksum stops changing (``RuntimeError`` if it
-    still changes after ``max_iter`` rounds); ``localCheckpoint`` after
-    each round truncates lineage exactly as in ``connected_components``.
-
-    ONE job and THREE shuffles per round (r10, VERDICT r9 #1).  The r9
-    shape ran 3 jobs/round (eager large-star checkpoint, eager
-    small-star checkpoint, probe) with 4 exchanges plus double reads.
-    Two structural moves collapse it:
-
-    * both stars compute the neighborhood minimum as ``min(v) over
+    * both stars take the neighborhood minimum as ``min(v) over
       (partition by u)`` — a window over the one exchange the star
       needs anyway — instead of groupBy + self-join, which either reads
-      the input twice (the r9 4.6s→11.3s backfire when large-star's
-      checkpoint was dropped) or pays a second exchange.  Same skew
-      exposure as the join form (a hub node's rows land in one task
-      either way — and large-star provably shrinks high-degree
-      neighborhoods round over round, Kiveris et al. §3), minus the
-      join.  small-star emits (v, m) and (u, m) from one explode, so
-      the per-round plan is a single linear chain: sym-explode →
-      window(u) → large-star map → window(u) → explode → distinct.
-    * only the round's FINAL edge set materializes — a LAZY
-      ``localCheckpoint`` whose first action is the convergence probe,
-      so checkpoint write + checksum read are one job.  large-star's
-      intermediate no longer needs its own barrier because the window
-      form reads it exactly once.
-
-    Intermediate (v, m) duplicates that large-star's old ``distinct``
-    removed now ride to the round's single distinct instead — the edge
-    SET entering each round is unchanged, so round count and the final
-    labels are identical (oracle-checked; adversarial chains pinned in
-    tests/test_dedup_star.py).
+      the input twice (the r9 4.6s→11.3s backfire) or pays a second
+      exchange.  A hub node's rows land in one task either way, and
+      large-star provably shrinks high-degree neighborhoods round over
+      round (Kiveris et al. §3).
+    * only the round's final edge set materializes — a LAZY
+      ``localCheckpoint`` (it truncates lineage; without it the plan
+      doubles per round) whose first action is the checksum probe, so
+      checkpoint write + probe read are one job.
     """
     e0 = (pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
           .filter(F.col("u") != F.col("v")).distinct()
-          .localCheckpoint(eager=False))
+          .persist())
     e = e0
 
-    def checksum(edges: DataFrame):
+    def checksum(edges: DataFrame) -> tuple:
         # order-insensitive fingerprint; bit_xor never overflows (a sum
-        # of 64-bit hashes would, under ANSI arithmetic).  Doubles as
-        # the lazy checkpoint's materializing action.
+        # of 64-bit hashes would, under ANSI arithmetic).  On a round's
+        # output it is also the lazy checkpoint's materializing action.
         row = edges.agg(
             F.bit_xor(F.xxhash64("u", "v")).alias("h"),
             F.count("*").alias("n")).collect()[0]
@@ -587,7 +517,10 @@ def connected_components_star(pairs: DataFrame, a_col: str = "id_a",
 
     def large_star(edges: DataFrame) -> DataFrame:
         # neighborhoods over the SYMMETRIZED adjacency; every strictly
-        # larger neighbor re-points at min(N(u) + {u})
+        # larger neighbor re-points at min(N(u) + {u}).  Symmetrize via
+        # explode, not union-of-swap (r9): a union reads its input plan
+        # twice, and for the gated dedup consumers that plan is the
+        # whole shingle -> common-shingle-join -> Jaccard pipeline.
         sym = (edges.select(F.explode(F.array(
                    F.struct(F.col("u"), F.col("v")),
                    F.struct(F.col("v").alias("u"), F.col("u").alias("v")),
@@ -614,28 +547,47 @@ def connected_components_star(pairs: DataFrame, a_col: str = "id_a",
         return (out.filter(F.col("u") != F.col("v"))
                 .distinct().localCheckpoint(eager=False))
 
-    prev = checksum(e)
-    for _ in range(max_iter):
-        e = small_star(large_star(e))
-        cur = checksum(e)
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        raise RuntimeError(
-            f"connected_components_star: edge set still changing after "
-            f"max_iter={max_iter} rounds")
-    # converged: every edge points a node at its component minimum
-    labels = e.groupBy("u").agg(F.min("v").alias("mn")).select(
+    try:
+        prev = checksum(e)
+        rounds = 0
+        while prev[1] > _ONE_TASK_EDGES:
+            if rounds == max_iter:
+                raise RuntimeError(
+                    f"connected_components: edge set still changing after "
+                    f"max_iter={max_iter} rounds")
+            e = small_star(large_star(e))
+            rounds += 1
+            cur = checksum(e)
+            if cur == prev:
+                # converged to stars that one task still cannot hold
+                return _star_labels(e, e0)
+            prev = cur
+        edges = e.toPandas()
+    except BaseException:
+        e0.unpersist()
+        raise
+    e0.unpersist()
+    nodes, labels = _union_find(edges["u"].to_numpy(), edges["v"].to_numpy())
+    id_type = e0.schema["u"].dataType
+    return pairs.sparkSession.createDataFrame(
+        pd.DataFrame({"node": nodes, "cluster_id": labels}),
+        StructType([StructField("node", id_type),
+                    StructField("cluster_id", id_type)]))
+
+
+def _star_labels(stars: DataFrame, e0: DataFrame) -> DataFrame:
+    """Labels from a converged star edge set, where every edge points a
+    node at its component minimum.  Isolated-after-rewrite minima label
+    themselves.  The node set comes from the persisted initial edge set,
+    not the raw ``pairs`` plan (r9, measured): ``pairs`` is typically the
+    whole upstream pair pipeline (shingle join, Jaccard verify), and
+    reading it here re-ran that pipeline at action time — 2.1s of
+    dedup_cluster_star's exec was exactly this recompute.  e0 is the
+    same relation minus self-loops, which contribute no node a real edge
+    doesn't; it stays persisted for the returned plan to read."""
+    labels = stars.groupBy("u").agg(F.min("v").alias("mn")).select(
         F.col("u").alias("node"),
         F.least(F.col("mn"), F.col("u")).alias("cluster_id"))
-    # isolated-after-rewrite minima label themselves.  Node set comes
-    # from the CHECKPOINTED initial edge set, not the raw `pairs` plan
-    # (r9, measured): `pairs` is typically the whole upstream pair
-    # pipeline (shingle join, Jaccard verify), and reading it here
-    # re-ran that pipeline at action time — 2.1s of dedup_cluster_star's
-    # exec was exactly this recompute.  e0 is the same relation minus
-    # self-loops, which contribute no node a real edge doesn't.
     all_nodes = (e0.select(F.col("u").alias("node"))
                  .unionAll(e0.select(F.col("v").alias("node"))).distinct())
     return (all_nodes.join(labels, "node", "left")

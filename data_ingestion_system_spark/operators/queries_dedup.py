@@ -219,9 +219,10 @@ SELECT node AS doc_id, min(root) AS cluster_id FROM reach GROUP BY node
 def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive near-dup clustering: connected components over the
     word-3-gram Jaccard pair graph (A~B, B~C => one cluster even when
-    A,C don't pair directly — pair lists alone over-keep).  Iterative
-    min-label propagation (operators/dedup.py::connected_components);
-    the oracle is the same fixpoint via DuckDB's recursive CTE."""
+    A,C don't pair directly — pair lists alone over-keep).  Computed by
+    operators/dedup.py::connected_components (a one-task union-find
+    finish, large-star/small-star rounds while the edges outgrow one
+    task); the oracle is the same fixpoint via DuckDB's recursive CTE."""
     pairs = _gated_pairs(spark, sf_dir)
     labels = D.connected_components(pairs).select(
         F.col("node").alias("doc_id"), "cluster_id")
@@ -230,15 +231,14 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("dedup_cluster_star", _CLUSTER_ORACLE_SQL)
 def dedup_cluster_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same clustering contract, computed with alternating
-    large-star/small-star rounds (dedup.py::connected_components_star) —
-    O(log^2 n) rounds instead of diameter-many, the robust choice when
-    the pair graph can contain long transitive chains.  The oracle (the
-    recursive-CTE fixpoint) is implementation-agnostic, so both variants
-    check against the identical SQL; the adversarial-chain behavior that
-    motivates this variant is pinned in tests/test_dedup_star.py."""
+    """Same clustering contract and the same connected-components core
+    as dedup_cluster_components (dedup.py::connected_components), kept
+    as its own query name: its large-star/small-star rounds need
+    O(log^2 n) rounds instead of diameter-many when the pair graph
+    holds long transitive chains, pinned in tests/test_dedup_star.py.
+    The oracle is the identical recursive-CTE fixpoint."""
     pairs = _gated_pairs(spark, sf_dir)
-    labels = D.connected_components_star(pairs).select(
+    labels = D.connected_components(pairs).select(
         F.col("node").alias("doc_id"), "cluster_id")
     return labels
 
@@ -618,7 +618,7 @@ def dedup_cleaning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     independently so the report is a pure function of the corpus (no
     cascade coupling between stages).  Each flag reuses the operator
     already graded on its own row (exact_dedup_survivors,
-    jaccard_pairs + connected_components, cross_corpus_overlap); the
+    jaccard_pairs + the connected_components core, cross_corpus_overlap); the
     membership joins are un-hinted so AQE broadcasts only the flag sets
     that are ACTUALLY small at runtime (exact_keep is corpus-sized by
     construction; near/cont scale with the dirt rate).  At
@@ -921,8 +921,8 @@ def dedup_canonical_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes).  Pair lists say WHICH docs collide; this query decides WHAT
     SURVIVES — the step a training-data pipeline actually executes.
 
-    Scale shape: clustering is the already-audited min-label fixpoint
-    (operators/dedup.py::connected_components); the survivor pick is a
+    Scale shape: clustering is the already-audited connected-components
+    core (operators/dedup.py::connected_components); the survivor pick is a
     row_number window partitioned BY CLUSTER — state bounded by cluster
     size, never corpus size — and the rollup is one partial-combinable
     hash aggregate on cluster_id.  No new join shape: doc metadata

@@ -375,8 +375,8 @@ def multimodal_near_dup_clusters(spark: SparkSession, sf_dir: str) \
 
     Composition of two already-verified parts: the SRP-LSH + exact
     centered-cosine pair generator (multimodal_near_dup) feeds the
-    iterative min-label connected components (operators/dedup.py) —
-    the same pairing dedup_cluster_components pins for text.  The
+    connected-components core (operators/dedup.py) — the same pairing
+    dedup_cluster_components pins for text.  The
     oracle replays exact all-pairs plus the recursive-CTE fixpoint.
 
     The pair generator carries the SAME pair budget as the pairs query

@@ -59,12 +59,14 @@ def compacted_path(path: str) -> str:
 
 def compacted_mbs(spark: SparkSession, path: str) -> set:
     """mb stamps already folded into the LEGACY partition (empty set if
-    the index has never been compacted)."""
-    try:
-        return {int(r.mb)
-                for r in spark.read.parquet(compacted_path(path)).collect()}
-    except Exception:  # sidecar absent: never compacted
+    the index has never been compacted).  Only an absent manifest means
+    "never compacted": an unreadable one raises, because guessing empty
+    would let a replay of a folded batch double-count its rows."""
+    manifest = compacted_path(path)
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(manifest)
+    if not jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
         return set()
+    return {int(r.mb) for r in spark.read.parquet(manifest).collect()}
 
 
 def save_centroids(spark: SparkSession, centroids: np.ndarray,

@@ -234,6 +234,37 @@ def test_compaction_folds_mbs_keeps_probe_parity(spark, corpus, centroids,
     assert compact_vector_index(spark, path, up_to_mb=2) == 0
 
 
+def test_unreadable_compaction_manifest_raises_on_replay(spark, corpus,
+                                                         centroids, tmp_path):
+    """A manifest that exists but cannot be read must stop a replay:
+    reading it as "never compacted" would re-materialize a folded batch
+    beside its LEGACY copy and double-count its rows."""
+    import glob
+
+    from data_ingestion_system_spark.operators.vector_index import (
+        compact_vector_index,
+        compacted_path,
+    )
+
+    path = str(tmp_path / "idx")
+    save_centroids(spark, centroids, path)
+    vecs = corpus.select("vec_id", "embedding")
+    batches = [vecs.filter(F.col("vec_id") % 2 == mb) for mb in (0, 1)]
+    for mb, batch in enumerate(batches):
+        append_vector_index(batch, path, centroids, mb=mb)
+    n = spark.read.parquet(path).count()
+    assert compact_vector_index(spark, path, up_to_mb=0) == 1
+
+    parts = glob.glob(f"{compacted_path(path)}/part-*")
+    assert parts
+    for part in parts:
+        with open(part, "wb") as f:
+            f.write(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        append_vector_index(batches[0], path, centroids, mb=0)
+    assert spark.read.parquet(path).count() == n
+
+
 def test_full_overwrite_truncates_stale_mb_partitions(spark, corpus,
                                                       centroids, queries,
                                                       tmp_path):
