@@ -1366,7 +1366,9 @@ def _dedup_index_root(spark: SparkSession, sf_dir: str) -> str:
     ADVICE r7): content-derived key (abs path, mtime, size) hashed into
     the directory name, staged build + atomic os.rename, so concurrent
     graders either both build and one wins or one reuses the winner's
-    complete index — nobody reads a half-built root."""
+    complete index — nobody reads a half-built root.  The key also
+    hashes a layout tag (bump it when dedup_index.py changes what it
+    writes), so a root an older layout left behind is never read."""
     import hashlib
     import os
     import shutil
@@ -1381,7 +1383,7 @@ def _dedup_index_root(spark: SparkSession, sf_dir: str) -> str:
     st = os.stat(cat.path("documents"))
     key = hashlib.md5(
         f"{os.path.abspath(sf_dir)}|{st.st_mtime!r}|{st.st_size}"
-        .encode()).hexdigest()[:16]
+        "|versioned-log".encode()).hexdigest()[:16]
     base = os.path.join(tempfile.gettempdir(), "disp_dedup_index")
     root = os.path.join(base, key)
     if os.path.isdir(root):
@@ -1429,11 +1431,10 @@ def dedup_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the posture 100 TB ingest actually runs (VERDICT r8 #5:
     operators/dedup_index.py, previously pytest-only): the index stores
     only (band, bh, doc_id) signature rows, a probe computes signatures
-    for the BATCH only, candidates come from the banded equi-join
-    (band-partition-pruned), and the verify stage point-reads just the
-    implicated corpus docs via a semi-join — the corpus text at large
-    is never rescanned.  Cost per batch: O(batch + candidates), however
-    large the history grows.
+    for the BATCH only, candidates come from the banded equi-join, and
+    the verify stage point-reads just the implicated corpus docs via a
+    semi-join — the corpus text at large is never rescanned.  Cost per
+    batch: O(batch + candidates), however large the history grows.
 
     Oracle parity is the dedup_minhash_lsh argument: emitted jaccard
     values are exact (the verify recomputes the full word-3-gram

@@ -3,8 +3,7 @@
 The similarity module's ``topk_ivf`` builds its inverted lists from the
 full corpus every run — correct for a query, wrong as a SERVING posture
 at 100 TB, where re-quantizing the corpus per batch of new vectors costs
-O(corpus) daily.  This module is the vector twin of the incremental
-dedup index (``dedup_index.py``): the coarse quantizer (centroids) is
+O(corpus) daily.  Here the coarse quantizer (centroids) is
 trained once and versioned as a tiny sidecar table, each ingest batch
 is assigned to lists with one map-only Arrow pass over ITS OWN rows
 (O(batch), never O(corpus)), and probes read only the partitions of the
@@ -19,8 +18,11 @@ by ``mb`` (micro-batch stamp, LEADING key) then ``cid`` (list id):
 * the ``mb`` stamp makes streaming appends idempotent under replay
   (foreachBatch is at-least-once): a re-run batch dynamic-overwrites
   exactly its own ``mb=<id>`` partitions instead of appending duplicate
-  rows, and an in-flight probe can exclude its own partial writes —
-  the same exactly-once discipline ``dedup_index.py`` pins.
+  rows, and an in-flight probe can exclude its own partial writes.
+  The index keeps mb stamps rather than the snapshot log
+  (sources/versioned.py): the probe prunes ``cid`` partition
+  directories, the log stages each commit as one unpartitioned
+  directory, and the vector stream has a single sink.
 
 Centroids live NEXT TO the index (``<path>__centroids``), not inside it
 (a non-partition file under a partitioned root breaks Spark partition
@@ -202,7 +204,7 @@ def probe_vector_index(spark: SparkSession, path: str, queries: DataFrame,
     partition column — PartitionFilters in the plan, pinned by the
     tests), so cost is O(touched lists), independent of corpus size.
     ``exclude_mb`` hides an in-flight batch's own partial rows during
-    its probe, mirroring ``dedup_index.probe_index``."""
+    its probe."""
     if centroids is None:
         centroids = load_centroids(spark, path)
     index = spark.read.parquet(path)

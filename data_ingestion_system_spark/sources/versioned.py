@@ -164,6 +164,24 @@ def _try_commit(root: str, record: dict) -> bool:
     return True
 
 
+def _lineage_holds_key(vs: list[dict], key: str) -> bool:
+    """Whether a commit carrying ``key`` is part of the head version's
+    history.  A rollback record restores an older version, so the walk
+    jumps to that version: the commits it rolled away no longer count,
+    and a batch replayed after a rollback lands again.  ``vs`` is the
+    whole log, oldest first (versions are numbered 1..n without gaps)."""
+    v = len(vs)
+    while v > 0:
+        rec = vs[v - 1]
+        if rec["mode"] == "rollback":
+            v = rec["meta"]["restores"]
+            continue
+        if rec["meta"].get("idempotence_key") == key:
+            return True
+        v -= 1
+    return False
+
+
 def commit_snapshot(df: DataFrame, root: str, *, mode: str = "overwrite",
                     meta: dict | None = None,
                     idempotence_key: str | None = None,
@@ -204,8 +222,7 @@ def commit_snapshot(df: DataFrame, root: str, *, mode: str = "overwrite",
     for _ in range(_retries):
         if idempotence_key is not None:
             vs = versions(root)
-            if any(rec["meta"].get("idempotence_key") == idempotence_key
-                   for rec in vs):
+            if _lineage_holds_key(vs, idempotence_key):
                 return None
             parent = vs[-1] if vs else None
         else:
@@ -405,30 +422,34 @@ def vacuum(root: str, *, keep_versions: int = 0,
     return sorted(gone)
 
 
+def batch_committed(root: str, batch_id: int) -> bool:
+    """Whether the head already holds micro-batch ``batch_id``, read from
+    the head record's ``max_batch_id`` alone (O(1) record reads).  Spark
+    batch ids are monotone per checkpoint, so a redelivered id is always
+    <= the committed max — one table per stream checkpoint.  A head
+    without batch metadata (a manual, checkpoint or rollback commit)
+    answers False; ``commit_stream_batch``'s idempotence key still
+    catches a replay then."""
+    head = _head(root)
+    return (head is not None
+            and batch_id <= head["meta"].get("max_batch_id", -1))
+
+
 def commit_stream_batch(df: DataFrame, root: str, batch_id: int) -> int | None:
     """foreachBatch adapter: publish one micro-batch as an append commit,
     exactly once.  foreachBatch is at-least-once, so the batch id rides
     the commit's idempotence key and a replay of an already-committed
     batch is a pure no-op (returns None) — the log IS the idempotence
-    ledger, no mb partition dance needed (cf. streaming/vectors.py,
-    which solves the same replay with dynamic partition overwrite
-    because it has no log).
+    ledger.
 
-    Two layers of replay defense: the HEAD's ``max_batch_id`` answers
-    the common sequential-replay case in O(1) record reads (Spark batch
-    ids are monotone per checkpoint, so a redelivered id is always <=
-    the committed max — one table per stream checkpoint), and the
-    in-claim-loop idempotence key closes the zombie race where a
-    restarted query overlaps its not-yet-dead predecessor and both
-    deliver the same batch concurrently."""
-    head = _head(root)
-    if head is not None:
-        max_mb = head["meta"].get("max_batch_id")
-        if max_mb is not None and batch_id <= max_mb:
-            return None
-    prev_max = -1 if head is None else head["meta"].get("max_batch_id", -1)
+    Two layers of replay defense: ``batch_committed`` answers the common
+    sequential-replay case from the head record, and the in-claim-loop
+    idempotence key closes the zombie race where a restarted query
+    overlaps its not-yet-dead predecessor and both deliver the same
+    batch concurrently."""
+    if batch_committed(root, batch_id):
+        return None
     return commit_snapshot(
         df, root, mode="append",
-        meta={"batch_id": batch_id,
-              "max_batch_id": max(int(prev_max), int(batch_id))},
+        meta={"batch_id": batch_id, "max_batch_id": int(batch_id)},
         idempotence_key=f"batch:{batch_id}")

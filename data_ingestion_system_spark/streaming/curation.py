@@ -12,28 +12,21 @@ index table (signature rows, ~bands longs/doc), not in streaming state:
 restarts recover it from storage, and its size is independent of how
 the stream is partitioned or resumed.
 
-Exactly-once effects under foreachBatch's at-least-once contract:
-
-* the clean corpus and the rejects table publish through the snapshot
-  log (one append commit per batch, the batch id as the
-  idempotence key — sources/versioned.py::commit_stream_batch), so a
-  replayed batch's commit is a no-op and readers get consistent,
-  time-travelable snapshots; the internal signature index stays
-  mb-partitioned with dynamic partition OVERWRITE (a replay replaces
-  its own partition);
-* the history probe EXCLUDES index rows stamped with the current batch
-  id, so a replay that finds its own partial index write cannot reject
-  docs as duplicates of their same-batch peers;
-* a commit marker (``<index>/_commits/<batch_id>``, written last) makes
-  fully-committed batches no-ops on replay.
-
-Together: die at ANY point mid-batch and the replay converges to the
-same final state as an uninterrupted run.  Pinned by
-tests/test_curation_stream.py (replayed-batch and partial-write cases).
+Exactly-once effects under foreachBatch's at-least-once contract come
+from one ledger, the snapshot log (sources/versioned.py): the clean
+corpus, the rejects table and the signature index each publish one
+append commit per batch, keyed by the batch id
+(``commit_stream_batch``), in that order, the index last.  A staged
+write is invisible until its commit record lands, so a batch that dies
+anywhere replays against the index as it stood before the batch; a
+batch whose index commit already landed is a no-op
+(``batch_committed``).  Die at ANY point mid-batch and the replay
+converges to the same final state as an uninterrupted run — pinned by
+tests/test_curation_stream.py and tests/test_stream_crash_replay.py.
 
 At 100 TB/day the cost per batch is O(batch + candidates): signature
-pass over the batch, a band-partition-pruned equi-join against the
-index, and point-reads of only the implicated corpus docs for exact
+pass over the batch, an equi-join against the index's committed
+snapshot, and point-reads of only the implicated corpus docs for exact
 verify (see dedup_index.probe_index).  The reference has no dedup at
 all (its at-least-once path duplicates on redelivery —
 src/lambda/processQueue.ts:162-198); this closes that hole at the
@@ -61,6 +54,7 @@ from data_ingestion_system_spark.operators.dedup_index import (
     write_index,
 )
 from data_ingestion_system_spark.sources.versioned import (
+    batch_committed,
     commit_stream_batch,
     latest_version,
     read_snapshot,
@@ -75,41 +69,40 @@ DOC_SCHEMA = T.StructType([
 _EMPTY_CLEAN_SCHEMA = "doc_id long, text string, lang string"
 
 
+def _refuse_legacy_parquet(path: str, what: str) -> None:
+    """Raise when ``path`` holds parquet but no snapshot log: a store
+    written before the versioned layout.  Read (or bootstrapped) as an
+    empty table, it would silently re-accept every cross-batch
+    duplicate of its history (ADVICE r8).  Parquet inside ``d-*/`` is
+    not legacy: an uncommitted (crashed-before-log-append) write is
+    correctly invisible and must not trip this."""
+    if not os.path.isdir(path):
+        return
+    for entry in os.listdir(path):
+        if entry.startswith("d-") or entry == "_log":
+            continue
+        p = os.path.join(path, entry)
+        if (entry.endswith(".parquet") and os.path.isfile(p)) or (
+                os.path.isdir(p) and any(
+                    f.endswith(".parquet")
+                    for _, _, fs in os.walk(p) for f in fs)):
+            raise ValueError(
+                f"{what} at {path!r} holds raw parquet but no snapshot "
+                "log: it predates the versioned layout. Migrate it once "
+                "by committing the raw files as snapshot v1 "
+                "(sources/versioned.py::commit_snapshot) before "
+                "restarting the stream.")
+
+
 def _clean_store(spark: SparkSession, path: str) -> DataFrame:
-    # consistent snapshot through the log: a replay that already
-    # committed this batch's accepted docs is visible here, which is
-    # harmless — their signatures are mb-excluded from the probe, so
-    # they can never surface as candidates against themselves
+    # consistent snapshot through the log: a replay whose clean commit
+    # already landed sees this batch's accepted docs here, which is
+    # harmless — candidates come only from the index, and on a replay
+    # the index head never holds the batch being redone, so none of its
+    # docs can be candidates against themselves
     if latest_version(path) > 0:
         return read_snapshot(spark, path).select("doc_id", "text", "lang")
-    # Empty log + raw parquet on disk = a pre-versioned (r7-) store.
-    # Probing against an EMPTY corpus here would silently re-accept every
-    # cross-batch duplicate of the legacy history — fail loudly and name
-    # the migration instead (ADVICE r8).  Parquet inside d-*/ is NOT
-    # legacy: an uncommitted (crashed-before-log-append) write is
-    # correctly invisible and must not trip the migration error.
-    def _legacy_parquet() -> bool:
-        if not os.path.isdir(path):
-            return False
-        for entry in os.listdir(path):
-            if entry.startswith("d-") or entry == "_log":
-                continue
-            p = os.path.join(path, entry)
-            if entry.endswith(".parquet") and os.path.isfile(p):
-                return True
-            if os.path.isdir(p) and any(
-                    f.endswith(".parquet")
-                    for _, _, fs in os.walk(p) for f in fs):
-                return True
-        return False
-
-    if _legacy_parquet():
-        raise ValueError(
-            f"clean store at {path!r} holds raw parquet but no "
-            "snapshot log: it predates the versioned layout. Migrate it "
-            "once by committing the raw files as snapshot v1 "
-            "(sources/versioned.py::commit_snapshot) before restarting "
-            "the stream.")
+    _refuse_legacy_parquet(path, "clean store")
     return spark.createDataFrame([], _EMPTY_CLEAN_SCHEMA)
 
 
@@ -165,32 +158,24 @@ def start_curation_stream(
     must not outlive the data they summarize (the freshness hook
     pipeline.py already gives the bronze stream; SURVEY §7.4).
 
-    ``clean_dir`` and ``rejects_dir`` are versioned table roots: each
-    micro-batch is one append commit (sources/versioned.py::
-    commit_stream_batch), readers resolve consistent snapshots
-    (read_snapshot) and can time-travel any batch boundary, and a
-    replayed batch no-ops on the log's ``batch:<id>`` idempotence key
-    (a partial write before a crash is an invisible staged directory,
-    not a half-table).  The signature index keeps its mb-stamped
-    dynamic-overwrite scheme (it is an internal structure, probed with
-    same-batch exclusion, not a served table), and the commit marker
-    still short-circuits fully-committed batches so a marker-present
-    replay skips even the recompute."""
-    if not os.path.isdir(index_dir):
+    ``clean_dir``, ``rejects_dir`` and ``index_dir`` are versioned table
+    roots: each micro-batch is one append commit to each
+    (sources/versioned.py::commit_stream_batch), readers resolve
+    consistent snapshots (read_snapshot) and can time-travel any batch
+    boundary, and a replayed batch whose index commit landed is skipped
+    before any recompute."""
+    if latest_version(index_dir) == 0:
         # bootstrap an empty, schema-complete index so the first batch's
-        # probe is uniform with every later one
+        # probe is uniform with every later one — never over a legacy one
+        _refuse_legacy_parquet(index_dir, "signature index")
         write_index(spark.createDataFrame([], _EMPTY_CLEAN_SCHEMA),
                     index_dir)
-
-    commits_dir = os.path.join(index_dir, "_commits")
-    os.makedirs(commits_dir, exist_ok=True)
 
     raw = (spark.readStream.schema(DOC_SCHEMA).json(landing_dir))
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(commits_dir, str(batch_id))
-        if os.path.exists(marker):
-            return  # batch fully committed before a restart: pure no-op
+        if batch_committed(index_dir, batch_id):
+            return  # the index commit lands last: the batch is done
         batch_df.persist()
         try:
             # (1) within-batch exact dedup: min doc_id per normalized text
@@ -205,12 +190,10 @@ def start_curation_stream(
                 self_losers = self_hits.select(
                     F.col("batch_id").alias("doc_id")).distinct()
                 survivors = batch.join(self_losers, "doc_id", "left_anti")
-                # (3) probe accepted history via the signature index,
-                # excluding any partial same-batch write from a replay
+                # (3) probe accepted history via the signature index
                 corpus = _clean_store(spark, clean_dir)
                 hits = probe_index(spark, index_dir, survivors, corpus,
-                                   threshold=threshold,
-                                   exclude_mb=batch_id).persist()
+                                   threshold=threshold).persist()
                 try:
                     dup_ids = hits.select(
                         F.col("batch_id").alias("doc_id")).distinct()
@@ -226,12 +209,9 @@ def start_curation_stream(
                     # commit already landed is a no-op
                     commit_stream_batch(stamped, clean_dir, batch_id)
                     commit_stream_batch(all_rejects, rejects_dir, batch_id)
-                    # (5) tomorrow's probe sees today's accepted docs
-                    append_index(accepted, index_dir, mb=batch_id)
-                    # (6) commit marker LAST: anything before this line can
-                    # die and the replay overwrites cleanly
-                    with open(marker, "w") as f:
-                        f.write("committed")
+                    # (5) tomorrow's probe sees today's accepted docs; the
+                    # index commits LAST, so it marks the batch done
+                    append_index(accepted, index_dir, batch_id)
                     if result_cache is not None:
                         result_cache.invalidate_all()
                 finally:

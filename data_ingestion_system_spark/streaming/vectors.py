@@ -2,8 +2,10 @@
 
 The serving story for ANN at 100 TB is incremental: vectors arrive
 continuously and the inverted lists must absorb them at O(batch) cost
-with exactly-once effects.  This stream is the vector twin of the
-curation pipeline's dedup-index maintenance (streaming/curation.py):
+with exactly-once effects.  It keeps mb stamps rather than the snapshot
+log the other streams commit through: its probe prunes ``cid``
+partition directories, while the log stages each commit as one
+unpartitioned directory, and its stream has a single sink.
 
 * each micro-batch assigns ITS OWN rows to lists (map-only Arrow pass
   against the versioned centroid sidecar) and lands them under

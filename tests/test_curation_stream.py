@@ -97,9 +97,9 @@ def test_curation_stream_rejects_within_batch_near_dups(spark, tmp_path):
 
 def test_curation_stream_replay_is_idempotent(spark, tmp_path):
     """foreachBatch is at-least-once: simulate the worst replay (all
-    outputs written, commit marker AND checkpoint lost) and require the
-    re-run to converge to the identical final state — dynamic partition
-    overwrite + same-batch index exclusion, not blind appends."""
+    outputs written, the index rolled back to before the batch AND the
+    checkpoint lost) and require the re-run to converge to the identical
+    final state — the snapshot log's batch-id keys, not blind appends."""
     import shutil
 
     landing = tmp_path / "landing"
@@ -127,24 +127,27 @@ def test_curation_stream_replay_is_idempotent(spark, tmp_path):
                  for r in V.read_snapshot(spark, paths["clean"]).collect()}
         rejects = [(r["batch_id"], r["corpus_id"]) for r in
                    V.read_snapshot(spark, paths["rejects"]).collect()]
-        idx = spark.read.parquet(paths["index"])
+        idx = V.read_snapshot(spark, paths["index"])
         return clean, sorted(rejects), idx.count(), idx.distinct().count()
 
     first = state()
     assert first[0] == {1, 3}          # 2 rejected as near-dup of 1
     assert first[2] == first[3]        # index has no duplicate rows
 
-    # lose the checkpoint AND the commit marker: the batch replays fully
+    # lose the checkpoint AND roll the index back to before batch 0
+    # (v1 is the empty bootstrap): the batch replays fully
     shutil.rmtree(paths["ck"])
-    import os
-    os.remove(os.path.join(paths["index"], "_commits", "0"))
+    V.rollback(paths["index"], 1)
     run()
     assert state() == first
 
-    # marker-present replay (checkpoint lost, marker intact): pure no-op
+    # index-committed replay (checkpoint lost, index intact): pure no-op
+    heads = {k: V.latest_version(paths[k])
+             for k in ("clean", "rejects", "index")}
     shutil.rmtree(paths["ck"])
     run()
     assert state() == first
+    assert {k: V.latest_version(paths[k]) for k in heads} == heads
 
 
 def test_cached_search_not_stale_across_batch_commit(spark, tmp_path):
@@ -221,3 +224,19 @@ def test_legacy_raw_store_raises_migration_error(spark, tmp_path):
         [(2, DOC_A, "en")], "doc_id long, text string, lang string"
     ).write.parquet("file://" + os.path.join(str(orphan), "d-deadbeef"))
     assert _clean_store(spark, str(orphan)).count() == 0
+
+    # the stream's index bootstrap refuses a pre-versioned index too,
+    # instead of shadowing it with an empty v1
+    from data_ingestion_system_spark.operators.dedup_index import (
+        banded_rows,
+    )
+    index = str(tmp_path / "legacy_index")
+    (banded_rows(spark.createDataFrame([(1, DOC_A)],
+                                       "doc_id long, text string"))
+     .write.partitionBy("band").parquet("file://" + index))
+    (tmp_path / "landing").mkdir()
+    with pytest.raises(ValueError, match="signature index"):
+        start_curation_stream(
+            spark, str(tmp_path / "landing"), str(tmp_path / "c"),
+            str(tmp_path / "r"), index, str(tmp_path / "ck"))
+    assert V.latest_version(index) == 0

@@ -401,6 +401,9 @@ def test_jaccard_pair_budget_gate(spark):
     # under budget: byte-identical output, no warning
     with warnings.catch_warnings():
         warnings.simplefilter("error")
+        # collect()'s result socket is left to GC by PySpark
+        # (pyspark/util.py::_load_from_socket), not by the engine
+        warnings.filterwarnings("ignore", category=ResourceWarning)
         under = {(r.id_a, r.id_b): r.jaccard
                  for r in D.jaccard_pairs(sh, pair_budget=10**9).collect()}
     assert under == exact
@@ -445,6 +448,8 @@ def test_jaccard_mass_memoized_per_session(spark):
     assert not memo.contains(spark, full_key)
     with warnings.catch_warnings():
         warnings.simplefilter("error")  # under budget: exact, silent
+        # PySpark leaves collect()'s result socket to GC
+        warnings.filterwarnings("ignore", category=ResourceWarning)
         first = D.jaccard_pairs(sh, pair_budget=10**9, mass_key=key)
     assert memo.contains(spark, full_key)
     exact = {(r.id_a, r.id_b): r.jaccard for r in first.collect()}
@@ -465,6 +470,7 @@ def test_jaccard_mass_memoized_per_session(spark):
     memo.clear()
     with warnings.catch_warnings():
         warnings.simplefilter("error")  # re-measured: exact again
+        warnings.filterwarnings("ignore", category=ResourceWarning)
         again = D.jaccard_pairs(sh, pair_budget=10**9, mass_key=key)
     assert {(r.id_a, r.id_b): r.jaccard
             for r in again.collect()} == exact

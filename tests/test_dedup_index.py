@@ -11,6 +11,7 @@ from data_ingestion_system_spark.operators.dedup_index import (
     probe_index,
     write_index,
 )
+from data_ingestion_system_spark.sources import versioned as V
 
 
 @pytest.fixture(scope="module")
@@ -58,7 +59,7 @@ def test_append_makes_previous_batch_visible(spark, sf_dir, corpus,
     )
     # day 1 is clean against the corpus -> accept it into the index
     assert probe_index(spark, idx, day1, corpus).count() == 0
-    append_index(day1, idx)
+    append_index(day1, idx, batch_id=0)
 
     # day 2 re-submits (a light edit of) day 1's doc: the probe must
     # catch it against the APPENDED signatures, with day-1 text coming
@@ -80,109 +81,34 @@ def test_index_is_signature_sized(spark, sf_dir, corpus, tmp_path):
     """The index stores bands x docs fixed-width rows — no text."""
     idx = str(tmp_path / "minhash_index")
     write_index(corpus, idx)
-    df = spark.read.parquet(idx)
+    df = V.read_snapshot(spark, idx)
     assert set(df.columns) == {"band", "bh", "doc_id"}
     n_docs = corpus.count()
     assert df.count() == 8 * n_docs          # BANDS rows per doc
 
 
-def test_probe_exclude_mb_skips_own_partial_write(spark, tmp_path):
-    """Replay semantics: an index write stamped with micro-batch id N is
-    invisible to a probe excluding N (its own partial write on replay),
-    visible to every other probe; un-stamped (batch-API) rows survive
-    any exclusion (null-safe comparison)."""
+def test_staged_uncommitted_index_write_is_invisible(spark, tmp_path):
+    """A write staged under the index root but never committed (a crash
+    between the data write and the log record) is invisible to a probe;
+    once a commit lands, its rows are visible."""
+    from data_ingestion_system_spark.operators.dedup_index import (
+        banded_rows,
+    )
+
     doc = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
            "lam mu nu xi omicron pi rho sigma tau upsilon phi chi psi")
-    idx = str(tmp_path / "idx_mb")
+    idx = str(tmp_path / "idx")
     corpus = spark.createDataFrame([(1, doc)], "doc_id long, text string")
-    write_index(corpus, idx, mb=5)
+    write_index(corpus.limit(0), idx)                 # v1: empty index
+    V._stage(banded_rows(corpus), idx)                # staged, no record
+    assert V.latest_version(idx) == 1
 
     probe_doc = spark.createDataFrame([(2, _perturb(doc))],
                                       "doc_id long, text string")
-    # normal probe and a DIFFERENT batch's probe both see the near-dup
+    assert probe_index(spark, idx, probe_doc, corpus).count() == 0
+    append_index(corpus, idx, batch_id=0)
     assert probe_index(spark, idx, probe_doc, corpus).count() == 1
-    assert probe_index(spark, idx, probe_doc, corpus,
-                       exclude_mb=6).count() == 1
-    # the stamping batch's own replay does not
-    assert probe_index(spark, idx, probe_doc, corpus,
-                       exclude_mb=5).count() == 0
-
-    # un-stamped rows (batch API) are never excluded
-    idx2 = str(tmp_path / "idx_plain")
-    write_index(corpus, idx2)
-    assert probe_index(spark, idx2, probe_doc, corpus,
-                       exclude_mb=5).count() == 1
-
-    # mb-stamped "append" is dynamic overwrite of its own partition:
-    # writing batch 5 twice leaves ONE copy of its signature rows
-    append_index(corpus, idx, mb=5)
-    rows = spark.read.parquet(idx)
+    # a replayed batch id is a no-op: one copy of its signature rows
+    append_index(corpus, idx, batch_id=0)
+    rows = V.read_snapshot(spark, idx)
     assert rows.count() == rows.distinct().count() == 8  # BANDS per doc
-
-
-def test_stamped_append_migrates_legacy_layout(spark, tmp_path):
-    """Upgrading a legacy (band=-only) index with an mb-stamped append
-    must not leave conflicting partition-directory depths: existing
-    rows are re-homed under the mb=-1 sentinel and every subsequent
-    probe still sees them (ADVICE r3, dedup_index.py:118)."""
-    doc_a = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
-             "lam mu nu xi omicron pi rho sigma tau upsilon phi chi psi")
-    doc_b = ("red orange yellow green blue indigo violet cyan magenta "
-             "black white gray brown pink teal navy olive maroon lime "
-             "aqua silver gold bronze copper")
-    idx = str(tmp_path / "idx_upgrade")
-    legacy_corpus = spark.createDataFrame([(1, doc_a)],
-                                          "doc_id long, text string")
-    write_index(legacy_corpus, idx)            # legacy band=* layout
-
-    day1 = spark.createDataFrame([(2, doc_b)], "doc_id long, text string")
-    append_index(day1, idx, mb=7)              # triggers migration
-
-    # uniform mb=*/band=* layout: partition discovery succeeds and the
-    # legacy rows read back under the sentinel
-    rows = spark.read.parquet(idx)
-    assert rows.count() == 16                  # BANDS rows per doc x 2
-    assert set(r["mb"] for r in rows.select("mb").distinct().collect()) \
-        == {-1, 7}
-
-    # probes see BOTH generations...
-    corpus = legacy_corpus.unionByName(day1)
-    probe_a = spark.createDataFrame([(10, _perturb(doc_a))],
-                                    "doc_id long, text string")
-    probe_b = spark.createDataFrame([(11, _perturb(doc_b))],
-                                    "doc_id long, text string")
-    assert probe_index(spark, idx, probe_a, corpus).count() == 1
-    assert probe_index(spark, idx, probe_b, corpus).count() == 1
-    # ...and exclude_mb semantics hold across the migration: excluding
-    # batch 7 hides day1 but never the migrated legacy rows
-    assert probe_index(spark, idx, probe_b, corpus, exclude_mb=7).count() == 0
-    assert probe_index(spark, idx, probe_a, corpus, exclude_mb=7).count() == 1
-    # migration staging dir is cleaned up
-    import os
-    assert not os.path.exists(idx + ".mb_migrate")
-
-
-def test_unstamped_append_into_mb_layout_keeps_depth_uniform(spark,
-                                                             tmp_path):
-    """The reverse upgrade hazard: a batch-API (un-stamped) append into
-    an mb-layout root is sentinel-stamped so partition depths never
-    mix."""
-    doc_a = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
-             "lam mu nu xi omicron pi rho sigma tau upsilon phi chi psi")
-    doc_b = ("red orange yellow green blue indigo violet cyan magenta "
-             "black white gray brown pink teal navy olive maroon lime "
-             "aqua silver gold bronze copper")
-    idx = str(tmp_path / "idx_mb_first")
-    first = spark.createDataFrame([(1, doc_a)], "doc_id long, text string")
-    write_index(first, idx, mb=3)
-    later = spark.createDataFrame([(2, doc_b)], "doc_id long, text string")
-    append_index(later, idx)                   # no stamp -> sentinel
-
-    rows = spark.read.parquet(idx)
-    assert rows.count() == 16
-    assert set(r["mb"] for r in rows.select("mb").distinct().collect()) \
-        == {-1, 3}
-    probe_b = spark.createDataFrame([(11, _perturb(doc_b))],
-                                    "doc_id long, text string")
-    assert probe_index(spark, idx, probe_b,
-                       first.unionByName(later), exclude_mb=3).count() == 1

@@ -1,8 +1,8 @@
 """The connected-components core: both finishes (the driver-side
 union-find and the large-star/small-star rounds with distributed labels)
-on the same inputs, the adversarial long-chain case, the clique hand-off
-from the rounds to the union-find, a loud failure at the round cap, and
-release of what the core persisted."""
+on the same inputs, the adversarial long-chain and hub cases, the clique
+hand-off from the rounds to the union-find, a loud failure at the round
+cap, and release of what the core persisted."""
 
 from __future__ import annotations
 
@@ -66,6 +66,21 @@ def test_two_chains_do_not_merge(spark, finish):
     got = _labels(connected_components(df))
     assert all(v == 0 for k, v in got.items() if k <= 50)
     assert all(v == 100 for k, v in got.items() if k >= 100)
+
+
+def test_hub_star_converges(spark, finish):
+    """Hub skew: about 5,000 neighbours around a mid-range hub id.  The
+    union-find labels it in one pass; the first star round already
+    re-points every node at the component minimum, so three rounds are
+    ample (a 10^5 hub took two)."""
+    from pyspark.sql import functions as F
+
+    n, hub = 5000, 2500
+    df = (spark.range(n + 1).filter(F.col("id") != hub)
+          .select(F.lit(hub).cast("long").alias("id_a"),
+                  F.col("id").alias("id_b")))
+    got = _labels(connected_components(df, max_iter=3))
+    assert got == {i: 0 for i in range(n + 1)}
 
 
 def _ground_truth(pairs, nodes):

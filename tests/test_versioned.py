@@ -81,6 +81,21 @@ def test_stream_batch_replay_is_exactly_once(spark, tmp_path):
     assert _ids(V.read_snapshot(spark, root)) == [1, 2]
 
 
+def test_stream_batch_lands_again_after_rollback(spark, tmp_path):
+    """A rollback takes the rolled-away batches out of the table's
+    history: replaying one of them commits it again, while a batch the
+    restored version holds stays a no-op."""
+    root = str(tmp_path / "t")
+    V.commit_stream_batch(_df(spark, [1]), root, batch_id=0)
+    V.commit_stream_batch(_df(spark, [2]), root, batch_id=1)
+    V.rollback(root, 1)
+    assert V.batch_committed(root, 1) is False
+    assert V.commit_stream_batch(_df(spark, [1]), root, batch_id=0) is None
+    assert V.commit_stream_batch(_df(spark, [2]), root, batch_id=1) == 4
+    assert V.batch_committed(root, 1)
+    assert _ids(V.read_snapshot(spark, root)) == [1, 2]
+
+
 def test_checkpoint_folds_dirs_and_vacuum_reclaims(spark, tmp_path):
     root = str(tmp_path / "t")
     for b in range(4):
