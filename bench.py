@@ -1,19 +1,27 @@
 #!/usr/bin/env python
-"""Benchmark harness: timed runs of the engine's headline queries.
+"""Benchmark harness: the one timed loop over the engine's declared queries.
 
-Runs every declared query at $SPARK_GRAFT_SF_DIR (default sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+Usage: python bench.py [query ...]
+
+Runs the declared queries (all of them, or the named ones) at
+$SPARK_GRAFT_SF_DIR (default sf0.1) on ``local[session.DEFAULT_CPUS]`` and
+prints ONE JSON line:
     {"metric": "...", "value": <total_sec>, "unit": "sec",
-     "queries": {"q1": sec, ...}, "sf": ...}
+     "queries": {"q1": sec, ...}, "sf": ..., "parallelism": ...}
 
-Per-query time = wall-clock of executing the DataFrame plan to completion
-through the `noop` sink (full distributed materialization, no driver-side
-row transfer — collect() would time Python pickling of result sets, not
-the engine), after one untimed warm-up of the session (JVM + parquet
-footer reads), mirroring the reference benchmark's posture of measuring
-steady-state latency (src/scripts/benchmark.ts:39-54).  Caches are
-cleared between queries so no query is billed for (or subsidized by) a
-neighbor's persisted state.
+Per-query time = wall clock of building the query's DataFrame (including
+any eager pre-pass jobs the build runs) plus executing its plan to
+completion through the `noop` sink (full distributed materialization, no
+driver-side row transfer — collect() would time Python pickling of result
+sets, not the engine), after one untimed warm-up of the session (JVM +
+parquet footer reads), mirroring the reference benchmark's posture of
+measuring steady-state latency (src/scripts/benchmark.ts:39-54).  Caches
+are cleared before each query so no query is billed for (or subsidized
+by) a neighbor's persisted state.  ``time_queries`` keeps, per query, the
+fastest of $SPARK_GRAFT_BENCH_RUNS (default 3) full passes, split into
+build and exec with the Spark jobs, stages and tasks each phase ran; a
+full run writes those records to BENCH_FULL.json.  A run over named
+queries writes no file and prints their records under "queries".
 
 Known exception to per-query isolation (disclosed per VERDICT r9 #5):
 the gated dedup family memoizes its candidate-pair MASS — a scalar
@@ -32,90 +40,84 @@ import json
 import os
 import sys
 import time
+import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench.tracing import JobCounter  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
-def wait_for_quiet_host(threshold: float = 1.5,
-                        max_wait_sec: float = 600.0,
-                        poll_sec: float = 15.0) -> float:
-    """Bounded spin-wait for 1-min loadavg < ``threshold`` before timing.
-
-    BENCH_r03 was captured at loadavg 3.69 while a quieter committed run
-    existed — best-of-3 absorbs mid-run stalls but cannot fix a capture
-    that STARTS contended.  Waiting (up to 10 min) costs nothing the
-    timings don't repay; if the host never quiets we proceed anyway and
-    the ``contended`` flag records it.  Disable with
-    SPARK_GRAFT_BENCH_NO_WAIT=1 (unit tests, known-quiet hosts)."""
-    if os.environ.get("SPARK_GRAFT_BENCH_NO_WAIT"):
-        return os.getloadavg()[0]
-    deadline = time.monotonic() + max_wait_sec
-    load = os.getloadavg()[0]
-    while load >= threshold and time.monotonic() < deadline:
-        print(f"# waiting for quiet host: loadavg {load:.2f} >= "
-              f"{threshold}", file=sys.stderr)
-        time.sleep(poll_sec)
-        load = os.getloadavg()[0]
-    return load
+def sf_of(sf_dir: str):
+    """The scale factor a fixture directory's name ends in (``.../sf0.1``
+    -> 0.1); the name itself when it does not parse."""
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    try:
+        return float(sf)
+    except ValueError:
+        return sf
 
 
-def main() -> None:
-    from data_ingestion_system_spark.session import get_spark
+def time_queries(spark, names: list[str], sf_dir: str,
+                 runs: int) -> dict[str, dict]:
+    """One record per query in ``names``: the fastest of ``runs`` full
+    passes over the list, as ``{sec, build_s, exec_s, jobs_build,
+    jobs_exec, stages, tasks}``.  ``sec`` is build + exec of that pass;
+    the split and the counts come from the same pass.
+
+    Transient host stalls last seconds to minutes, so passes over the
+    whole list (not back-to-back repeats) decorrelate them from any one
+    query, and the min (not the mean) estimates intrinsic cost.  Each
+    pass and phase runs under its own job group; the counts are read
+    after the query's timed phases, not after the whole run, because the
+    status tracker keeps only the most recent jobs."""
     from data_ingestion_system_spark import registry
 
-    wait_for_quiet_host()
-    spark = get_spark(app_name="bench", cpus=CPUS)
     qs = registry.queries()
-
-    def run(df) -> None:
-        df.write.format("noop").mode("overwrite").save()
-
-    # warm-up: JVM codegen + file listing, untimed (not part of any query's cost)
-    run(next(iter(sorted(qs.items())))[1](spark, SF_DIR))
-
-    # best-of-N wall clock per query, taken across FULL passes over the
-    # query list (not back-to-back repeats): transient host stalls last
-    # seconds-to-minutes, so temporal separation decorrelates them from
-    # any one query; min (not mean) estimates intrinsic cost.  Three
-    # passes, not two: pass 1 also pays whole-stage-codegen compilation
-    # for each query's plan, so a single co-located stall in pass 2
-    # would otherwise leave no clean measurement at all.
-    runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    load_start = os.getloadavg()
-    timings: dict[str, float] = {}
-    for _ in range(runs):
-        for name, fn in sorted(qs.items()):
+    jobs = JobCounter(spark, True)
+    call = uuid.uuid4().hex[:8]  # group names unique per call
+    # warm-up: JVM codegen + file listing, untimed
+    qs[names[0]](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    best: dict[str, dict] = {}
+    for p in range(runs):
+        for name in names:
             spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            run(fn(spark, SF_DIR))
-            elapsed = time.perf_counter() - t0
-            timings[name] = round(min(timings.get(name, elapsed), elapsed), 4)
+            group = f"bench-{call}.{p}.{name}"
+            with jobs.group(f"{group}.build"):
+                t0 = time.perf_counter()
+                df = qs[name](spark, sf_dir)
+                build_s = time.perf_counter() - t0
+            with jobs.group(f"{group}.exec"):
+                t0 = time.perf_counter()
+                df.write.format("noop").mode("overwrite").save()
+                exec_s = time.perf_counter() - t0
+            if name in best and best[name]["sec"] <= build_s + exec_s:
+                continue
+            b, e = jobs.counts(f"{group}.build"), jobs.counts(f"{group}.exec")
+            best[name] = {"sec": build_s + exec_s, "build_s": build_s,
+                          "exec_s": exec_s, "jobs_build": b["jobs"],
+                          "jobs_exec": e["jobs"],
+                          "stages": b["stages"] + e["stages"],
+                          "tasks": b["tasks"] + e["tasks"]}
     spark.catalog.clearCache()
+    return {n: {k: round(v, 4) if isinstance(v, float) else v
+                for k, v in r.items()} for n, r in best.items()}
 
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    try:
-        sf = float(sf)
-    except ValueError:
-        pass
-    repo = os.path.dirname(os.path.abspath(__file__))
-    _retime_contended_suspects(spark, qs, run, timings,
-                               _load_best(repo, sf))
-    # The driver records only a bounded tail of stdout (r1: the full
-    # 103-entry per-query map overflowed it and "parsed" came back null),
-    # so the ONE line printed here is compact — totals, quantiles, and the
-    # ten heaviest queries — and the full per-query map goes to a sidecar.
-    ts = sorted(timings.values())
+
+def summarize(records: dict[str, dict], sf, parallelism: int,
+              load_start: float) -> dict:
+    """The one printed line.  The driver records only a bounded tail of
+    stdout (r1: the full 103-entry per-query map overflowed it), so a full
+    run prints totals, quantiles and the ten heaviest queries, and the
+    records go to BENCH_FULL.json."""
+    secs = {n: r["sec"] for n, r in records.items()}
+    ts = sorted(secs.values())
 
     def q(p: float) -> float:
-        return round(ts[min(len(ts) - 1, int(p * len(ts)))], 4)
+        return ts[min(len(ts) - 1, int(p * len(ts)))]
 
-    heaviest = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:10])
-    # co-tenant host noise inflates wall clocks 2-4x in bursts; the load
-    # averages date a run as clean or contended (quiet host: < 1)
-    summary = {
+    return {
         "metric": "declared_query_wall_clock_total",
         "value": round(sum(ts), 4),
         "unit": "sec",
@@ -123,108 +125,40 @@ def main() -> None:
         "n_queries": len(ts),
         "p50": q(0.50),
         "p95": q(0.95),
-        "queries": heaviest,
-        "loadavg_start": round(load_start[0], 2),
+        "queries": dict(sorted(secs.items(), key=lambda kv: -kv[1])[:10]),
+        # co-tenant host noise inflates wall clocks 2-4x in bursts; the
+        # load averages date a run as clean or contended (quiet host: < 1)
+        "loadavg_start": round(load_start, 2),
         "loadavg_end": round(os.getloadavg()[0], 2),
-        # best-of-3 absorbs transient stalls, but a run that STARTED on a
-        # busy host is flagged so round-over-round deltas are read with
-        # the right skepticism (r2's apparent regressions were loadavg
-        # 3.5-5.4 co-tenancy, not plan changes)
-        "contended": load_start[0] > 1.5,
+        "contended": load_start > 1.5,
         "full": "BENCH_FULL.json",
+        "parallelism": parallelism,
     }
-    full = {**summary, "queries": timings}
-    # fold in the sf0.1-vs-sf1 spot-bench (scripts/bench_scale.py) if one
-    # has been captured, so scale-trend evidence survives re-benching
-    try:
-        with open(os.path.join(repo, "SCALEUP.json")) as f:
-            full["scaleup"] = json.load(f)
-    except (FileNotFoundError, json.JSONDecodeError):
-        pass
-    full["regressions"] = _triage_regressions(
-        repo, sf, timings, summary)
-    with open(os.path.join(repo, "BENCH_FULL.json"), "w") as f:
-        json.dump(full, f, indent=1)
+
+
+def main() -> None:
+    from data_ingestion_system_spark import registry
+    from data_ingestion_system_spark.session import get_spark
+
+    declared = registry.queries()
+    names = sys.argv[1:] or sorted(declared)
+    unknown = sorted(set(names) - set(declared))
+    if unknown:
+        sys.exit(f"not declared queries: {', '.join(unknown)}")
+    load_start = os.getloadavg()[0]
+    spark = get_spark(app_name="bench")
+    records = time_queries(spark, names, SF_DIR,
+                           int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
+    summary = summarize(records, sf_of(SF_DIR),
+                        spark.sparkContext.defaultParallelism, load_start)
+    if sys.argv[1:]:
+        # a subset never replaces the full run's record file
+        summary.update(queries=records, full=None)
+    else:
+        repo = os.path.dirname(os.path.abspath(__file__))
+        with open(os.path.join(repo, "BENCH_FULL.json"), "w") as f:
+            json.dump({**summary, "queries": records}, f, indent=1)
     print(json.dumps(summary))
-
-
-def _load_best(repo: str, sf) -> dict:
-    """BENCH_BEST.json — per-query quiet-run minima, per scale."""
-    try:
-        with open(os.path.join(repo, "BENCH_BEST.json")) as f:
-            best = json.load(f)
-    except (FileNotFoundError, json.JSONDecodeError):
-        best = {"sf": sf, "queries": {}}
-    if best.get("sf") != sf:  # records are per-scale; don't cross-compare
-        best = {"sf": sf, "queries": {}}
-    return best
-
-
-def _retime_contended_suspects(spark, qs, run, timings: dict[str, float],
-                               best: dict, ratio: float = 1.3) -> None:
-    """Self-adjudicating tail noise (VERDICT r5 #6): when the capture
-    ENDED on a busy host, any query reading > ``ratio`` x its best
-    quiet record gets one more timed run after a fresh quiet-wait, and
-    keeps the min.  r5's capture started quiet (1.48) but ended at 4.23,
-    leaving tail-family numbers (align_cogroup_interp 7.34 vs 6.36
-    quiet best) for a human to re-time by hand — now the harness does
-    its own follow-up, so a triage entry that survives really is a
-    regression, not co-tenancy."""
-    if os.getloadavg()[0] <= 1.5 or os.environ.get("SPARK_GRAFT_BENCH_NO_WAIT"):
-        return
-    suspects = sorted(
-        n for n, t in timings.items()
-        if (b := best["queries"].get(n)) and t > ratio * b["sec"])
-    if not suspects:
-        return
-    print(f"# end-loadavg high: re-timing {len(suspects)} suspects "
-          f"after quiet-wait", file=sys.stderr)
-    wait_for_quiet_host()
-    for name in suspects:
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        run(qs[name](spark, SF_DIR))
-        timings[name] = round(
-            min(timings[name], time.perf_counter() - t0), 4)
-
-
-def _triage_regressions(repo: str, sf, timings: dict[str, float],
-                        summary: dict) -> list[dict]:
-    """Automated regression triage (VERDICT r4 #3): compare each query
-    against the best-known QUIET record (BENCH_BEST.json — per-query min
-    over all non-contended runs, with the loadavg it was captured at)
-    and list every >1.5x-and->1s excursion with both loadavgs attached,
-    so a co-tenant load spike reads as contention at a glance instead of
-    needing git archaeology (r4: dedup_simhash 3.43->5.76s was exactly
-    this).  A contended run never updates the record — its excursions
-    are annotated, not canonized."""
-    best_path = os.path.join(repo, "BENCH_BEST.json")
-    best = _load_best(repo, sf)
-
-    regressions = []
-    for name, t in timings.items():
-        b = best["queries"].get(name)
-        if b and t > 1.5 * b["sec"] and t - b["sec"] > 1.0:
-            regressions.append({
-                "query": name,
-                "sec": t,
-                "best_sec": b["sec"],
-                "ratio": round(t / b["sec"], 2),
-                "best_loadavg": b["loadavg"],
-                "loadavg": summary["loadavg_start"],
-                "likely_contention": summary["contended"],
-            })
-    regressions.sort(key=lambda r: -r["ratio"])
-
-    if not summary["contended"]:
-        for name, t in timings.items():
-            b = best["queries"].get(name)
-            if b is None or t < b["sec"]:
-                best["queries"][name] = {
-                    "sec": t, "loadavg": summary["loadavg_start"]}
-        with open(best_path, "w") as f:
-            json.dump(best, f, indent=1)
-    return regressions
 
 
 if __name__ == "__main__":

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import os
 import re
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -99,6 +100,48 @@ class Catalog:
         if size // max(max_split, 1) + 1 < cores:
             return df.repartition(cores)
         return df
+
+    def derived_root(self, name: str, tag: str,
+                     build: Callable[[str], None]) -> str:
+        """The temp-dir root of a table derived from table ``name``:
+        ``build(dir)`` writes it once per content of the fixture file and
+        layout ``tag`` (bump the tag when the derived layout changes), and
+        later calls reuse it.
+
+        The root's name hashes ``_file_fingerprint`` (path, size, mtime)
+        and the tag, so a regenerated fixture or a new layout lands at a
+        new root instead of relying on a freshness guard.  ``build``
+        writes a staging dir that ``os.rename`` moves to the root, so the
+        root only ever exists fully built: concurrent builders either both
+        build and one wins the rename, or one reuses the winner's root.
+        The builder whose rename lands removes the fixture path's older
+        roots, so each fixture keeps one derived root."""
+        import hashlib
+        import shutil
+        import tempfile
+        import uuid
+
+        path = os.path.abspath(self.path(name))
+        base = os.path.join(tempfile.gettempdir(), "disp_derived",
+                            hashlib.md5(path.encode()).hexdigest()[:16])
+        key = hashlib.md5(
+            repr((_file_fingerprint(path), tag)).encode()).hexdigest()[:16]
+        root = os.path.join(base, key)
+        if os.path.isdir(root):
+            return root
+        staging = os.path.join(base, f".build-{uuid.uuid4().hex}")
+        build(staging)
+        try:
+            os.rename(staging, root)
+        except OSError:
+            # a concurrent builder renamed first -- its root is complete
+            # and content-identical; discard ours
+            shutil.rmtree(staging, ignore_errors=True)
+            return root
+        for old in os.listdir(base):
+            if old != key and not old.startswith(".build-"):
+                shutil.rmtree(os.path.join(base, old), ignore_errors=True)
+        return root
 
     def events_between(self, lo_iso: str, hi_iso: str) -> DataFrame:
         """events with ``lo_iso <= ts < hi_iso`` (ISO dates, UTC), filtered

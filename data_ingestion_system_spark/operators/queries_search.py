@@ -9,8 +9,6 @@ no-filter full scan and the JSON-payload predicate.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -293,52 +291,21 @@ def search_versioned_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _versioned_events_root(spark: SparkSession, sf_dir: str) -> str:
-    """Build (or reuse) the two-version events table both versioned
-    queries read: v1 = the full events table committed through the
-    snapshot log, v2 = an overwrite with every click event dropped (the
-    destructive deploy).
-
-    Cache discipline (ADVICE r7): the cache key is CONTENT-derived --
-    (abs sf_dir, float mtime, size) of the source parquet hash into the
-    directory NAME -- so a regenerated fixture lands at a brand-new
-    path instead of relying on a truncated-mtime freshness guard; and
-    the table is built in a scratch dir then ``os.rename``d into the
-    keyed path, so the keyed path only ever EXISTS fully built -- two
-    queries racing the build (parallel grading threads, two sessions
-    sharing the tempdir) either both build and one wins the rename, or
-    one reuses the winner's table; nobody reads a half-built root."""
-    import hashlib
-    import shutil
-    import tempfile
-    import uuid
-
-    from data_ingestion_system_spark.sources.versioned import (
-        commit_snapshot,
-        versions,
-    )
+    """The two-version events table both versioned queries read, built
+    once per fixture content as a Catalog.derived_root: v1 = the full
+    events table committed through the snapshot log, v2 = an overwrite
+    with every click event dropped (the destructive deploy)."""
+    from data_ingestion_system_spark.sources.versioned import commit_snapshot
 
     cat = Catalog(spark, sf_dir)
-    st = os.stat(cat.path("events"))
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{st.st_mtime!r}|{st.st_size}"
-        .encode()).hexdigest()[:16]
-    base = os.path.join(tempfile.gettempdir(), "disp_versioned_events")
-    root = os.path.join(base, key)
-    if len(versions(root)) >= 2:
-        return root
-    build = os.path.join(base, f".build-{uuid.uuid4().hex}")
-    os.makedirs(build, exist_ok=True)
-    commit_snapshot(cat.events, build, meta={"src": key})          # v1
-    commit_snapshot(
-        cat.events.filter(F.col("event_type") != "click"), build,
-        meta={"src": key})                                         # v2
-    try:
-        os.rename(build, root)
-    except OSError:
-        # a concurrent builder renamed first -- its table is complete
-        # and content-identical; discard ours
-        shutil.rmtree(build, ignore_errors=True)
-    return root
+
+    def build(staging: str) -> None:
+        commit_snapshot(cat.events, staging)                           # v1
+        commit_snapshot(
+            cat.events.filter(F.col("event_type") != "click"),
+            staging)                                                   # v2
+
+    return cat.derived_root("events", "versioned-events", build)
 
 
 _DIFF_SQL = """

@@ -28,7 +28,10 @@ import os
 from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# every measurement entry point takes its cores from here: the host's
+# cores available to this process unless SPARK_GRAFT_CPUS says otherwise
+DEFAULT_CPUS = (os.environ.get("SPARK_GRAFT_CPUS")
+                or str(len(os.sched_getaffinity(0))))
 _LISTING_PARALLELISM = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
 # what conf.set raises for a key that cannot change after start-up
 _STATIC_CONF_ERRORS = ("CANNOT_MODIFY_STATIC_CONFIG", "CANNOT_MODIFY_CONFIG")

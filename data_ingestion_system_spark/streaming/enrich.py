@@ -79,8 +79,8 @@ def start_interval_enrich(
     ``out_path``.
 
     ``result_cache`` (a plans.cache.ResultCache) is invalidated after
-    each batch lands — cached search results over the enriched table
-    must not be served stale across a batch commit (SURVEY §7.4).
+    each batch commit lands — cached search results over the enriched
+    table must not be served stale across a batch commit (SURVEY §7.4).
 
     Each micro-batch publishes through the snapshot log
     (sources/versioned.py::commit_stream_batch): ``out_path`` is a
@@ -105,18 +105,26 @@ def start_interval_enrich(
     )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        enriched = interval_enrich_batch(batch_df, silver_path)
-        # append commit through the snapshot log: a replayed batch no-ops
-        # on the in-claim idempotence key
-        if commit_stream_batch(enriched, out_path, int(batch_id)) is None:
-            # replayed batch: the log already holds it, but the upstream
-            # stateful dedup still expects THIS batch's state-store
-            # commits (Spark validates that foreachBatch processed every
-            # partition) — drain the raw batch through the noop sink,
-            # skipping the enrichment join
-            batch_df.write.format("noop").mode("overwrite").save()
-        if result_cache is not None:
-            result_cache.invalidate_all()
+        # persisted: the emptiness test and the commit share one execution
+        # of the stateful dedup
+        batch_df.persist()
+        try:
+            # append commit through the snapshot log: a replayed batch
+            # no-ops on the in-claim idempotence key
+            if batch_df.isEmpty() or commit_stream_batch(
+                    interval_enrich_batch(batch_df, silver_path), out_path,
+                    int(batch_id)) is None:
+                # a no-data (watermark-only) batch commits nothing, and a
+                # replayed batch is already in the log, but the upstream
+                # stateful dedup still expects THIS batch's state-store
+                # commits (Spark validates that foreachBatch processed
+                # every partition) — drain the raw batch through the noop
+                # sink, skipping the enrichment join
+                batch_df.write.format("noop").mode("overwrite").save()
+            elif result_cache is not None:
+                result_cache.invalidate_all()
+        finally:
+            batch_df.unpersist()
 
     return (
         stream.writeStream.outputMode("append")

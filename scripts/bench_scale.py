@@ -1,25 +1,25 @@
 #!/usr/bin/env python
-"""Scale-up spot-bench: the most expensive queries at sf0.1 vs sf1.
+"""Scale-up spot-bench: the most expensive queries at two scales.
 
 Turns design-for-scale claims (LSH fixed overhead amortizing, TeraSort
 ranks staying flat, linear dedup) into measured trends: each query is
-timed with the same noop-sink method as bench.py at BOTH scales, and
-the per-query ratio at 10x rows is recorded.  A ratio > 15 is a
+timed by bench.py's ``time_queries`` (best of 2 passes) at BOTH scales,
+and the per-query ratio at 10x rows is recorded.  A ratio > 15 is a
 superlinear surprise (flagged, non-zero exit) — the r3 verdict's bar.
 
-Writes SCALEUP.json next to BENCH_FULL.json; bench.py folds it into
-BENCH_FULL.json under the "scaleup" key so the evidence survives
-re-benching.
+Writes SCALEUP.json, its own file beside BENCH_FULL.json.
 
 Usage: python scripts/bench_scale.py [N_QUERIES] [query ...]
-  sf1 dir from $SPARK_GRAFT_SF1_DIR (default /tmp/spark_graft_sf1;
-  generate with scripts/make_scale_fixture.py).  With explicit query
-  names, N_QUERIES is ignored.
+  The low scale is $SPARK_GRAFT_SF_DIR (default sf0.1), the high one
+  $SPARK_GRAFT_SF1_DIR (default /tmp/spark_graft_sf1; generate with
+  scripts/make_scale_fixture.py).  With explicit query names, N_QUERIES
+  (the heaviest of BENCH_FULL.json, default 10) is ignored.
 
-Second decade: point $SPARK_GRAFT_SF_DIR at the sf1 fixture and
-$SPARK_GRAFT_SF1_DIR at an sf10 one (make_scale_fixture FACTOR=10 from
-sf1), and set $SPARK_GRAFT_SCALE_LABELS="sf1,sf10" — rows are keyed
-"query@lo->hi", so decades accumulate side by side in SCALEUP.json.
+Each scale's label is parsed from its directory name as bench.py parses
+``sf``.  The default decade (sf0.1 -> sf1) keys rows by bare query name;
+any other (point the two dirs at sf1 and an sf10 from make_scale_fixture
+FACTOR=10) keys them "query@lo->hi", so decades accumulate side by side
+in SCALEUP.json.
 """
 
 from __future__ import annotations
@@ -27,60 +27,44 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
 
-SF01_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+from bench import SF_DIR, sf_of, time_queries  # noqa: E402
+
 SF1_DIR = os.environ.get("SPARK_GRAFT_SF1_DIR", "/tmp/spark_graft_sf1")
-LABELS = os.environ.get("SPARK_GRAFT_SCALE_LABELS", "sf0.1,sf1").split(",")
 RATIO_BAR = 15.0
 
 
+def _label(sf_dir: str) -> str:
+    sf = sf_of(sf_dir)
+    return f"sf{sf:g}" if isinstance(sf, float) else sf
+
+
 def main() -> None:
-    from data_ingestion_system_spark import registry
     from data_ingestion_system_spark.session import get_spark
 
     args = sys.argv[1:]
-    qs = registry.queries()
     if args and not args[0].isdigit():
         names = args
     else:
         n = int(args[0]) if args else 10
         with open(os.path.join(_REPO, "BENCH_FULL.json")) as f:
             full = json.load(f)["queries"]
-        names = [k for k, _ in sorted(full.items(),
-                                      key=lambda kv: -kv[1])[:n]]
-    spark = get_spark(app_name="bench_scale",
-                      cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        names = sorted(full, key=lambda k: -full[k]["sec"])[:n]
+    spark = get_spark(app_name="bench_scale")
 
-    def run(df) -> None:
-        df.write.format("noop").mode("overwrite").save()
-
-    # warm-up both scale dirs (JVM, file listings) untimed
-    run(qs[names[0]](spark, SF01_DIR))
-    run(qs[names[0]](spark, SF1_DIR))
-
-    lo_label, hi_label = LABELS[0].strip(), LABELS[1].strip()
+    lo_label, hi_label = _label(SF_DIR), _label(SF1_DIR)
+    lo = time_queries(spark, names, SF_DIR, 2)
+    hi = time_queries(spark, names, SF1_DIR, 2)
     default_decade = (lo_label, hi_label) == ("sf0.1", "sf1")
     results: dict[str, dict] = {}
     for name in names:
-        row: dict = {}
-        for key, sf_dir in ((lo_label, SF01_DIR), (hi_label, SF1_DIR)):
-            best = None
-            for _ in range(2):          # best-of-2 absorbs one stall
-                spark.catalog.clearCache()
-                t0 = time.perf_counter()
-                run(qs[name](spark, sf_dir))
-                dt = time.perf_counter() - t0
-                best = dt if best is None else min(best, dt)
-            row[key] = round(best, 3)
+        row = {lo_label: lo[name]["sec"], hi_label: hi[name]["sec"]}
         row["ratio_at_10x"] = round(row[hi_label] / max(row[lo_label], 1e-9),
                                     2)
         row["superlinear"] = row["ratio_at_10x"] > RATIO_BAR
-        # default decade keeps bare names (r4-era format); other decades
-        # key by query@lo->hi so they accumulate side by side
         results[name if default_decade
                 else f"{name}@{lo_label}->{hi_label}"] = row
         print(f"{name}: {lo_label} {row[lo_label]}s  "
@@ -98,8 +82,9 @@ def main() -> None:
     except (FileNotFoundError, json.JSONDecodeError):
         pass
     payload = {
-        "method": "best-of-2 noop-sink wall clock per scale, cache "
-                  "cleared between runs; sf1 fixture = 10x sf0.1 via "
+        "method": "bench.py time_queries, best of 2 passes per scale "
+                  "(build + noop-sink exec, cache cleared before each "
+                  "query); sf1 fixture = 10x sf0.1 via "
                   "scripts/make_scale_fixture.py (disjoint-token docs, "
                   "per-copy embedding labels: clusters multiply, block "
                   "sizes constant)",

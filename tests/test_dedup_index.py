@@ -112,3 +112,36 @@ def test_staged_uncommitted_index_write_is_invisible(spark, tmp_path):
     append_index(corpus, idx, batch_id=0)
     rows = V.read_snapshot(spark, idx)
     assert rows.count() == rows.distinct().count() == 8  # BANDS per doc
+
+
+def test_probe_keeps_one_index_root_per_fixture(spark, sf_dir, tmp_path,
+                                                monkeypatch):
+    """dedup_index_probe's index is derived per fixture content: a
+    rewritten fixture (new mtime) gets a fresh root, the old root is
+    removed, and the probe's rows are unchanged."""
+    import os
+    import shutil
+    import tempfile
+
+    from data_ingestion_system_spark.operators.queries_dedup import (
+        dedup_index_probe,
+    )
+
+    fixture = tmp_path / "sf"
+    shutil.copytree(sf_dir, fixture)
+    Catalog(spark, str(fixture))  # ships the package before tempdir moves
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+
+    def roots():
+        return [d for d, subdirs, _ in os.walk(tmp) if "_log" in subdirs]
+
+    first = sorted(dedup_index_probe(spark, str(fixture)).collect())
+    docs = fixture / "documents.parquet"
+    docs.write_bytes(docs.read_bytes())
+    st = os.stat(docs)
+    os.utime(docs, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    second = sorted(dedup_index_probe(spark, str(fixture)).collect())
+    assert len(roots()) == 1
+    assert second == first

@@ -373,3 +373,38 @@ def test_interval_enrich_versioned_sink_serves_snapshots(spark, sf_dir,
         V.read_snapshot(spark, root).limit(0), root, mode="append")
     assert svc.search({"user_id": int(any_user)}) == first  # same rows...
     assert len(runs) == 2                    # ...but re-run: key bumped
+
+
+def test_interval_enrich_commits_only_batches_with_rows(spark, sf_dir,
+                                                        tmp_path):
+    """A no-data (watermark-only) micro-batch commits nothing: one landing
+    file gives exactly one version of the enriched table and one
+    invalidation of the result cache."""
+    from data_ingestion_system_spark.catalog import Catalog
+    from data_ingestion_system_spark.operators.temporal import scd2_intervals
+    from data_ingestion_system_spark.sources import versioned as V
+    from data_ingestion_system_spark.streaming.enrich import (
+        TS_NTZ_FORMAT,
+        start_interval_enrich,
+    )
+
+    class CountingCache:
+        invalidations = 0
+
+        def invalidate_all(self):
+            self.invalidations += 1
+
+    cat = Catalog(spark, sf_dir)
+    silver = str(tmp_path / "silver")
+    scd2_intervals(cat.events).write.parquet(silver)
+    landing = str(tmp_path / "landing")
+    (cat.events.filter(F.col("event_type") == "purchase")
+     .select("event_id", "user_id", "ts").coalesce(1).write
+     .option("timestampNTZFormat", TS_NTZ_FORMAT).json(landing))
+
+    root, cache = str(tmp_path / "vroot"), CountingCache()
+    q = start_interval_enrich(spark, landing, silver, root,
+                              str(tmp_path / "ckpt"), result_cache=cache)
+    assert q.awaitTermination(180), "micro-batch did not finish in 180s"
+    assert len(V.versions(root)) == 1
+    assert cache.invalidations == 1
