@@ -18,7 +18,7 @@ pre-scan (a full extra pass over 100 TB) and make malformed records a
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -73,13 +73,17 @@ def read_landing(spark: SparkSession, path: str, schema: T.StructType,
     )
 
 
-def validate_split(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """O-14 + O-27: (valid, quarantined).
+def rejected() -> Column:
+    """O-14: the reject predicate — corrupt JSON, or a record missing the
+    required transaction id (the middleware's 400 path,
+    ``audit.middleware.ts:22-26``)."""
+    return F.col(CORRUPT_COL).isNotNull() | F.col("transactionId").isNull()
 
-    Rejects corrupt JSON and records missing the required transaction id
-    (the middleware's 400 path, ``audit.middleware.ts:22-26``); rejected
-    rows keep every column so the quarantine sink preserves evidence."""
-    bad = F.col(CORRUPT_COL).isNotNull() | F.col("transactionId").isNull()
+
+def validate_split(df: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """O-14 + O-27: (valid, quarantined).  Rejected rows keep every column
+    so the quarantine sink preserves evidence."""
+    bad = rejected()
     return df.filter(~bad), df.filter(bad)
 
 

@@ -18,6 +18,7 @@ an overwrite commit lists only its own directory, an append commit
 lists its parent's directories plus its own, and a rollback commit
 lists exactly the directories of the version it restores (no data is
 ever copied or rewritten; versions share directories structurally).
+It also carries the version's schema, so a read needs no inference job.
 The record is written LAST, with create-exclusive semantics: a crash
 anywhere before that leaves at most an orphan data directory that no
 reader can ever resolve (vacuum reclaims it), and two racing writers
@@ -50,6 +51,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 _LOG = "_log"
 
@@ -234,6 +236,7 @@ def commit_snapshot(df: DataFrame, root: str, *, mode: str = "overwrite",
             "version": (parent["version"] if parent else 0) + 1,
             "dirs": dirs,
             "mode": mode,
+            "schema": df.schema.jsonValue(),
             "meta": {**(meta or {}),
                      **({"idempotence_key": idempotence_key}
                         if idempotence_key is not None else {})},
@@ -247,9 +250,13 @@ def read_snapshot(spark: SparkSession, root: str,
                   version: int | None = None) -> DataFrame:
     """A consistent snapshot: the latest committed version, or the exact
     historical one — immutable data dirs make time travel a plain
-    multi-path parquet read."""
+    multi-path parquet read.  The record's stored schema spares the read
+    the schema-inference job; a record written without one infers."""
     rec = _resolve(root, version)
-    return spark.read.parquet(
+    reader = spark.read
+    if "schema" in rec:
+        reader = reader.schema(StructType.fromJson(rec["schema"]))
+    return reader.parquet(
         *["file://" + os.path.abspath(os.path.join(root, d))
           for d in rec["dirs"]])
 
@@ -329,6 +336,8 @@ def rollback(root: str, to_version: int) -> int:
             "mode": "rollback",
             "meta": {"restores": to_version},
         }
+        if "schema" in target:
+            record["schema"] = target["schema"]
         if _try_commit(root, record):
             return record["version"]
     raise RuntimeError("commit contention exhausted retries")
@@ -341,7 +350,8 @@ def checkpoint_snapshot(spark: SparkSession, root: str) -> int:
     small-files count; historical versions still resolve — their
     directories are untouched until vacuum."""
     rec = _resolve(root, None)
-    folded = _stage(read_snapshot(spark, root, rec["version"]), root)
+    snapshot = read_snapshot(spark, root, rec["version"])
+    folded = _stage(snapshot, root)
     # Single attempt by design: if the slot claim loses, the head has
     # necessarily advanced past the version we folded, so a "retry"
     # could only ever re-raise the advanced-head error (the old
@@ -352,6 +362,7 @@ def checkpoint_snapshot(spark: SparkSession, root: str) -> int:
         "version": rec["version"] + 1,
         "dirs": [folded],
         "mode": "checkpoint",
+        "schema": snapshot.schema.jsonValue(),
         "meta": {"folds": rec["version"]},
     }
     if _try_commit(root, record):

@@ -11,8 +11,12 @@ has no secondary indexes; the equivalent machinery is
 * **sorted-within-partition layout**: sorting each file by the top-k sort
   key (`timestamp`) tightens parquet row-group min/max stats, so
   `ORDER BY ts DESC LIMIT k` touches the newest row-groups only;
-* **row-group stats + dictionary + optional bloom filters** on the
-  point-lookup column (`transaction_id`) do the B-tree's job per file.
+* **row-group stats + dictionary** on the point-lookup column
+  (`transaction_id`) do the B-tree's job per file, plus a **bloom
+  filter** once compaction makes the file large enough to need one.  A
+  micro-batch file carries none: its ~12 unique ids are a ~500 B
+  PLAIN-encoded chunk, cheaper to read than any filter, while a filter
+  sized for 10^6 ids would make each such file ~1 MB.
 
 At 100 TB the partition count, not the byte count, is the failure mode:
 one `repartition` on the partition column before the write keeps it to
@@ -26,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 MAX_ATTACHMENT_BYTES = 5 * 1024 * 1024  # multer cap, audit.middleware.ts:10
+BLOOM_COL = "transaction_id"  # the point-lookup column
 
 
 def with_audit_date(df: DataFrame, ts_col: str = "timestamp") -> DataFrame:
@@ -39,22 +44,16 @@ def write_date_partitioned(
     ts_col: str = "timestamp",
     sort_col: str | None = None,
     mode: str = "append",
-    bloom_col: str | None = "transaction_id",
 ) -> None:
     """O-3 + O-25: date-partitioned parquet append with skipping-friendly
     layout.  ``repartition(partition_col)`` coalesces each date's rows into
     the same tasks (small-file control); ``sortWithinPartitions`` makes the
-    row-group stats on the sort column tight."""
+    row-group stats on the sort column tight.  No bloom filter: these are
+    micro-batch-sized files; ``compact_partitions`` adds one."""
     out = with_audit_date(df, ts_col).repartition(F.col("audit_date"))
     if sort_col:
         out = out.sortWithinPartitions(F.col("audit_date"), F.col(sort_col).desc())
-    writer = out.write.mode(mode).partitionBy("audit_date")
-    if bloom_col and bloom_col in df.columns:
-        writer = (
-            writer.option(f"parquet.bloom.filter.enabled#{bloom_col}", "true")
-            .option(f"parquet.bloom.filter.expected.ndv#{bloom_col}", "1000000")
-        )
-    writer.parquet(path)
+    out.write.mode(mode).partitionBy("audit_date").parquet(path)
 
 
 def upsert_by_partition(
@@ -258,16 +257,29 @@ def compact_partitions(spark: SparkSession, table_path: str) -> int:
     coalescing).  Streaming appends accumulate one file per micro-batch
     per date — at 100 TB the file COUNT, not the byte count, kills scan
     planning and S3 listing.  Dynamic partition overwrite replaces each
-    partition atomically; returns the number of partitions rewritten."""
+    partition atomically; returns the number of partitions rewritten.
+
+    The compacted files carry the ``transaction_id`` bloom filter, sized
+    to the row count of the largest date rewritten (the same one job that
+    counts the dates counts their rows)."""
     df = spark.read.parquet(table_path)
     if "audit_date" not in df.columns:
         raise ValueError(f"{table_path} is not audit_date-partitioned")
-    n_parts = df.select("audit_date").distinct().count()
-    _dynamic_overwrite(spark, df.repartition(F.col("audit_date")), table_path)
-    return n_parts
+    rows = df.groupBy("audit_date").count().collect()
+    options = {}
+    if rows and BLOOM_COL in df.columns:
+        options = {
+            f"parquet.bloom.filter.enabled#{BLOOM_COL}": "true",
+            f"parquet.bloom.filter.expected.ndv#{BLOOM_COL}":
+                str(max(r["count"] for r in rows)),
+        }
+    _dynamic_overwrite(spark, df.repartition(F.col("audit_date")), table_path,
+                       options)
+    return len(rows)
 
 
-def _dynamic_overwrite(spark: SparkSession, df: DataFrame, path: str) -> None:
+def _dynamic_overwrite(spark: SparkSession, df: DataFrame, path: str,
+                       options: dict[str, str] | None = None) -> None:
     """overwrite mode=dynamic: only partitions present in `df` are
     replaced; everything else on disk survives.
 
@@ -280,6 +292,7 @@ def _dynamic_overwrite(spark: SparkSession, df: DataFrame, path: str) -> None:
     streaming/enrich.py and vector_index.py already use."""
     (df.write.mode("overwrite")
      .option("partitionOverwriteMode", "dynamic")
+     .options(**(options or {}))
      .partitionBy("audit_date").parquet(path))
 
 

@@ -14,8 +14,11 @@ into one streaming query per landing prefix:
   hand-built 10-object/100 ms upload batching
   (``s3.service.ts:69-106``); `availableNow` drains a backlog.
 * **foreachBatch** writes valid rows to date-partitioned bronze parquet
-  and rejects to a JSON quarantine (O-27) in one source pass (batch df is
-  persisted across the two writes).
+  and rejects to a JSON quarantine (O-27).  The reject count rides the
+  bronze write as an ``Observation``, so a clean micro-batch runs one
+  write action and leaves no quarantine file — the reference likewise touches its
+  failure side channel only when a record fails
+  (``processQueue.ts:55-66``).
 * **metrics** (O-9): `observe()` + a `StreamingQueryListener` reproduce
   the CloudWatch RequestsProcessed / FailedRecords / ProcessingTime
   counters (``processQueue.ts:256-293``) engine-side.
@@ -31,7 +34,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
 
@@ -42,7 +45,7 @@ from data_ingestion_system_spark.sources.ingest import (
     project_requests,
     project_responses,
     read_landing,
-    validate_split,
+    rejected,
 )
 from data_ingestion_system_spark.sources.writers import write_date_partitioned
 
@@ -82,11 +85,18 @@ def _observed(df: DataFrame, kind: str) -> DataFrame:
     return df.observe(
         OBS_NAME,
         F.count(F.lit(1)).alias(processed),
-        F.sum(
-            (F.col("_corrupt").isNotNull() | F.col("transactionId").isNull())
-            .cast("long")
-        ).alias("FailedRecords"),
+        F.sum(rejected().cast("long")).alias("FailedRecords"),
     )
+
+
+def _counts(observation: Observation) -> dict[str, int] | None:
+    """The observed counts, or None when the observed stage was dropped.
+    Adaptive execution replaces a shuffle stage that produced no rows by
+    an empty relation, and the metrics collected in that stage go with
+    it: a write that lands no valid row may report nothing (None then
+    means no row landed and the reject count is unknown), and
+    ``Observation.get`` fails on the empty row instead of returning."""
+    return observation.get if observation._jo.getRow().length() else None
 
 
 def start_ingest_stream(
@@ -131,13 +141,22 @@ def start_ingest_stream(
         )
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
+        # Persisted because a batch with rejects is read twice.  Deciding
+        # with a count job first costs more than the quarantine write it
+        # saves, so the counts ride the bronze write instead.
         batch_df.persist()
         try:
-            valid, bad = validate_split(batch_df)
+            bad, counts = rejected(), Observation()
+            valid = batch_df.observe(
+                counts, F.count_if(bad).alias("rejects"),
+                F.count_if(~bad).alias("rows"),
+            ).filter(~bad)
             write_date_partitioned(project(valid), bronze_dir, ts_col=ts_col,
                                    sort_col=ts_col)
-            bad.write.mode("append").json(quarantine_dir)
-            if result_cache is not None:
+            landed = _counts(counts)
+            if landed is None or landed["rejects"]:
+                batch_df.filter(bad).write.mode("append").json(quarantine_dir)
+            if landed and landed["rows"] and result_cache is not None:
                 result_cache.invalidate_all()
         finally:
             batch_df.unpersist()

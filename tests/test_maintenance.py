@@ -74,6 +74,44 @@ def test_compaction_reduces_file_count(spark, tmp_path):
     assert spark.read.parquet(table).count() == 5  # no data change
 
 
+def _bloom_offsets(spark, path):
+    """Bloom filter offset of each ``transaction_id`` column chunk in one
+    parquet file (-1 where there is none), read through parquet-mr."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    src = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        jvm.org.apache.hadoop.fs.Path(path), conf)
+    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(src)
+    try:
+        return [c.getBloomFilterOffset()
+                for b in reader.getFooter().getBlocks()
+                for c in b.getColumns()
+                if c.getPath().toDotString() == "transaction_id"]
+    finally:
+        reader.close()
+
+
+def test_bloom_filter_only_on_compacted_files(spark, tmp_path):
+    """Micro-batch files carry no bloom filter (a few ids read cheaper
+    than any filter); compaction writes one on the lookup column."""
+    table = str(tmp_path / "bronze")
+    part_dir = os.path.join(table, "audit_date=2024-03-01")
+    for i in range(3):
+        write_date_partitioned(
+            _rows(spark, [(f"t{i}{j}", "2024-03-01 10:00:00", 200)
+                          for j in range(4)]), table)
+    small = [os.path.join(part_dir, f) for f in os.listdir(part_dir)
+             if f.endswith(".parquet")]
+    assert small and all(_bloom_offsets(spark, f) == [-1] for f in small)
+    assert all(os.path.getsize(f) < 10_000 for f in small)
+
+    assert compact_partitions(spark, table) == 1
+    big = [os.path.join(part_dir, f) for f in os.listdir(part_dir)
+           if f.endswith(".parquet")]
+    assert big and all(min(_bloom_offsets(spark, f)) > 0 for f in big)
+    assert spark.read.parquet(table).count() == 12
+
+
 def test_scd2_versioning(spark):
     """Two update batches produce a contiguous, correctly-closed version
     chain per key; untouched keys pass through byte-identical."""

@@ -140,6 +140,84 @@ def test_batch_commit_invalidates_result_cache(spark, dirs):
     assert cache.get("audit:{}") is None  # fresh data evicted the stale top-k
 
 
+def _drain_requests(spark, dirs, **kw):
+    q = start_ingest_stream(
+        spark, dirs["req_landing"], dirs["req_bronze"], dirs["quarantine"],
+        dirs["ckpt_req"], kind="request", available_now=True, **kw)
+    q.awaitTermination(120)
+    return q
+
+
+def _part_files(path):
+    import glob
+
+    return glob.glob(f"{path}/part-*")
+
+
+@pytest.mark.parametrize("landing", ["clean", "mixed", "rejects_only"])
+def test_quarantine_and_cache_follow_the_batch(spark, dirs, landing):
+    """The quarantine is written only for rejects: a clean micro-batch
+    leaves no quarantine part file, a corrupt file quarantines exactly
+    that row.  The result cache is flushed only when rows land, so a
+    batch of rejects alone keeps the cached entry.  The observed
+    CloudWatch counters are the same in every case."""
+    import os
+    import time
+
+    from data_ingestion_system_spark.plans.cache import ResultCache
+
+    for name in os.listdir(dirs["req_landing"]):
+        if landing != "mixed" and (name == "bad.json") == (landing == "clean"):
+            os.remove(f"{dirs['req_landing']}/{name}")
+    good, bad = (0 if landing == "rejects_only" else 2), int(landing != "clean")
+    cache = ResultCache()
+    cache.put("audit:{}", ["rows"])
+    collector = MetricsCollector()
+    spark.streams.addListener(collector)
+    try:
+        _drain_requests(spark, dirs, result_cache=cache)
+        bronze = _part_files(f"{dirs['req_bronze']}/audit_date=*")
+        assert (spark.read.parquet(*bronze).count() if bronze else 0) == good
+        if bad:
+            quarantined = spark.read.json(dirs["quarantine"]).collect()
+            assert [r._corrupt for r in quarantined] == ["{nope"]
+        else:
+            assert _part_files(dirs["quarantine"]) == []
+        deadline = time.monotonic() + 30  # listener events arrive async
+        while not collector.batches and time.monotonic() < deadline:
+            time.sleep(0.05)
+        assert collector.totals.get("RequestsProcessed") == good + bad
+        assert collector.totals.get("FailedRecords") == bad
+    finally:
+        spark.streams.removeListener(collector)
+    assert (cache.get("audit:{}") is None) == bool(good)
+
+
+def test_clean_batch_runs_only_the_bronze_write(spark, dirs, monkeypatch):
+    """A clean micro-batch's sink is one write action: every Spark job of
+    the stream's job group runs inside the bronze write (adaptive
+    execution splits that write into its stages' jobs), none after it
+    for the quarantine or for a reject count."""
+    import os
+
+    from data_ingestion_system_spark.streaming import pipeline
+
+    os.remove(f"{dirs['req_landing']}/bad.json")
+    tracker = spark.sparkContext.statusTracker()
+    bronze_write, in_write = pipeline.write_date_partitioned, []
+
+    def write(*args, **kwargs):
+        group = spark.sparkContext.getLocalProperty("spark.jobGroup.id")
+        before = set(tracker.getJobIdsForGroup(group))
+        bronze_write(*args, **kwargs)
+        in_write.extend(set(tracker.getJobIdsForGroup(group)) - before)
+
+    monkeypatch.setattr(pipeline, "write_date_partitioned", write)
+    q = _drain_requests(spark, dirs)
+    stream_jobs = set(tracker.getJobIdsForGroup(str(q.runId)))
+    assert in_write and stream_jobs == set(in_write)
+
+
 def test_checkpoint_no_reprocess(spark, dirs):
     _drain(spark, dirs)
     n1 = spark.read.parquet(dirs["req_bronze"]).count()

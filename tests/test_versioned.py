@@ -36,6 +36,38 @@ def test_append_shares_parent_dirs_without_rewrite(spark, tmp_path):
     assert v1["dirs"][0] in v2["dirs"] and len(v2["dirs"]) == 2
 
 
+def test_read_snapshot_uses_the_stored_schema(spark, tmp_path):
+    """The commit record carries the schema, so resolving a snapshot runs
+    no inference job; a record written without one still reads."""
+    import json
+
+    from perfbench.tracing import JobCounter
+
+    root = str(tmp_path / "t")
+    V.commit_snapshot(_df(spark, [1, 2]), root)
+    V.commit_snapshot(_df(spark, [3]), root, mode="append")
+    inferred = spark.read.parquet(
+        *[os.path.join(root, d) for d in V.versions(root)[-1]["dirs"]])
+    jobs = JobCounter(spark, True)
+    with jobs.group("test-read-snapshot"):
+        snap = V.read_snapshot(spark, root)
+    assert jobs.counts("test-read-snapshot")["jobs"] == 0
+    assert snap.schema == inferred.schema
+    assert _ids(snap) == _ids(inferred) == [1, 2, 3]
+    # rollback and checkpoint records carry the schema forward
+    V.rollback(root, 1)
+    assert V.checkpoint_snapshot(spark, root) == 4
+    assert all("schema" in rec for rec in V.versions(root))
+    # a record from before schemas were stored reads by inference
+    head = V._record_path(root, 4)
+    with open(head) as f:
+        rec = json.load(f)
+    del rec["schema"]
+    with open(head, "w") as f:
+        json.dump(rec, f)
+    assert _ids(V.read_snapshot(spark, root)) == [1, 2]
+
+
 def test_crashed_writer_is_invisible_and_vacuumable(spark, tmp_path):
     root = str(tmp_path / "t")
     V.commit_snapshot(_df(spark, [1]), root)
