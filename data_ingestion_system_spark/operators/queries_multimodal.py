@@ -218,8 +218,7 @@ def multimodal_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         _media_from_documents(spark, sf_dir, parallel=True))
     return near_dup_pairs(feats, threshold=0.999,
                           pair_budget=_PAIR_BUDGET,
-                          precomputed_mass=_session_mass(spark, sf_dir,
-                                                         feats))
+                          mass_key=(sf_dir, "media_features"))
 
 
 # candidate-mass budget for the pair query: ~8x the true pair count
@@ -227,27 +226,9 @@ def multimodal_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # order of magnitude above the sf1 fixture's measured 4.6M so every
 # oracle-graded scale stays on the exact path, while the sf10
 # clique-quadratic fixture (and any real clique blowup) crosses it.
+# The pairs and clusters queries pass one ``mass_key`` per fixture, so
+# the gate's eager mass pre-pass runs once per session.
 _PAIR_BUDGET = 10_000_000
-
-
-def _session_mass(spark: SparkSession, sf_dir: str, feats: DataFrame) \
-        -> float:
-    """Memoized LSH candidate mass for this fixture's media features
-    (r9, VERDICT r8 #7): near_dup_pairs' budget gate is EAGER — the
-    mass pre-pass (decode + feature + bucket UDF chain + one agg) runs
-    at plan-BUILD time — so the pairs and clusters queries over one
-    read-only fixture should measure it once per session, not once
-    each.  Keyed on everything the mass depends on: the fixture path
-    and the (centering, 12-bit x 8-table) bucketing config, which is
-    pinned inside both candidate_pair_mass and near_dup_pairs."""
-    from data_ingestion_system_spark.operators.multimodal import (
-        candidate_pair_mass,
-    )
-    from data_ingestion_system_spark.plans import memo
-
-    return memo.session_scalar(
-        spark, ("media_pair_mass", sf_dir, "centered-12x8"),
-        lambda: candidate_pair_mass(feats))
 
 
 _VIDEO_SQL = """
@@ -397,8 +378,8 @@ def multimodal_near_dup_clusters(spark: SparkSession, sf_dir: str) \
         _media_from_documents(spark, sf_dir, parallel=True))
     pairs = near_dup_pairs(feats, threshold=0.999,
                            pair_budget=_PAIR_BUDGET,
-                           precomputed_mass=_session_mass(
-                               spark, sf_dir, feats)).select("id_a", "id_b")
+                           mass_key=(sf_dir, "media_features")).select(
+        "id_a", "id_b")
     return D.connected_components(pairs).select(
         F.col("node").alias("media_id"), "cluster_id")
 

@@ -1,11 +1,14 @@
 """Session-scoped scalar memoization for plan-shape decisions.
 
 Some operators are EAGER by necessity: the shape of the plan they
-return depends on a statistic of the input (e.g. the candidate-pair
-mass that decides exact vs LSH-gated dedup — ``operators/dedup.py``),
-so they must run one small Spark job at build time.  When several
-declared queries over the SAME fixture make the SAME decision, paying
-that pre-pass per query is pure waste — it was round 8's only measured
+return depends on a statistic of the input, so they must run one small
+Spark job at build time.  The callers are the two pair-budget gates,
+``jaccard_pairs`` (exact vs LSH-gated text dedup) and
+``near_dup_pairs`` (exact vs bucket-star media pairs), and both reach
+this module through one helper, ``operators/dedup.py::candidate_mass``,
+each under its own key namespace.  When several declared queries over
+the SAME fixture make the SAME decision, paying that pre-pass per
+query is pure waste — it was round 8's only measured
 bench cost (VERDICT r8 #1: `dedup_canonical_pick` 4.15s -> 6.57s, the
 repeated shingle scan + occupancy aggregate).
 
@@ -19,7 +22,7 @@ repeated shingle scan + occupancy aggregate).
   for the application's lifetime.  That holds for every caller today:
   the graded fixtures (``sf_dir`` parquet) are read-only, and the key
   includes every parameter the statistic depends on (path, column,
-  shingle width, bucketing config).  A caller over mutable data must
+  shingle width, blocking column).  A caller over mutable data must
   fold a content version into ``key`` (as ``plans/cache.py`` does for
   the TTL result cache) or not memoize.
 * **Size** — values are scalars (floats/small tuples); the dict stays a

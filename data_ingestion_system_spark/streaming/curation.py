@@ -43,13 +43,12 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from data_ingestion_system_spark.operators.dedup import (
+    minhash_lsh_pairs,
     normalized_text,
-    verify_candidates,
     word_shingles,
 )
 from data_ingestion_system_spark.operators.dedup_index import (
     append_index,
-    banded_rows,
     probe_index,
     write_index,
 )
@@ -107,23 +106,14 @@ def _clean_store(spark: SparkSession, path: str) -> DataFrame:
 
 
 def _self_near_dups(batch: DataFrame, threshold: float) -> DataFrame:
-    """Verified near-dup pairs WITHIN one batch: banded self-join on
-    (band, bh) with id_a < id_b, then exact-Jaccard verify.  min-id
-    wins (the same convention as the exact-dedup pass), so the returned
-    ``batch_id`` column is the rejected larger id and ``corpus_id`` the
-    kept smaller one — schema-identical to the history probe's hits."""
-    banded = banded_rows(batch)
-    cands = (
-        banded.select(F.col("doc_id").alias("id_a"), "band", "bh")
-        .join(banded.select(F.col("doc_id").alias("id_b"), "band", "bh"),
-              ["band", "bh"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    """Verified near-dup pairs WITHIN one batch: the MinHash-LSH pair
+    pipeline (operators/dedup.py::minhash_lsh_pairs, the index's
+    banding) over the batch alone.  min-id wins (the same convention as
+    the exact-dedup pass), so the returned ``batch_id`` column is the
+    rejected larger id and ``corpus_id`` the kept smaller one —
+    schema-identical to the history probe's hits."""
     sh = word_shingles(batch.select("doc_id", "text"), "doc_id", "text")
-    verified = verify_candidates(sh, cands)
-    return (verified.filter(F.col("jaccard") >= threshold)
+    return (minhash_lsh_pairs(sh).filter(F.col("jaccard") >= threshold)
             .select(F.col("id_b").alias("batch_id"),
                     F.col("id_a").alias("corpus_id"),
                     F.round("jaccard", 4).alias("jaccard")))

@@ -3,6 +3,7 @@ hash-based pipelines the DuckDB oracle can't replicate."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_ingestion_system_spark.operators import dedup as D
@@ -422,58 +423,85 @@ def test_jaccard_pair_budget_gate(spark):
     assert lsh == exact
 
 
-def test_jaccard_mass_memoized_per_session(spark):
-    """r9 (VERDICT r8 #1): with ``mass_key`` set, the eager candidate-
-    mass pre-pass runs ONCE per (application, key) — later builds with
-    the same key reuse the memoized mass instead of re-running the
-    shingle scan + occupancy aggregate.
+def _text_gate(spark):
+    sh = D.word_shingles(_corpus(spark), "doc_id", "text", n=3, hashed=True)
+    return lambda key: D.jaccard_pairs(sh, pair_budget=10**9, mass_key=key)
+
+
+def _media_gate(spark):
+    import numpy as np
+
+    from data_ingestion_system_spark.operators.multimodal import (
+        MEDIA_SCHEMA,
+        media_features,
+        near_dup_pairs,
+    )
+
+    rng = np.random.default_rng(5)
+    blobs = [rng.integers(0, 256, 2048, dtype=np.uint8).tobytes()
+             for _ in range(12)]
+    blobs += [blobs[0], blobs[1]]  # byte-identical dups of ids 0 and 1
+    feats = media_features(spark.createDataFrame(
+        [(i, ("image", "audio", "video")[i % 3], b, (None,) * 5)
+         for i, b in enumerate(blobs)], MEDIA_SCHEMA))
+    return lambda key: near_dup_pairs(feats, threshold=0.999,
+                                      pair_budget=10**9, mass_key=key)
+
+
+@pytest.mark.parametrize("gate", [_text_gate, _media_gate],
+                         ids=["text", "media"])
+def test_jaccard_mass_memoized_per_session(spark, gate):
+    """With ``mass_key`` set, a pair-budget gate's eager candidate-mass
+    pre-pass runs ONCE per (application, key) — later builds with the
+    same key reuse the memoized mass instead of re-measuring.  Both
+    gates: the text one (``jaccard_pairs``) and the media one
+    (``near_dup_pairs``).
 
     Proven behaviorally, not by timing: after the first build memoizes
-    the true (tiny) mass, the cache slot is overwritten with a huge
+    the true (tiny) mass, its memo slot is overwritten with a huge
     sentinel — if a second build re-measured, it would see the true
-    mass and stay on the exact path; instead it must trust the cache
-    and take the LSH gate (loud warning).  After memo.clear() it
-    re-measures and runs exact again.
+    mass and stay on the exact path; instead it must trust the memo
+    and take the gated path (loud warning).  After memo.clear() it
+    re-measures and runs exact again.  Every gated row is a true pair
+    with the exact path's score (jaccard or cosine, the last column).
     """
     import warnings
 
     from data_ingestion_system_spark.plans import memo
 
-    df = _corpus(spark)
-    sh = D.word_shingles(df, "doc_id", "text", n=3, hashed=True)
-    key = ("test-memo", "corpus")
-    full_key = ("jaccard_pairs_mass", key)
+    build = gate(spark)
+    key = ("test-memo", gate.__name__)
+
+    def scored(df):
+        return {(r.id_a, r.id_b): r[-1] for r in df.collect()}
 
     memo.clear()
-    assert not memo.contains(spark, full_key)
     with warnings.catch_warnings():
         warnings.simplefilter("error")  # under budget: exact, silent
         # PySpark leaves collect()'s result socket to GC
         warnings.filterwarnings("ignore", category=ResourceWarning)
-        first = D.jaccard_pairs(sh, pair_budget=10**9, mass_key=key)
-    assert memo.contains(spark, full_key)
-    exact = {(r.id_a, r.id_b): r.jaccard for r in first.collect()}
+        first = build(key)
+    (slot,) = memo._CACHE  # the first build memoized its mass
+    exact = scored(first)
+    assert exact
 
     # poison the slot: a re-measure would restore the true tiny mass
-    memo._CACHE[(spark.sparkContext.applicationId, full_key)] = float(
-        10**12)
+    memo._CACHE[slot] = float(10**12)
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        gated = D.jaccard_pairs(sh, pair_budget=10**9, mass_key=key)
+        gated = build(key)
         assert any("pair_budget" in str(x.message) for x in w), \
             "second build must USE the memoized mass, not re-measure"
-    # the LSH path still emits exact-Jaccard rows for every pair it keeps
-    lsh = {(r.id_a, r.id_b): r.jaccard for r in gated.collect()}
-    for pair, j in lsh.items():
-        assert pair in exact and abs(j - exact[pair]) < 1e-12
+    for pair, score in scored(gated).items():
+        assert pair in exact and abs(score - exact[pair]) < 1e-12
 
     memo.clear()
     with warnings.catch_warnings():
         warnings.simplefilter("error")  # re-measured: exact again
         warnings.filterwarnings("ignore", category=ResourceWarning)
-        again = D.jaccard_pairs(sh, pair_budget=10**9, mass_key=key)
-    assert {(r.id_a, r.id_b): r.jaccard
-            for r in again.collect()} == exact
+        again = build(key)
+    assert list(memo._CACHE) == [slot]
+    assert scored(again) == exact
     memo.clear()
 
 

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from data_ingestion_system_spark.catalog import Catalog
 from data_ingestion_system_spark.operators.dedup_index import (
     append_index,
+    banded_rows,
     probe_index,
     write_index,
 )
@@ -145,3 +146,34 @@ def test_probe_keeps_one_index_root_per_fixture(spark, sf_dir, tmp_path,
     second = sorted(dedup_index_probe(spark, str(fixture)).collect())
     assert len(roots()) == 1
     assert second == first
+
+
+# (band, bh, doc_id) of the 3-doc corpus below, hard-coded: indexes
+# already on disk are probed by rows hashed this way, so the banding
+# hash must never drift.
+_PINNED_BANDS = [
+    (0, -7412870726905375363, 3), (0, -6060656293214025124, 2),
+    (0, 1260708420304733487, 1), (1, -4392019293242843723, 3),
+    (1, -3944555580378433876, 2), (1, 4943695809189903519, 1),
+    (2, -8975777719737466476, 3), (2, 2402449568046257734, 2),
+    (2, 8918134733793273666, 1), (3, -7313755866136422478, 1),
+    (3, 2299587750219075800, 2), (3, 2956819271111035124, 3),
+    (4, -8271432284949871872, 2), (4, -7691564517460524167, 3),
+    (4, 3627636644225566618, 1), (5, -7696654032450745501, 1),
+    (5, -6866613234037281557, 3), (5, -2173250206064235945, 2),
+    (6, -8495754385367698900, 3), (6, -1768720076996990304, 1),
+    (6, -659656161174013481, 2), (7, -8659308843637110990, 3),
+    (7, 478226448854445937, 2), (7, 4853631893044993807, 1),
+]
+
+
+def test_banded_rows_hash_is_pinned(spark):
+    """The index payload of a fixed corpus is bit-identical to the rows
+    already-written indexes hold, so new batches still probe them."""
+    docs = spark.createDataFrame([
+        (1, "the quick brown fox jumps over the lazy dog"),
+        (2, "the quick brown fox leaps over the lazy dog"),
+        (3, "pack my box with five dozen liquor jugs"),
+    ], "doc_id long, text string")
+    got = sorted(tuple(r) for r in banded_rows(docs).collect())
+    assert got == _PINNED_BANDS

@@ -52,6 +52,7 @@ def dirs(tmp_path):
 
 
 def _drain(spark, dirs):
+    queries = []
     for kind, landing, bronze, ckpt in (
         ("request", dirs["req_landing"], dirs["req_bronze"], dirs["ckpt_req"]),
         ("response", dirs["resp_landing"], dirs["resp_bronze"], dirs["ckpt_resp"]),
@@ -61,13 +62,27 @@ def _drain(spark, dirs):
             kind=kind, available_now=True,
         )
         q.awaitTermination(120)
+        queries.append(q)
+    return queries
+
+
+def _await_listener(collector, queries, timeout=30.0):
+    """Wait until ``collector`` has seen every progress event the drained
+    ``queries`` report: listener events arrive asynchronously, after
+    ``awaitTermination`` returns."""
+    import time
+
+    expected = sum(len(q.recentProgress) for q in queries)
+    deadline = time.monotonic() + timeout
+    while collector.batches < expected and time.monotonic() < deadline:
+        time.sleep(0.05)
 
 
 def test_stream_to_silver(spark, dirs):
     collector = MetricsCollector()
     spark.streams.addListener(collector)
     try:
-        _drain(spark, dirs)
+        queries = _drain(spark, dirs)
 
         bronze_req = spark.read.parquet(dirs["req_bronze"])
         assert bronze_req.count() == 2
@@ -84,6 +99,7 @@ def test_stream_to_silver(spark, dirs):
         assert rows["t2"].status_code is None     # uncorrelated request
 
         # O-9 metrics observed on the stream
+        _await_listener(collector, queries)
         assert collector.totals.get("RequestsProcessed", 0) == 3  # incl. corrupt row
         assert collector.totals.get("ResponsesProcessed", 0) == 3
         assert collector.totals.get("FailedRecords", 0) == 1
@@ -162,7 +178,6 @@ def test_quarantine_and_cache_follow_the_batch(spark, dirs, landing):
     batch of rejects alone keeps the cached entry.  The observed
     CloudWatch counters are the same in every case."""
     import os
-    import time
 
     from data_ingestion_system_spark.plans.cache import ResultCache
 
@@ -175,7 +190,7 @@ def test_quarantine_and_cache_follow_the_batch(spark, dirs, landing):
     collector = MetricsCollector()
     spark.streams.addListener(collector)
     try:
-        _drain_requests(spark, dirs, result_cache=cache)
+        q = _drain_requests(spark, dirs, result_cache=cache)
         bronze = _part_files(f"{dirs['req_bronze']}/audit_date=*")
         assert (spark.read.parquet(*bronze).count() if bronze else 0) == good
         if bad:
@@ -183,9 +198,7 @@ def test_quarantine_and_cache_follow_the_batch(spark, dirs, landing):
             assert [r._corrupt for r in quarantined] == ["{nope"]
         else:
             assert _part_files(dirs["quarantine"]) == []
-        deadline = time.monotonic() + 30  # listener events arrive async
-        while not collector.batches and time.monotonic() < deadline:
-            time.sleep(0.05)
+        _await_listener(collector, [q])
         assert collector.totals.get("RequestsProcessed") == good + bad
         assert collector.totals.get("FailedRecords") == bad
     finally:
