@@ -39,15 +39,15 @@ def cosine(a: Column, b: Column) -> Column:
 
 
 def _dot_sql(a: str, b: str, dim: int) -> str:
-    """SQL text of the unrolled left-associated dot product.  The SQL
-    parser's ``+`` is left-associative, so the parsed tree is node-for-
-    node the one the old per-term Column loop built."""
+    """SQL text of the unrolled left-associated dot product (the SQL
+    parser's ``+`` is left-associative)."""
     return " + ".join(f"(({a})[{i}] * ({b})[{i}])" for i in range(dim))
 
 
-def dot_fixed(a: Column | str, b: Column | str, dim: int) -> Column:
+def dot_fixed(a: str, b: str, dim: int) -> Column:
     """Unrolled dot product for a KNOWN dimension: ``a[0]*b[0] + ... +
-    a[dim-1]*b[dim-1]`` as plain arithmetic.
+    a[dim-1]*b[dim-1]`` as plain arithmetic over two SQL fragments
+    (column names or expressions).
 
     Spark's higher-order ``aggregate``/``zip_with`` lambdas are evaluated
     *interpreted*, per element, outside whole-stage codegen — on millions
@@ -56,32 +56,19 @@ def dot_fixed(a: Column | str, b: Column | str, dim: int) -> Column:
     the fold order identical to ``dot()`` and to DuckDB's
     ``list_dot_product``, so oracle comparisons stay bit-exact.
 
-    Pass SQL FRAGMENTS (column names or expressions), not Columns, on
-    hot build paths (r9, measured): constructing ``3*dim`` Column
-    objects costs one py4j round-trip each — ~0.6-1.2 s of pure driver
-    time per cosine call site at dim=64 — while one ``F.expr`` string
-    parses JVM-side in milliseconds into the IDENTICAL tree (0-based
-    ``[i]`` is the same GetArrayItem).  The Column path is kept for
-    callers that already hold composite Column objects."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_dot_sql(a, b, dim))
-    terms = [a[i] * b[i] for i in range(dim)]
-    acc = terms[0]
-    for t in terms[1:]:
-        acc = acc + t
-    return acc
+    The operands are SQL fragments, not Columns (r9, measured):
+    constructing ``3*dim`` Column objects costs one py4j round-trip
+    each — ~0.6-1.2 s of pure driver time per cosine call site at
+    dim=64 — while one ``F.expr`` string parses JVM-side in
+    milliseconds (0-based ``[i]`` is GetArrayItem)."""
+    return F.expr(_dot_sql(a, b, dim))
 
 
-def cosine_fixed(a: Column | str, b: Column | str, dim: int) -> Column:
+def cosine_fixed(a: str, b: str, dim: int) -> Column:
     """Codegen-friendly cosine for a known dimension (see dot_fixed)."""
-    if isinstance(a, str) and isinstance(b, str):
-        da = f"CAST({a} AS ARRAY<DOUBLE>)"
-        db = f"CAST({b} AS ARRAY<DOUBLE>)"
-        return F.expr(
-            f"({_dot_sql(da, db, dim)}) / "
-            f"(SQRT({_dot_sql(da, da, dim)}) * "
-            f"SQRT({_dot_sql(db, db, dim)}))")
-    a, b = as_double(a), as_double(b)
-    return dot_fixed(a, b, dim) / (
-        F.sqrt(dot_fixed(a, a, dim)) * F.sqrt(dot_fixed(b, b, dim))
-    )
+    da = f"CAST({a} AS ARRAY<DOUBLE>)"
+    db = f"CAST({b} AS ARRAY<DOUBLE>)"
+    return F.expr(
+        f"({_dot_sql(da, db, dim)}) / "
+        f"(SQRT({_dot_sql(da, da, dim)}) * "
+        f"SQRT({_dot_sql(db, db, dim)}))")

@@ -170,7 +170,7 @@ def candidate_mass(rel: DataFrame, keys: list[str],
     return memo.session_scalar(rel.sparkSession, mass_key, measure)
 
 
-def _exact_jaccard_pairs(h: DataFrame, id_col: str) -> DataFrame:
+def _exact_jaccard_pairs(h: DataFrame, id_col: str, *extra: Column) -> DataFrame:
     a = h.select(F.col(id_col).alias("id_a"), "sh")
     b = h.select(F.col(id_col).alias("id_b"), "sh")
     common = (
@@ -179,18 +179,21 @@ def _exact_jaccard_pairs(h: DataFrame, id_col: str) -> DataFrame:
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("n_common"))
     )
-    return _attach_jaccard(common, h, id_col)
+    return _attach_jaccard(common, h, id_col, *extra)
 
 
 def _attach_jaccard(common: DataFrame, h: DataFrame,
-                    id_col: str) -> DataFrame:
+                    id_col: str, *extra: Column) -> DataFrame:
+    """Join both docs' set sizes (``n_a``, ``n_b``) onto the
+    ``n_common`` pairs and select ``id_a, id_b, n_common, *extra,
+    jaccard``; ``extra`` may read the sizes."""
     sizes = h.groupBy(id_col).agg(F.count("*").alias("n_sh"))
     sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
     sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
     return (
         common.join(sa, "id_a").join(sb, "id_b")
         .select(
-            "id_a", "id_b", "n_common",
+            "id_a", "id_b", "n_common", *extra,
             (F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")))
             .alias("jaccard"),
         )
@@ -648,29 +651,11 @@ def containment_pairs(sh: DataFrame, id_col: str = "doc_id") -> DataFrame:
     common-shingle join shuffles 8-byte hash longs, set sizes rejoin as
     aggregates; at corpus scale candidate generation goes through
     MinHash-LSH first, exactly as for the symmetric metric."""
-    h = _hashed_shingles(sh, id_col)
-    a = h.select(F.col(id_col).alias("id_a"), "sh")
-    b = h.select(F.col(id_col).alias("id_b"), "sh")
-    common = (
-        a.join(b, "sh")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_common"))
-    )
-    sizes = h.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
-    return (
-        common.join(sa, "id_a").join(sb, "id_b")
-        .select(
-            "id_a", "id_b",
-            (F.col("n_common") / F.least(F.col("n_a"), F.col("n_b")))
-            .alias("containment"),
-            (F.col("n_common")
-             / (F.col("n_a") + F.col("n_b") - F.col("n_common")))
-            .alias("jaccard"),
-        )
-    )
+    containment = (F.col("n_common") / F.least(F.col("n_a"), F.col("n_b"))
+                   ).alias("containment")
+    return (_exact_jaccard_pairs(_hashed_shingles(sh, id_col), id_col,
+                                 containment)
+            .select("id_a", "id_b", "containment", "jaccard"))
 
 
 # --- Bloom-filter ingest prefilter -----------------------------------------

@@ -39,6 +39,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from data_ingestion_system_spark.functions.vectors import cosine_fixed
+
 MEDIA_KINDS = ("image", "audio", "video")
 
 META_SCHEMA = T.StructType([
@@ -336,7 +338,6 @@ def near_dup_pairs(feats: DataFrame, threshold: float = 0.999,
     the feature set (fixture path and featurizer); the centering and
     12-bit x 8-table bucketing are pinned here, and ``block_col`` is
     folded into the memo key.  Callers over mutable inputs omit it."""
-    from data_ingestion_system_spark.functions.vectors import cosine_fixed
     from data_ingestion_system_spark.operators.dedup import candidate_mass
     from data_ingestion_system_spark.operators.similarity import srp_buckets_udf
 
@@ -382,8 +383,7 @@ def near_dup_pairs(feats: DataFrame, threshold: float = 0.999,
                 "against its bucket-minimum anchor, exact-verified) — "
                 "run without pair_budget only if the full quadratic "
                 "pair closure is itself the product", stacklevel=2)
-            return _representative_pairs(
-                centered, banded, fc, threshold, block_col)
+            return _representative_pairs(banded, fc, threshold, block_col)
 
     cand = (
         banded.select(F.col("media_id").alias("id_a"), block_col,
@@ -395,6 +395,14 @@ def near_dup_pairs(feats: DataFrame, threshold: float = 0.999,
         .select("id_a", "id_b", block_col)
         .dropDuplicates(["id_a", "id_b"])
     )
+    return _verify_cosine(cand, fc, threshold, block_col)
+
+
+def _verify_cosine(cand: DataFrame, fc: DataFrame, threshold: float,
+                   block_col: str) -> DataFrame:
+    """Exact-cosine verify of (id_a, id_b, block) candidate edges: both
+    sides' centered features rejoin by id, and only pairs at or above
+    ``threshold`` survive as (id_a, id_b, block, cosine)."""
     return (
         cand
         .join(fc.select(F.col("media_id").alias("id_a"),
@@ -409,9 +417,8 @@ def near_dup_pairs(feats: DataFrame, threshold: float = 0.999,
     )
 
 
-def _representative_pairs(centered: DataFrame, banded: DataFrame,
-                          fc: DataFrame, threshold: float,
-                          block_col: str) -> DataFrame:
+def _representative_pairs(banded: DataFrame, fc: DataFrame,
+                          threshold: float, block_col: str) -> DataFrame:
     """Bounded-output posture for near_dup_pairs: verified BUCKET-STAR
     pairs — O(banded rows) work and output, NO within-bucket pair
     enumeration.
@@ -435,8 +442,6 @@ def _representative_pairs(centered: DataFrame, banded: DataFrame,
     bucket min) are not emitted; the exact path reports those via
     within-clique neighbors.  That is the documented price of the
     bounded summary, paid only past the budget."""
-    from data_ingestion_system_spark.functions.vectors import cosine_fixed
-
     reps = (banded.groupBy(block_col, "tbl", "bucket")
             .agg(F.min("media_id").alias("rep")))
     star = (banded.join(reps, [block_col, "tbl", "bucket"])
@@ -444,18 +449,7 @@ def _representative_pairs(centered: DataFrame, banded: DataFrame,
             .select(F.col("rep").alias("id_a"),
                     F.col("media_id").alias("id_b"), block_col)
             .dropDuplicates(["id_a", "id_b"]))
-    return (
-        star
-        .join(fc.select(F.col("media_id").alias("id_a"),
-                        F.col("fc").alias("fa")), "id_a")
-        .join(fc.select(F.col("media_id").alias("id_b"),
-                        F.col("fc").alias("fb")), "id_b")
-        .withColumn("cos_raw",
-                    cosine_fixed("fa", "fb", FEATURE_DIM))
-        .filter(F.col("cos_raw") >= threshold)
-        .select("id_a", "id_b", block_col,
-                F.round("cos_raw", 6).alias("cosine"))
-    )
+    return _verify_cosine(star, fc, threshold, block_col)
 
 
 def pack_media(binary_df: DataFrame, kind_from_ext: bool = True) -> DataFrame:

@@ -2,13 +2,16 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestion_system_spark.catalog import Catalog
-from data_ingestion_system_spark.functions.vectors import cosine_fixed
 from data_ingestion_system_spark.operators.similarity import (
     DIM,
+    exact_rerank,
+    query_cosine,
+    rank_per_query,
+    rerank_shortlist,
     topk_bruteforce,
     topk_lsh,
 )
@@ -347,8 +350,7 @@ def emb_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     The norm uses the unrolled fixed-dim dot product
     (functions/vectors.py::dot_fixed — codegen'd, left-associated, so
     DuckDB-bit-exact); one row-local map + one grouped agg, no join."""
-    from data_ingestion_system_spark.functions.vectors import as_double, dot_fixed
-    from data_ingestion_system_spark.operators.similarity import DIM
+    from data_ingestion_system_spark.functions.vectors import dot_fixed
 
     cat = Catalog(spark, sf_dir)
     v = "CAST(embedding AS ARRAY<DOUBLE>)"
@@ -1246,17 +1248,11 @@ def sim_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     lists per query.  At 100 TB you run this on a query SAMPLE, like
     sim_ann_recall, to validate the truncation before swapping the
     serving index.  Ref parity: none; north-star similarity scope."""
-    from data_ingestion_system_spark.functions.vectors import cosine_fixed
-    from pyspark.sql import Window as W
-
     corpus, queries = _corpus_queries(spark, sf_dir)
     exact = topk_bruteforce(corpus, queries, k=K).select("qid", "vec_id")
-    pscored = (corpus.crossJoin(F.broadcast(queries))
-               .filter(F.col("vec_id") != F.col("qid"))
-               .withColumn("cos_p", cosine_fixed("qv", "embedding", _MRL_PREFIX)))
-    w = W.partitionBy("qid").orderBy(F.col("cos_p").desc(), F.col("vec_id"))
-    pref = (pscored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= K)
+    pref = (exact_rerank(corpus.crossJoin(F.broadcast(queries))
+                         .filter(F.col("vec_id") != F.col("qid")),
+                         K, dim=_MRL_PREFIX)
             .select(F.col("qid").alias("pqid"),
                     F.col("vec_id").alias("pvid")))
     joined = exact.join(
@@ -1369,21 +1365,10 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
                .select(F.col("vec_id").alias("qid"),
                        F.col("label").alias("qlabel"),
                        F.col("embedding").alias("qv")))
-    scored = (
+    return exact_rerank(
         corpus.crossJoin(F.broadcast(queries))
-        .filter(F.col("label") != F.col("qlabel"))
-        .withColumn("cos_raw",
-                    cosine_fixed("qv", "embedding", DIM))
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("cos_raw").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _HARD_NEG_K)
-        .select("qid", "vec_id",
-                F.col("label").cast("bigint").alias("neg_label"),
-                F.round("cos_raw", 6).alias("cosine"), "rnk")
-    )
+        .filter(F.col("label") != F.col("qlabel")),
+        _HARD_NEG_K, F.col("label").cast("bigint").alias("neg_label"))
 
 
 @register("emb_ood_score", """
@@ -1645,20 +1630,8 @@ def sim_topk_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
                    (F.bit_count(F.col("qlo").bitwiseXOR(F.col("lo")))
                     + F.bit_count(F.col("qhi").bitwiseXOR(F.col("hi"))))
                    .cast("int").alias("hamming")))
-    wh = Window.partitionBy("qid").orderBy("hamming", "vec_id")
-    short = (ham.withColumn("hr", F.row_number().over(wh))
-             .filter(F.col("hr") <= _HAM_SHORTLIST).drop("hr"))
-    scored = (short
-              .join(corpus, "vec_id")
-              .join(F.broadcast(queries), "qid")
-              .withColumn("cos_raw",
-                          cosine_fixed("qv", "embedding", DIM)))
-    wr = Window.partitionBy("qid").orderBy(F.col("cos_raw").desc(),
-                                           F.col("vec_id"))
-    return (scored.withColumn("rnk", F.row_number().over(wr))
-            .filter(F.col("rnk") <= K)
-            .select("qid", "vec_id", "hamming",
-                    F.round("cos_raw", 6).alias("cosine"), "rnk"))
+    short = rank_per_query(ham, "hamming", _HAM_SHORTLIST).drop("rnk")
+    return rerank_shortlist(short, corpus, queries, K, "hamming")
 
 
 _RECALL_NPROBES = (1, 2, 4)
@@ -1757,10 +1730,7 @@ def sim_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     production recall probe would use — at 100 TB you measure recall on
     O(100) held-out queries, never the full corpus, and this plan's
     cost is exactly that posture."""
-    from data_ingestion_system_spark.operators.similarity import (
-        ivf_assign_udf,
-        topk_bruteforce,
-    )
+    from data_ingestion_system_spark.operators.similarity import ivf_assign_udf
 
     corpus, queries = _corpus_queries(spark, sf_dir)
     cents = _ivf_centroids(spark, sf_dir)
@@ -1788,8 +1758,7 @@ def sim_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (assigned.join(F.broadcast(probes), "cid")
                 .filter(F.col("vec_id") != F.col("qid"))
                 .select("qid", "vec_id", "probe_rank",
-                        cosine_fixed("qv", "embedding", DIM)
-                        .alias("cos_raw"))
+                        query_cosine().alias("cos_raw"))
                 .localCheckpoint(eager=True))
 
     with ThreadPoolExecutor(max_workers=2) as pool:
@@ -1802,10 +1771,7 @@ def sim_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts = []
     for np_ in _RECALL_NPROBES:
         cand = scored.filter(F.col("probe_rank") < np_)
-        w = Window.partitionBy("qid").orderBy(F.col("cos_raw").desc(),
-                                              F.col("vec_id"))
-        topk = (cand.withColumn("rnk", F.row_number().over(w))
-                .filter(F.col("rnk") <= K))
+        topk = rank_per_query(cand, F.col("cos_raw").desc(), K)
         n_hits = (topk.join(bf, ["qid", "vec_id"], "left_semi")
                   .agg(F.count("*").alias("n_hits")))
         n_cand = cand.agg(F.count("*").alias("n_candidates"))

@@ -1,34 +1,44 @@
 """Similarity search over an embedding column (north-star ops).
 
-Two strategies:
+Every vector top-k path is a filter-and-refine pair: a **candidate
+generator** that decides which (query, vector) pairs get scored, then
+ONE shared refine step, ``exact_rerank`` — exact cosine in codegen
+(``query_cosine``) and the one per-query rank (``rank_per_query``:
+``row_number`` over ``qid`` by score, ties on ascending ``vec_id``).
+Each generator also drops the query itself (``vec_id != qid``).
+
+Candidate generators:
 
 * **brute force** — broadcast the (small) query set against every
-  vector: one scan, cosine in codegen, per-query top-k via window.
-  Exact; cost linear in corpus x queries.  The right answer when the
-  query set is small, even at 100 TB (the scan is embarrassingly
-  parallel and never shuffles the corpus).
-* **multi-table SRP-LSH ANN** — L independent sign-random-projection
-  hash tables of b bits each, computed in ONE vectorized Pandas UDF
-  (a single numpy matmul per Arrow batch against the stacked
-  ``L*b x dim`` plane matrix).  Candidates = union over tables of the
-  query's bucket, deduped, then exact cosine + rank on the survivors.
-  This is the 100 TB path when the query set is large: bucket
-  assignment is a map-only pass over the corpus, and the (table,
+  vector: one scan, no shuffle of the corpus.  Exact; cost linear in
+  corpus x queries.  The right answer when the query set is small,
+  even at 100 TB (the scan is embarrassingly parallel).
+* **IVF** — coarse-quantize the corpus into inverted lists (map-only
+  Arrow assign) and score only each query's ``nprobe`` nearest lists
+  (``ivf_probes``), a broadcast equi-join on the list id.
+* **multi-table SRP-LSH** — L sign-random-projection hash tables of b
+  bits each, computed in ONE vectorized Pandas UDF (a single numpy
+  matmul per Arrow batch against the stacked ``L*b x dim`` plane
+  matrix); candidates = union over tables of the query's bucket,
+  deduped.  The 100 TB path when the query set is large: the (table,
   bucket) equi-join with the broadcast query side replaces the cross
-  product.  Recall/cost is tuned by (L, b): more tables -> higher
-  recall, more candidates; more bits -> smaller buckets.  A per-vector
-  collision with a true neighbor at angle theta happens with
-  probability 1-(1-(1-theta/pi)^b)^L.
+  product.  More tables -> higher recall, more candidates; more bits ->
+  smaller buckets.  A per-vector collision with a true neighbor at
+  angle theta happens with probability 1-(1-(1-theta/pi)^b)^L.
+* **PQ / IVF-PQ** — score pairs in the compressed domain (ADC over
+  40-bit codes), cut a per-query shortlist with the same rank, and
+  rerank only the shortlist against the raw vectors
+  (``rerank_shortlist``).
 
-The hyperplanes are derived deterministically (seeded RNG) so results
-are reproducible run to run.
+The hyperplanes and codebooks are derived deterministically (seeded
+RNG, fixed init) so results are reproducible run to run.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from data_ingestion_system_spark.functions.vectors import cosine_fixed
@@ -64,22 +74,49 @@ def srp_buckets_udf(dim: int = DIM, n_bits: int = N_BITS, n_tables: int = N_TABL
     return buckets
 
 
+def query_cosine(dim: int = DIM) -> Column:
+    """Exact cosine of each candidate's query vector ``qv`` against its
+    ``embedding`` over the first ``dim`` components (codegen'd, see
+    functions/vectors.py::cosine_fixed)."""
+    return cosine_fixed("qv", "embedding", dim)
+
+
+def rank_per_query(scored: DataFrame, score: Column | str, k: int) -> DataFrame:
+    """The one per-query top-k cut: ``rnk`` = row_number over ``qid``
+    ordered by ``score``, then ascending ``vec_id`` (the tie-break every
+    path shares), kept where ``rnk <= k``."""
+    w = Window.partitionBy("qid").orderBy(score, "vec_id")
+    return (scored.withColumn("rnk", F.row_number().over(w))
+            .filter(F.col("rnk") <= k))
+
+
+def exact_rerank(cand: DataFrame, k: int, *cols, dim: int = DIM) -> DataFrame:
+    """The refine step of every vector top-k path: exact cosine over the
+    candidate (qid, qv) x (vec_id, embedding) rows, the per-query rank,
+    then ``qid, vec_id, *cols, cosine, rnk``."""
+    scored = cand.withColumn("cos_raw", query_cosine(dim))
+    return (rank_per_query(scored, F.col("cos_raw").desc(), k)
+            .select("qid", "vec_id", *cols,
+                    F.round("cos_raw", 6).alias("cosine"), "rnk"))
+
+
+def rerank_shortlist(short: DataFrame, corpus: DataFrame, queries: DataFrame,
+                     k: int, *cols) -> DataFrame:
+    """Exact rerank of a per-query (qid, vec_id, *cols) shortlist: the
+    vec_id-keyed join back to the raw vectors, then the broadcast query
+    side, so only shortlist rows ever touch a full embedding."""
+    return exact_rerank(
+        short.join(corpus.select("vec_id", "embedding"), "vec_id")
+        .join(F.broadcast(queries), "qid"), k, *cols)
+
+
 def topk_bruteforce(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Exact cosine top-k: broadcast queries x full corpus, window rank.
 
     corpus: (vec_id, embedding); queries: (qid, qv).
     """
-    scored = (
-        corpus.crossJoin(F.broadcast(queries))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .withColumn("cos_raw", cosine_fixed("qv", "embedding", DIM))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos_raw").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "vec_id", F.round("cos_raw", 6).alias("cosine"), "rnk")
-    )
+    return exact_rerank(corpus.crossJoin(F.broadcast(queries))
+                        .filter(F.col("vec_id") != F.col("qid")), k)
 
 
 def ivf_assign_udf(centroids: np.ndarray, nprobe: int = 1):
@@ -117,6 +154,14 @@ def label_centroids(corpus_with_label: DataFrame) -> np.ndarray:
     return np.array([r.centroid for r in rows])
 
 
+def ivf_probes(queries: DataFrame, centroids: np.ndarray,
+               nprobe: int) -> DataFrame:
+    """(qid, qv, cid): each query against its ``nprobe`` nearest lists."""
+    return queries.withColumn(
+        "cids", ivf_assign_udf(centroids, nprobe)(F.col("qv"))
+    ).select("qid", "qv", F.explode("cids").alias("cid"))
+
+
 def topk_ivf(corpus: DataFrame, centroids: np.ndarray, queries: DataFrame,
              k: int = 10, nprobe: int = 2) -> DataFrame:
     """IVF-style ANN: coarse-quantize the corpus into inverted lists
@@ -127,20 +172,9 @@ def topk_ivf(corpus: DataFrame, centroids: np.ndarray, queries: DataFrame,
     assigned = corpus.withColumn(
         "cid", ivf_assign_udf(centroids, 1)(F.col("embedding"))[0]
     )
-    probes = queries.withColumn(
-        "cids", ivf_assign_udf(centroids, nprobe)(F.col("qv"))
-    ).select("qid", "qv", F.explode("cids").alias("cid"))
-    scored = (
-        assigned.join(F.broadcast(probes), "cid")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .withColumn("cos_raw", cosine_fixed("qv", "embedding", DIM))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos_raw").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "vec_id", F.round("cos_raw", 6).alias("cosine"), "rnk")
-    )
+    return exact_rerank(
+        assigned.join(F.broadcast(ivf_probes(queries, centroids, nprobe)), "cid")
+        .filter(F.col("vec_id") != F.col("qid")), k)
 
 
 def topk_lsh(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
@@ -162,13 +196,7 @@ def topk_lsh(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
         .filter(F.col("vec_id") != F.col("qid"))
         .dropDuplicates(["qid", "vec_id"])
     )
-    scored = cand.withColumn("cos_raw", cosine_fixed("qv", "embedding", DIM))
-    w = Window.partitionBy("qid").orderBy(F.col("cos_raw").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "vec_id", F.round("cos_raw", 6).alias("cosine"), "rnk")
-    )
+    return exact_rerank(cand, k)
 
 
 # ---------------------------------------------------------------------------
@@ -260,16 +288,23 @@ def pq_adc_score_at_udf(luts: np.ndarray):
     return score_at
 
 
-def query_luts(queries_rows, codebook: np.ndarray) -> np.ndarray:
-    """(n_queries, m, ks) LUT stack for a driver-resident query set."""
+def _pq_queries(queries: DataFrame, codebook: np.ndarray):
+    """The driver-resident query set of the PQ paths, in qid order: its
+    (qid, qv) rows, their (n_queries, m, ks) LUT stack, and the
+    (qid, qv) frame the exact rerank broadcasts."""
+    q_rows = sorted(((r[0], list(r[1]))
+                     for r in queries.select("qid", "qv").collect()),
+                    key=lambda r: r[0])
     m, ks, d_sub = codebook.shape
-    luts = np.empty((len(queries_rows), m, ks))
-    for i, (_qid, qv) in enumerate(queries_rows):
+    luts = np.empty((len(q_rows), m, ks))
+    for i, (_qid, qv) in enumerate(q_rows):
         q = np.asarray(qv, dtype=np.float64)
         q = q / max(np.linalg.norm(q), 1e-12)
         for j in range(m):
             luts[i, j] = codebook[j] @ q[j * d_sub:(j + 1) * d_sub]
-    return luts
+    qv = queries.sparkSession.createDataFrame(
+        q_rows, "qid long, qv array<double>")
+    return q_rows, luts, qv
 
 
 def pq_adc_score_all_udf(luts: np.ndarray):
@@ -306,12 +341,9 @@ def topk_pq(corpus: DataFrame, queries: DataFrame, k: int = 10,
     smaller than raw vectors) in ONE map-only pass that emits all query
     scores per vector from closure-resident LUTs, stage 2 touches full
     vectors for shortlist*n_queries rows only."""
-    spark = corpus.sparkSession
     if codebook is None:
         codebook = train_pq_codebook(corpus)
-    q_rows = [(r[0], list(r[1])) for r in queries.select("qid", "qv").collect()]
-    q_rows.sort(key=lambda r: r[0])
-    luts = query_luts(q_rows, codebook)
+    q_rows, luts, qv = _pq_queries(queries, codebook)
     qid_arr = F.array(*[F.lit(qid) for qid, _ in q_rows])
 
     encoded = corpus.withColumn("codes", pq_encode_udf(codebook)(F.col("embedding")))
@@ -323,24 +355,9 @@ def topk_pq(corpus: DataFrame, queries: DataFrame, k: int = 10,
         .withColumn("qid", qid_arr[F.col("qidx")])
         .filter(F.col("vec_id") != F.col("qid"))
     )
-    w = Window.partitionBy("qid").orderBy(F.col("adc").desc(), F.col("vec_id"))
-    short = (adc.withColumn("srnk", F.row_number().over(w))
-             .filter(F.col("srnk") <= shortlist)
+    short = (rank_per_query(adc, F.col("adc").desc(), shortlist)
              .select("qid", "vec_id"))
-
-    # exact re-rank of the shortlist against the raw vectors
-    qv = spark.createDataFrame(q_rows, "qid long, qv array<double>")
-    rer = (
-        short.join(corpus.select("vec_id", "embedding"), "vec_id")
-        .join(F.broadcast(qv), "qid")
-        .withColumn("cos_raw", cosine_fixed("qv", "embedding", DIM))
-    )
-    w2 = Window.partitionBy("qid").orderBy(F.col("cos_raw").desc(), F.col("vec_id"))
-    return (
-        rer.withColumn("rnk", F.row_number().over(w2))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "vec_id", F.round("cos_raw", 6).alias("cosine"), "rnk")
-    )
+    return rerank_shortlist(short, corpus, qv, k)
 
 
 def topk_ivf_pq(corpus: DataFrame, centroids: np.ndarray, queries: DataFrame,
@@ -355,12 +372,9 @@ def topk_ivf_pq(corpus: DataFrame, centroids: np.ndarray, queries: DataFrame,
     and encoding are one map-only pass each, the probe is a broadcast
     equi-join on the list id, and every stage after the probe works on
     candidate-sized data."""
-    spark = corpus.sparkSession
     if codebook is None:
         codebook = train_pq_codebook(corpus)
-    q_rows = [(r[0], list(r[1])) for r in queries.select("qid", "qv").collect()]
-    q_rows.sort(key=lambda r: r[0])
-    luts = query_luts(q_rows, codebook)
+    q_rows, luts, qv = _pq_queries(queries, codebook)
     qid_of_idx = {qid: i for i, (qid, _) in enumerate(q_rows)}
 
     assigned = corpus.withColumn(
@@ -384,20 +398,6 @@ def topk_ivf_pq(corpus: DataFrame, centroids: np.ndarray, queries: DataFrame,
         .withColumn("adc",
                     pq_adc_score_at_udf(luts)(F.col("codes"), F.col("qidx")))
     )
-    w = Window.partitionBy("qid").orderBy(F.col("adc").desc(), F.col("vec_id"))
-    short = (cand.withColumn("srnk", F.row_number().over(w))
-             .filter(F.col("srnk") <= shortlist)
+    short = (rank_per_query(cand, F.col("adc").desc(), shortlist)
              .select("qid", "vec_id"))
-
-    qv = spark.createDataFrame(q_rows, "qid long, qv array<double>")
-    rer = (
-        short.join(corpus.select("vec_id", "embedding"), "vec_id")
-        .join(F.broadcast(qv), "qid")
-        .withColumn("cos_raw", cosine_fixed("qv", "embedding", DIM))
-    )
-    w2 = Window.partitionBy("qid").orderBy(F.col("cos_raw").desc(), F.col("vec_id"))
-    return (
-        rer.withColumn("rnk", F.row_number().over(w2))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "vec_id", F.round("cos_raw", 6).alias("cosine"), "rnk")
-    )
+    return rerank_shortlist(short, corpus, qv, k)

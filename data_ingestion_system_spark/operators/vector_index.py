@@ -38,13 +38,14 @@ full corpus with the same centroids, row for row.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_ingestion_system_spark.functions.vectors import cosine_fixed
 from data_ingestion_system_spark.operators.similarity import (
     DIM,
+    exact_rerank,
     ivf_assign_udf,
+    ivf_probes,
 )
 
 LEGACY_MB = -1  # stamp for rows written without a micro-batch id
@@ -210,26 +211,13 @@ def probe_vector_index(spark: SparkSession, path: str, queries: DataFrame,
     index = spark.read.parquet(path)
     if exclude_mb is not None:
         index = index.filter(F.col("mb") != exclude_mb)
-    probes = queries.withColumn(
-        "cids", ivf_assign_udf(centroids, nprobe)(F.col("qv"))
-    ).select("qid", "qv", F.explode("cids").alias("cid"))
+    probes = ivf_probes(queries, centroids, nprobe)
     probed_cids = [int(r.cid) for r in probes.select("cid")
                    .distinct().collect()]
-    scored = (
+    return exact_rerank(
         index.filter(F.col("cid").isin(probed_cids))  # partition pruning
         .join(F.broadcast(probes), "cid")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .withColumn("cos_raw",
-                    cosine_fixed("qv", "embedding", dim))
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("cos_raw").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "vec_id", F.round("cos_raw", 6).alias("cosine"),
-                "rnk")
-    )
+        .filter(F.col("vec_id") != F.col("qid")), k, dim=dim)
 
 
 def rebuild_vector_index(spark: SparkSession, src_path: str,

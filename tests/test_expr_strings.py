@@ -1,8 +1,8 @@
 """r9 optimization guard: the F.expr-string forms of the hot expression
 builders (introduced to kill py4j Column-construction chatter — ~80s of
-pure driver time across the bench) must be VALUE-IDENTICAL to the
-Column-object forms they replaced.  Results feed bit-exact oracle
-hashes, so equality here is exact, not approximate."""
+pure driver time across the bench) must be VALUE-IDENTICAL to
+independent references.  Results feed bit-exact oracle hashes, so
+equality here is exact, not approximate."""
 
 from __future__ import annotations
 
@@ -11,34 +11,57 @@ import math
 from pyspark.sql import functions as F
 
 from data_ingestion_system_spark.functions.vectors import (
+    cosine,
     cosine_fixed,
+    dot,
     dot_fixed,
 )
 
 
-def _vec_df(spark):
-    rows = [(i, [((i * 7 + j * 13) % 19) / 7.0 - 1.3 for j in range(8)],
+def _vec_rows():
+    return [(i, [((i * 7 + j * 13) % 19) / 7.0 - 1.3 for j in range(8)],
              [((i * 5 + j * 11) % 17) / 5.0 - 1.1 for j in range(8)])
             for i in range(40)]
+
+
+def _vec_df(spark):
     return spark.createDataFrame(
-        rows, "id long, a array<double>, b array<double>")
+        _vec_rows(), "id long, a array<double>, b array<double>")
+
+
+def _py_dot(a, b):
+    """Plain-Python left fold, the order DuckDB's list_dot_product uses."""
+    acc = a[0] * b[0]
+    for x, y in zip(a[1:], b[1:]):
+        acc = acc + x * y
+    return acc
+
+
+def _same(g, w):
+    return g == w or (math.isnan(g) and math.isnan(w))
 
 
 def test_dot_fixed_string_matches_column_form(spark):
+    """The unrolled string form equals the higher-order Column form
+    (``dot``: the same left fold) and a plain-Python fold, bit for bit."""
     df = _vec_df(spark)
-    got = df.select(dot_fixed("a", "b", 8).alias("d")).collect()
-    want = df.select(
-        dot_fixed(F.col("a"), F.col("b"), 8).alias("d")).collect()
+    got = df.orderBy("id").select(dot_fixed("a", "b", 8).alias("d")).collect()
+    want = df.orderBy("id").select(
+        dot(F.col("a"), F.col("b")).alias("d")).collect()
     assert [r.d for r in got] == [r.d for r in want]  # exact bits
+    assert [r.d for r in got] == [_py_dot(a, b) for _, a, b in _vec_rows()]
 
 
 def test_cosine_fixed_string_matches_column_form(spark):
     df = _vec_df(spark)
-    got = df.select(cosine_fixed("a", "b", 8).alias("c")).collect()
-    want = df.select(
-        cosine_fixed(F.col("a"), F.col("b"), 8).alias("c")).collect()
-    for g, w in zip(got, want):
-        assert g.c == w.c or (math.isnan(g.c) and math.isnan(w.c))
+    got = df.orderBy("id").select(
+        cosine_fixed("a", "b", 8).alias("c")).collect()
+    want = df.orderBy("id").select(
+        cosine(F.col("a"), F.col("b")).alias("c")).collect()
+    py = [_py_dot(a, b) / (math.sqrt(_py_dot(a, a)) * math.sqrt(_py_dot(b, b)))
+          for _, a, b in _vec_rows()]
+    for g, w, p in zip(got, want, py):
+        assert _same(g.c, w.c) and _same(g.c, p)
 
 
 def test_minhash_signatures_expr_strings(spark):

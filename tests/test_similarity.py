@@ -385,3 +385,81 @@ def test_quantize_error_sweep_monotone(spark, sf_dir):
     worst8 = max(r.max_abs_err for r in
                  emb_quantize_roundtrip(spark, sf_dir).collect())
     assert abs(rows[2].worst_err - worst8) < 1e-5
+
+
+def _tie_corpus():
+    """12 vectors in 64 dims with exact cosine ties: duplicates under
+    ids out of insertion order, and a copy of each query vector (ids
+    0 and 1) beside the query itself."""
+    def v(a, b):
+        return [float(a), float(b)] + [0.5] * 62
+
+    return [(0, v(1, 0)), (5, v(1, 0)), (2, v(1, 0)),
+            (9, v(0, 1)), (3, v(0, 1)), (7, v(0, 1)),
+            (4, v(2, 1)), (8, v(2, 1)), (1, v(-1, 2)),
+            (6, v(1, 1)), (10, v(1, 1)), (11, v(3, -1))]
+
+
+def test_every_topk_path_shares_one_ranking_rule(spark, tmp_path):
+    """Brute force, IVF probing every list, PQ and IVF-PQ with a
+    shortlist >= the corpus, and the vector-index probe all return the
+    same rows: the query never ranks itself, and exact cosine ties rank
+    by ascending vec_id.  k = 7 cuts through a tie group for both
+    queries, so a wrong tie-break picks different vectors."""
+    import math
+
+    import numpy as np
+
+    from data_ingestion_system_spark.operators.similarity import (
+        topk_ivf,
+        topk_ivf_pq,
+        topk_pq,
+    )
+    from data_ingestion_system_spark.operators.vector_index import (
+        probe_vector_index,
+        save_centroids,
+        write_vector_index,
+    )
+
+    rows = _tie_corpus()
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    queries = corpus.filter(F.col("vec_id") < 2).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
+    cents = np.array([rows[0][1], rows[3][1]], dtype=np.float64)
+    k, n = 7, len(rows)
+
+    def dot(a, b):
+        acc = a[0] * b[0]
+        for x, y in zip(a[1:], b[1:]):
+            acc = acc + x * y
+        return acc
+
+    vec = dict(rows)
+    want = {}
+    for qid in (0, 1):
+        scored = sorted(
+            (-dot(vec[qid], e) / (math.sqrt(dot(vec[qid], vec[qid]))
+                                  * math.sqrt(dot(e, e))), vid)
+            for vid, e in rows if vid != qid)
+        # the cut at k splits a group of equal cosines
+        assert scored[k - 1][0] == scored[k][0]
+        want.update({(qid, r): vid for r, (_, vid) in enumerate(scored[:k], 1)})
+
+    path = str(tmp_path / "idx")
+    save_centroids(spark, cents, path)
+    write_vector_index(corpus, path, cents)
+    paths = {
+        "bruteforce": topk_bruteforce(corpus, queries, k=k),
+        "ivf": topk_ivf(corpus, cents, queries, k=k, nprobe=2),
+        "pq": topk_pq(corpus, queries, k=k, shortlist=n),
+        "ivf_pq": topk_ivf_pq(corpus, cents, queries, k=k, nprobe=2,
+                              shortlist=n),
+        "probe": probe_vector_index(spark, path, queries, k=k, nprobe=2),
+    }
+    got = {name: sorted((r.qid, r.rnk, r.vec_id, r.cosine)
+                        for r in df.collect())
+           for name, df in paths.items()}
+    assert all(q != v for q, _, v, _ in got["bruteforce"])
+    assert {(q, r): v for q, r, v, _ in got["bruteforce"]} == want
+    for name, out in got.items():
+        assert out == got["bruteforce"], name
