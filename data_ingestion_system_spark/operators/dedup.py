@@ -32,7 +32,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-from data_ingestion_system_spark.operators.text import normalized_text
+from data_ingestion_system_spark.operators.text import fingerprint_md5
 from data_ingestion_system_spark.plans import memo
 
 # The MinHash-LSH shape every 32-permutation caller shares, the signature
@@ -633,7 +633,7 @@ def exact_dedup_survivors(df: DataFrame, id_col: str, text_col: str) -> DataFram
     min(id)-per-fingerprint via one hash aggregation (no window, no sort):
     at 100 TB this is a single shuffle on the fingerprint.
     """
-    fp = df.select(F.col(id_col), F.md5(normalized_text(F.col(text_col))).alias("fingerprint"))
+    fp = df.select(F.col(id_col), fingerprint_md5(F.col(text_col)).alias("fingerprint"))
     keep = fp.groupBy("fingerprint").agg(F.min(id_col).alias(id_col))
     return keep.select(id_col, "fingerprint")
 
@@ -732,8 +732,6 @@ def bloom_prefiltered_seen(incoming: DataFrame, history: DataFrame,
     rows shuffle only for candidates, never for the (dominant) fresh
     docs.  Returns (id, matched_id) with matched_id = min history id of
     the matching content."""
-    from data_ingestion_system_spark.operators.text import fingerprint_md5
-
     hist_fp = history.select(
         F.col(id_col), fingerprint_md5(F.col(text_col)).alias("fp"))
     inc_fp = incoming.select(

@@ -11,9 +11,11 @@ Design:
 * **schema**: binary payload + typed metadata struct travel together; the
   blob is never interpreted JVM-side, so Tungsten treats it as an opaque
   byte array and parquet stores it page-compressed.
-* **compute**: every media op is ``mapInPandas`` — Arrow moves the bytes
-  to Python in columnar batches (one copy, no per-row pickling), numpy
-  does the math, an explicit output schema keeps Catalyst fully informed.
+* **compute**: every media op is ``_map_rows`` — one ``mapInPandas``
+  where Arrow moves the bytes to Python in columnar batches (one copy,
+  no per-row pickling), a per-row kernel does the numpy math, an
+  explicit output schema keeps Catalyst fully informed, and one rule
+  quarantines a corrupt blob into an error column.
   Batch size is governed by ``spark.sql.execution.arrow.maxRecordsPerBatch``
   — at 100 TB tune it down so `batch_rows x blob_size` fits executor
   memory (the ops are map-only, so there is no shuffle to size).
@@ -31,7 +33,7 @@ Design:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -40,6 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from data_ingestion_system_spark.functions.vectors import cosine_fixed
+from data_ingestion_system_spark.operators import codecs
 
 MEDIA_KINDS = ("image", "audio", "video")
 
@@ -79,8 +82,6 @@ def decode_real(content: bytes, kind: str):
       narrowed contract in COVERAGE.md).  Non-AVI containers raise
       NotImplementedError.
     """
-    from data_ingestion_system_spark.operators import codecs
-
     if kind == "image":
         try:
             import io
@@ -120,32 +121,57 @@ def fake_decode(buf: np.ndarray, dim: int = FEATURE_DIM) -> np.ndarray:
     return np.array([b.mean() if len(b) else 0.0 for b in blocks]) / 255.0
 
 
-def media_features(df: DataFrame, dim: int = FEATURE_DIM) -> DataFrame:
-    """Decode + feature-extract: (media_id, kind, byte_len, features[dim]).
+def _map_rows(df: DataFrame, schema: str,
+              kernel: Callable[[tuple], Iterable[dict]],
+              error_col: str | None = None) -> DataFrame:
+    """The one Arrow-batched map behind every media op.
 
-    mapInPandas over Arrow batches; one numpy pass per blob, no JVM<->
-    Python per-row chatter."""
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("byte_len", T.LongType()),
-        T.StructField("features", T.ArrayType(T.DoubleType())),
-    ])
+    One ``mapInPandas`` whose ``kernel(row)`` runs once per input row (a
+    namedtuple of the input columns) and yields zero or more output-row
+    dicts; keys a dict leaves out are NULL.  Each batch is built in the
+    DDL ``schema``'s column order, so a batch that yields no rows is
+    still well-formed.  The plan's ``MapInPandas`` node carries the
+    kernel's name.
 
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    With ``error_col`` set, an exception in the kernel QUARANTINES its
+    row instead of killing the batch (at 100 TB a corrupt blob is a
+    certainty, not an edge case): the row becomes exactly one output
+    row holding the input's ``media_id`` and ``error_col =
+    "<ExceptionType>: <message>"``, every other column NULL, and no
+    partial output of the failed row survives.  Without ``error_col``
+    the exception fails the task."""
+    names = T.DataType.fromDDL(schema).fieldNames()
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            feats = [
-                fake_decode(np.frombuffer(c or b"", dtype=np.uint8), dim)
-                for c in pdf["content"]
-            ]
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "kind": pdf["kind"],
-                "byte_len": [len(c or b"") for c in pdf["content"]],
-                "features": [f.tolist() for f in feats],
-            })
+            out = []
+            for row in pdf.itertuples(index=False):
+                try:
+                    rows = list(kernel(row))
+                except Exception as exc:  # noqa: BLE001 — the one quarantine
+                    if error_col is None:
+                        raise
+                    rows = [{"media_id": row.media_id,
+                             error_col: f"{type(exc).__name__}: {exc}"}]
+                out += rows
+            yield pd.DataFrame({n: [r.get(n) for r in out] for n in names})
 
-    return df.mapInPandas(compute, out_schema)
+    run.__name__ = kernel.__name__
+    return df.mapInPandas(run, schema)
+
+
+def media_features(df: DataFrame, dim: int = FEATURE_DIM) -> DataFrame:
+    """Decode + feature-extract: (media_id, kind, byte_len, features[dim]),
+    one numpy pass per blob."""
+    def compute(row):
+        content = row.content or b""
+        yield {"media_id": row.media_id, "kind": row.kind,
+               "byte_len": len(content),
+               "features": fake_decode(np.frombuffer(content, dtype=np.uint8),
+                                       dim).tolist()}
+
+    return _map_rows(df, "media_id long, kind string, byte_len long, "
+                     "features array<double>", compute)
 
 
 def media_features_decoded(df: DataFrame,
@@ -154,21 +180,10 @@ def media_features_decoded(df: DataFrame,
     ``media_features``: images decode via ``decode_real`` to pixels and
     featurize as ``dim`` block means of the luminance plane, audio
     decodes to PCM samples and featurizes as ``dim`` block RMS
-    (plus true width/height/sample-rate metadata).  Rows whose payload
-    fails to decode land in an error column instead of killing the
-    batch (the quarantine posture of O-27) — at 100 TB a corrupt blob
-    is a certainty, not an edge case.  Same Arrow-batched mapInPandas
-    shape as every other media op; only the kernel differs."""
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("features", T.ArrayType(T.DoubleType())),
-        T.StructField("decode_error", T.StringType()),
-    ])
-
+    (plus true width/height/sample-rate metadata).  A payload that fails
+    to decode quarantines into ``decode_error`` (``_map_rows``); a kind
+    with no native pixel decode (MJPEG video, unknown kinds) keeps its
+    metadata and names the gap there too."""
     def block_stat(x: np.ndarray, reduce_rms: bool) -> list[float]:
         if x.size == 0:
             return [0.0] * dim
@@ -178,106 +193,66 @@ def media_features_decoded(df: DataFrame,
                     for b in blocks]
         return [float(b.mean()) if len(b) else 0.0 for b in blocks]
 
-    def compute(batches):
-        for pdf in batches:
-            rows = []
-            for mid, kind, content in zip(pdf["media_id"], pdf["kind"],
-                                          pdf["content"]):
-                rec = {"media_id": mid, "kind": kind, "width": None,
-                       "height": None, "sample_rate": None,
-                       "features": None, "decode_error": None}
-                try:
-                    if kind == "image":
-                        px = decode_real(bytes(content or b""), "image")
-                        lum = px.mean(axis=2) if px.ndim == 3 else px
-                        rec.update(width=int(px.shape[1]),
-                                   height=int(px.shape[0]),
-                                   features=[v / 255.0 for v in
-                                             block_stat(lum.ravel(), False)])
-                    elif kind == "audio":
-                        samples, rate = decode_real(
-                            bytes(content or b""), "audio")
-                        mono = samples.mean(axis=1)
-                        rec.update(sample_rate=int(rate),
-                                   features=block_stat(mono, True))
-                    elif kind == "video":
-                        meta, frames = decode_real(
-                            bytes(content or b""), "video")
-                        rec.update(width=int(meta["width"]),
-                                   height=int(meta["height"]))
-                        if frames and isinstance(frames[0], np.ndarray):
-                            lum = np.concatenate(
-                                [f.mean(axis=2).ravel() for f in frames])
-                            rec["features"] = [
-                                v / 255.0 for v in block_stat(lum, False)]
-                        else:  # MJPEG: demuxed, pixel decode delegated
-                            rec["decode_error"] = (
-                                f"{meta['fourcc']} bitstream decode "
-                                "delegated (frames demuxed)")
-                    else:
-                        rec["decode_error"] = f"no real codec for {kind}"
-                except Exception as exc:  # noqa: BLE001 — quarantine, don't kill the batch
-                    rec["decode_error"] = f"{type(exc).__name__}: {exc}"
-                rows.append(rec)
-            yield pd.DataFrame(rows)
+    def compute(row):
+        kind, content = row.kind, bytes(row.content or b"")
+        rec = {"media_id": row.media_id, "kind": kind}
+        if kind == "image":
+            px = decode_real(content, "image")
+            lum = px.mean(axis=2) if px.ndim == 3 else px
+            rec.update(width=int(px.shape[1]), height=int(px.shape[0]),
+                       features=[v / 255.0 for v in
+                                 block_stat(lum.ravel(), False)])
+        elif kind == "audio":
+            samples, rate = decode_real(content, "audio")
+            rec.update(sample_rate=int(rate),
+                       features=block_stat(samples.mean(axis=1), True))
+        elif kind == "video":
+            meta, frames = decode_real(content, "video")
+            rec.update(width=int(meta["width"]), height=int(meta["height"]))
+            if frames and isinstance(frames[0], np.ndarray):
+                lum = np.concatenate([f.mean(axis=2).ravel() for f in frames])
+                rec["features"] = [v / 255.0 for v in block_stat(lum, False)]
+            else:  # MJPEG: demuxed, pixel decode delegated
+                rec["decode_error"] = (f"{meta['fourcc']} bitstream decode "
+                                       "delegated (frames demuxed)")
+        else:
+            rec["decode_error"] = f"no real codec for {kind}"
+        yield rec
 
-    return df.mapInPandas(compute, out_schema)
+    return _map_rows(df, "media_id long, kind string, width int, height int, "
+                     "sample_rate int, features array<double>, "
+                     "decode_error string", compute, error_col="decode_error")
 
 
 def frame_sample(df: DataFrame, every_n: int = 4,
                  frame_bytes: int = FRAME_BYTES) -> DataFrame:
     """Frame sampling (video/audio): take every ``every_n``-th
     ``frame_bytes`` window; emit one row per sampled frame with its mean
-    "energy".  Output explodes rows, which mapInPandas supports natively
-    (the returned frame may have any number of rows per input row)."""
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("frame_no", T.IntegerType()),
-        T.StructField("offset", T.LongType()),
-        T.StructField("energy", T.DoubleType()),
-    ])
+    "energy"."""
+    def sample(row):
+        buf = np.frombuffer(row.content or b"", dtype=np.uint8)
+        for fno in range(0, max(1, -(-len(buf) // frame_bytes)), every_n):
+            start = fno * frame_bytes
+            window = buf[start:start + frame_bytes]
+            yield {"media_id": row.media_id, "frame_no": fno,
+                   "offset": start,
+                   "energy": float(window.mean()) if len(window) else 0.0}
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, frame_nos, offsets, energies = [], [], [], []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                buf = np.frombuffer(content or b"", dtype=np.uint8)
-                n_frames = max(1, -(-len(buf) // frame_bytes))
-                for fno in range(0, n_frames, every_n):
-                    start = fno * frame_bytes
-                    window = buf[start:start + frame_bytes]
-                    ids.append(mid)
-                    frame_nos.append(fno)
-                    offsets.append(start)
-                    energies.append(float(window.mean()) if len(window) else 0.0)
-            yield pd.DataFrame({
-                "media_id": ids, "frame_no": frame_nos,
-                "offset": offsets, "energy": energies,
-            })
-
-    return df.mapInPandas(sample, out_schema)
+    return _map_rows(df, "media_id long, frame_no int, offset long, "
+                     "energy double", sample)
 
 
 def resize_blocks(df: DataFrame, out_w: int = 4, out_h: int = 4) -> DataFrame:
     """"Resize": reduce the blob to an out_h x out_w grid of block means —
     the access pattern (gather + reduce per output cell) of a real
     nearest-neighbor downscale, on raw bytes."""
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("grid", T.ArrayType(T.ArrayType(T.DoubleType()))),
-    ])
-    cells = out_w * out_h
+    def resize(row):
+        flat = fake_decode(np.frombuffer(row.content or b"", dtype=np.uint8),
+                           out_w * out_h)
+        yield {"media_id": row.media_id,
+               "grid": flat.reshape(out_h, out_w).tolist()}
 
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            grids = []
-            for content in pdf["content"]:
-                flat = fake_decode(np.frombuffer(content or b"", dtype=np.uint8),
-                                   cells)
-                grids.append(flat.reshape(out_h, out_w).tolist())
-            yield pd.DataFrame({"media_id": pdf["media_id"], "grid": grids})
-
-    return df.mapInPandas(resize, out_schema)
+    return _map_rows(df, "media_id long, grid array<array<double>>", resize)
 
 
 def near_dup_pairs(feats: DataFrame, threshold: float = 0.999,
@@ -484,52 +459,29 @@ def video_demux_stats(df: DataFrame) -> DataFrame:
     count, frame cadence, total payload bytes, and the mean decoded
     pixel value for raw-DIB streams (NULL for compressed fourccs, whose
     bitstream decode is delegated).  Corrupt containers quarantine into
-    ``demux_error`` instead of killing the batch — same Arrow-batched
-    mapInPandas shape as every media op."""
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("fourcc", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("n_frames", T.IntegerType()),
-        T.StructField("us_per_frame", T.IntegerType()),
-        T.StructField("payload_bytes", T.LongType()),
-        T.StructField("mean_pixel", T.DoubleType()),
-        T.StructField("demux_error", T.StringType()),
-    ])
+    ``demux_error`` (``_map_rows``)."""
+    def compute(row):
+        meta = codecs.demux_avi(bytes(row.content or b""))
+        frames = meta.pop("frames")
+        payload = sum(len(f) for f in frames)
+        mean_pixel = None
+        if meta["fourcc"] in ("DIB", "RGB") and frames:
+            # exact integer sum, one float64 division — the oracle
+            # reproduces this bit-for-bit
+            total = sum(int(codecs.decode_avi_raw_frame(
+                f, meta["width"], meta["height"]).astype(np.int64).sum())
+                for f in frames)
+            mean_pixel = total / payload
+        yield {"media_id": row.media_id, "fourcc": meta["fourcc"],
+               "width": int(meta["width"]), "height": int(meta["height"]),
+               "n_frames": int(meta["n_frames"]),
+               "us_per_frame": int(meta["us_per_frame"]),
+               "payload_bytes": payload, "mean_pixel": mean_pixel}
 
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from data_ingestion_system_spark.operators import codecs
-
-        for pdf in batches:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                rec = {"media_id": mid, "fourcc": None, "width": None,
-                       "height": None, "n_frames": None,
-                       "us_per_frame": None, "payload_bytes": None,
-                       "mean_pixel": None, "demux_error": None}
-                try:
-                    meta = codecs.demux_avi(bytes(content or b""))
-                    frames = meta.pop("frames")
-                    rec.update(fourcc=meta["fourcc"],
-                               width=int(meta["width"]),
-                               height=int(meta["height"]),
-                               n_frames=int(meta["n_frames"]),
-                               us_per_frame=int(meta["us_per_frame"]),
-                               payload_bytes=sum(len(f) for f in frames))
-                    if meta["fourcc"] in ("DIB", "RGB") and frames:
-                        # exact integer sum, one float64 division — the
-                        # oracle reproduces this bit-for-bit
-                        total = sum(int(codecs.decode_avi_raw_frame(
-                            f, meta["width"], meta["height"])
-                            .astype(np.int64).sum()) for f in frames)
-                        rec["mean_pixel"] = total / rec["payload_bytes"]
-                except Exception as exc:  # noqa: BLE001 — quarantine, don't kill the batch
-                    rec["demux_error"] = f"{type(exc).__name__}: {exc}"
-                rows.append(rec)
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(compute, out_schema)
+    return _map_rows(df, "media_id long, fourcc string, width int, "
+                     "height int, n_frames int, us_per_frame int, "
+                     "payload_bytes long, mean_pixel double, "
+                     "demux_error string", compute, error_col="demux_error")
 
 
 def audio_stats(df: DataFrame) -> DataFrame:
@@ -537,46 +489,21 @@ def audio_stats(df: DataFrame) -> DataFrame:
     stdlib-wave decode (codecs.decode_wav): channel/rate/sample counts,
     duration, and exact integer amplitude sums (sum_abs rides a LONG so
     the oracle comparison never meets float accumulation).  Corrupt
-    containers quarantine into ``decode_error`` instead of killing the
-    batch — the same Arrow-batched mapInPandas shape as every media
-    op."""
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("n_channels", T.IntegerType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("n_samples", T.LongType()),
-        T.StructField("sum_abs", T.LongType()),
-        T.StructField("decode_error", T.StringType()),
-    ])
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from data_ingestion_system_spark.operators import codecs
-
-        for pdf in batches:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                rec = {"media_id": mid, "n_channels": None,
-                       "sample_rate": None, "n_samples": None,
-                       "sum_abs": None, "decode_error": None}
-                try:
-                    samples, rate = codecs.decode_wav(bytes(content))
-                    rec.update(
-                        n_channels=int(samples.shape[1]),
-                        sample_rate=int(rate),
-                        n_samples=int(samples.shape[0]),
-                        sum_abs=int(np.abs(samples).sum()),
-                    )
-                except Exception as exc:  # quarantine, don't kill the batch
-                    rec["decode_error"] = f"{type(exc).__name__}: {exc}"
-                rows.append(rec)
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema])
+    containers quarantine into ``decode_error`` (``_map_rows``)."""
+    def compute(row):
+        samples, rate = codecs.decode_wav(bytes(row.content))
+        yield {"media_id": row.media_id, "n_channels": int(samples.shape[1]),
+               "sample_rate": int(rate), "n_samples": int(samples.shape[0]),
+               "sum_abs": int(np.abs(samples).sum())}
 
     # the Python kernel emits only EXACT integers; the derived floats
     # round JVM-side because Spark/DuckDB round half AWAY while Python
     # rounds half to even — and /2^k means are dyadic, so exact 6-dp
     # ties actually occur (a real mismatch, not a theoretical one)
-    stats = df.select("media_id", "content").mapInPandas(
-        compute, out_schema)
+    stats = _map_rows(df.select("media_id", "content"),
+                      "media_id long, n_channels int, sample_rate int, "
+                      "n_samples long, sum_abs long, decode_error string",
+                      compute, error_col="decode_error")
     n = F.col("n_samples")
     return stats.select(
         "media_id", "n_channels", "sample_rate", "n_samples",
@@ -596,42 +523,19 @@ def video_scene_deltas(df: DataFrame, threshold: int = 2000) -> DataFrame:
     frames (sample around cuts, skip static spans).  Compressed-fourcc
     streams yield no delta rows (bitstream decode is delegated, see
     module contract); corrupt containers quarantine into
-    ``demux_error``.  Same Arrow-batched mapInPandas shape as every
-    media op — map-only, no shuffle."""
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("sum_abs_delta", T.LongType()),
-        T.StructField("is_cut", T.BooleanType()),
-        T.StructField("demux_error", T.StringType()),
-    ])
+    ``demux_error`` (``_map_rows``).  Map-only, no shuffle."""
+    def compute(row):
+        meta = codecs.demux_avi(bytes(row.content or b""))
+        if meta["fourcc"] not in ("DIB", "RGB"):
+            return
+        frames = [codecs.decode_avi_raw_frame(
+            f, meta["width"], meta["height"]).astype(np.int64)
+            for f in meta["frames"]]
+        for idx in range(1, len(frames)):
+            sad = int(np.abs(frames[idx] - frames[idx - 1]).sum())
+            yield {"media_id": row.media_id, "frame_idx": idx,
+                   "sum_abs_delta": sad, "is_cut": sad > threshold}
 
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from data_ingestion_system_spark.operators import codecs
-
-        for pdf in batches:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    meta = codecs.demux_avi(bytes(content or b""))
-                except Exception as exc:  # corrupt container: quarantine
-                    rows.append({"media_id": mid, "frame_idx": None,
-                                 "sum_abs_delta": None, "is_cut": None,
-                                 "demux_error": str(exc)[:200]})
-                    continue
-                if meta["fourcc"] not in ("DIB", "RGB"):
-                    continue
-                frames = [codecs.decode_avi_raw_frame(
-                    f, meta["width"], meta["height"]).astype(np.int64)
-                    for f in meta["frames"]]
-                for idx in range(1, len(frames)):
-                    sad = int(np.abs(frames[idx] - frames[idx - 1]).sum())
-                    rows.append({"media_id": mid, "frame_idx": idx,
-                                 "sum_abs_delta": sad,
-                                 "is_cut": sad > threshold,
-                                 "demux_error": None})
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "frame_idx", "sum_abs_delta", "is_cut",
-                "demux_error"])
-
-    return df.mapInPandas(compute, out_schema)
+    return _map_rows(df, "media_id long, frame_idx int, sum_abs_delta long, "
+                     "is_cut boolean, demux_error string", compute,
+                     error_col="demux_error")

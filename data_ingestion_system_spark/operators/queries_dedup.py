@@ -213,6 +213,13 @@ SELECT node AS doc_id, min(root) AS cluster_id FROM reach GROUP BY node
 """
 
 
+def _doc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, cluster_id): connected components of the gated
+    word-3-gram Jaccard pair graph."""
+    return D.connected_components(_gated_pairs(spark, sf_dir)).select(
+        F.col("node").alias("doc_id"), "cluster_id")
+
+
 @register("dedup_cluster_components", _CLUSTER_ORACLE_SQL)
 def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive near-dup clustering: connected components over the
@@ -221,24 +228,16 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/dedup.py::connected_components (a one-task union-find
     finish, large-star/small-star rounds while the edges outgrow one
     task); the oracle is the same fixpoint via DuckDB's recursive CTE."""
-    pairs = _gated_pairs(spark, sf_dir)
-    labels = D.connected_components(pairs).select(
-        F.col("node").alias("doc_id"), "cluster_id")
-    return labels
+    return _doc_clusters(spark, sf_dir)
 
 
 @register("dedup_cluster_star", _CLUSTER_ORACLE_SQL)
 def dedup_cluster_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same clustering contract and the same connected-components core
-    as dedup_cluster_components (dedup.py::connected_components), kept
-    as its own query name: its large-star/small-star rounds need
-    O(log^2 n) rounds instead of diameter-many when the pair graph
-    holds long transitive chains, pinned in tests/test_dedup_star.py.
-    The oracle is the identical recursive-CTE fixpoint."""
-    pairs = _gated_pairs(spark, sf_dir)
-    labels = D.connected_components(pairs).select(
-        F.col("node").alias("doc_id"), "cluster_id")
-    return labels
+    """The same query as dedup_cluster_components under its older name:
+    one body, one connected-components core, one oracle.  The name stays
+    because existing callers (the curation benchmark among them) run
+    both."""
+    return _doc_clusters(spark, sf_dir)
 
 
 LEV_PREFIX = 80  # chars of normalized prefix compared per pair

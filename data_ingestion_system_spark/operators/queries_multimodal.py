@@ -10,15 +10,20 @@ additionally pinned by tests/test_multimodal.py against straight numpy.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestion_system_spark.catalog import Catalog
+from data_ingestion_system_spark.operators import codecs
 from data_ingestion_system_spark.operators.multimodal import (
     FRAME_BYTES,
+    _map_rows,
     audio_stats,
     frame_sample,
     media_features,
+    video_demux_stats,
+    video_scene_deltas,
 )
 from data_ingestion_system_spark.registry import register
 
@@ -231,6 +236,28 @@ def multimodal_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PAIR_BUDGET = 10_000_000
 
 
+def _avi_from_documents(spark: SparkSession, sf_dir: str, frame_bytes: int,
+                        width: int, height: int,
+                        fps: int | None = None) -> DataFrame:
+    """documents -> (media_id, content) rows, each document's UTF-8 bytes
+    muxed into a single-stream raw-DIB AVI of ``frame_bytes`` frames
+    (zero-padded tail, at least one frame) at ``fps``, or at
+    10 + id % 20 when ``fps`` is None — the stand-in for reading real
+    uploads in front of the video queries."""
+    def mux(row):
+        b = (row.text or "").encode("utf-8")
+        n = max(1, -(-len(b) // frame_bytes))
+        b = b.ljust(n * frame_bytes, b"\x00")
+        frames = [b[i * frame_bytes:(i + 1) * frame_bytes] for i in range(n)]
+        yield {"media_id": row.doc_id, "content": codecs.encode_avi(
+            frames, width, height,
+            fps=10 + row.doc_id % 20 if fps is None else fps)}
+
+    docs = Catalog(spark, sf_dir).wide_table("documents").select(
+        "doc_id", "text")
+    return _map_rows(docs, "media_id long, content binary", mux)
+
+
 _VIDEO_SQL = """
 WITH m AS (SELECT doc_id AS media_id, hex(encode(text)) AS h,
                   CAST(octet_length(encode(text)) AS BIGINT) AS L
@@ -276,34 +303,7 @@ def multimodal_video_demux(spark: SparkSession, sf_dir: str) -> DataFrame:
     for reading real uploads; production runs only the demux stage),
     no shuffle at all — video stats at 100 TB are embarrassingly
     parallel, bounded by scan + Python batch throughput."""
-    import math
-
-    from data_ingestion_system_spark.operators import codecs
-    from data_ingestion_system_spark.operators.multimodal import (
-        video_demux_stats,
-    )
-
-    cat = Catalog(spark, sf_dir)
-    out_schema = "media_id long, content binary"
-
-    def mux(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            content = []
-            for mid, text in zip(pdf["doc_id"], pdf["text"]):
-                b = (text or "").encode("utf-8")
-                n = max(1, math.ceil(len(b) / 192))
-                b = b.ljust(n * 192, b"\x00")
-                frames = [b[i * 192:(i + 1) * 192] for i in range(n)]
-                content.append(codecs.encode_avi(
-                    frames, 16, 4, fps=10 + int(mid) % 20))
-            yield pd.DataFrame({"media_id": pdf["doc_id"],
-                                "content": content})
-
-    media = cat.wide_table("documents").select("doc_id", "text").mapInPandas(
-        mux, out_schema)
-    stats = video_demux_stats(media)
+    stats = video_demux_stats(_avi_from_documents(spark, sf_dir, 192, 16, 4))
     return stats.select(
         "media_id", "fourcc", "width", "height", "n_frames",
         "us_per_frame", "payload_bytes",
@@ -433,30 +433,21 @@ def multimodal_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import io
     import wave
 
-    import pandas as pd
+    def mux(row):
+        b = (row.text or "").encode("utf-8")
+        if len(b) % 2:
+            b += b"\x00"
+        buf = io.BytesIO()
+        with wave.open(buf, "wb") as f:
+            f.setnchannels(1)
+            f.setsampwidth(2)
+            f.setframerate(8000 + row.doc_id % 8 * 1000)
+            f.writeframes(b)
+        yield {"media_id": row.doc_id, "content": buf.getvalue()}
 
-    cat = Catalog(spark, sf_dir)
-    out_schema = "media_id long, content binary"
-
-    def mux(batches):
-        for pdf in batches:
-            content = []
-            for mid, text in zip(pdf["doc_id"], pdf["text"]):
-                b = (text or "").encode("utf-8")
-                if len(b) % 2:
-                    b += b"\x00"
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as f:
-                    f.setnchannels(1)
-                    f.setsampwidth(2)
-                    f.setframerate(8000 + int(mid) % 8 * 1000)
-                    f.writeframes(b)
-                content.append(buf.getvalue())
-            yield pd.DataFrame({"media_id": pdf["doc_id"],
-                                "content": content})
-
-    media = cat.wide_table("documents").select("doc_id", "text").mapInPandas(
-        mux, out_schema)
+    media = _map_rows(
+        Catalog(spark, sf_dir).wide_table("documents").select("doc_id", "text"),
+        "media_id long, content binary", mux)
     return audio_stats(media).select(
         "media_id", "n_channels", "sample_rate", "n_samples",
         "duration_ms", "sum_abs", "mean_abs")
@@ -509,42 +500,23 @@ def multimodal_image_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimate is below the core count — at 100 TB the scan has
     thousands of row-group splits, so no shuffle is ever added where
     it would actually hurt."""
-    import pandas as pd
+    def roundtrip(row):
+        raw = (row.text or "").encode("utf-8")
+        h = max(1, -(-len(raw) // 16))
+        grid = np.frombuffer(raw.ljust(h * 16, b"\x00"),
+                             dtype=np.uint8).reshape(h, 16)
+        img = codecs.decode_png(
+            codecs.encode_png(grid, filter_type=row.doc_id % 5))
+        yield {"media_id": row.doc_id, "width": int(img.shape[1]),
+               "height": int(img.shape[0]), "filter_type": row.doc_id % 5,
+               "n_pixels": int(img.shape[0] * img.shape[1]),
+               "sum_pixel": int(img.astype(np.int64).sum())}
 
-    cat = Catalog(spark, sf_dir)
-
-    def roundtrip(batches):
-        import numpy as np
-
-        from data_ingestion_system_spark.operators import codecs
-
-        for pdf in batches:
-            rows = []
-            for mid, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = (text or "").encode("utf-8")
-                h = max(1, -(-len(raw) // 16))
-                grid = np.frombuffer(
-                    raw.ljust(h * 16, b"\x00"), dtype=np.uint8
-                ).reshape(h, 16)
-                png = codecs.encode_png(grid, filter_type=int(mid) % 5)
-                img = codecs.decode_png(png)
-                rows.append({
-                    "media_id": mid,
-                    "width": int(img.shape[1]),
-                    "height": int(img.shape[0]),
-                    "filter_type": int(mid) % 5,
-                    "n_pixels": int(img.shape[0] * img.shape[1]),
-                    "sum_pixel": int(img.astype(np.int64).sum()),
-                })
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "width", "height", "filter_type",
-                "n_pixels", "sum_pixel"])
-
-    docs = cat.wide_table("documents").select("doc_id", "text")
-    stats = docs.mapInPandas(
-        roundtrip,
-        "media_id long, width int, height long, filter_type int, "
-        "n_pixels long, sum_pixel long")
+    docs = Catalog(spark, sf_dir).wide_table("documents").select(
+        "doc_id", "text")
+    stats = _map_rows(docs, "media_id long, width int, height long, "
+                      "filter_type int, n_pixels long, sum_pixel long",
+                      roundtrip)
     return stats.select(
         "media_id", "width", "height", "filter_type", "n_pixels",
         "sum_pixel",
@@ -610,33 +582,8 @@ def multimodal_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle anywhere — per-pair work is one vectorized numpy pass over
     48-byte frames, and at 100 TB the job is bounded by scan + Arrow
     batch throughput exactly like the other media ops."""
-    import math
-
-    from data_ingestion_system_spark.operators import codecs
-    from data_ingestion_system_spark.operators.multimodal import (
-        video_scene_deltas,
-    )
-
-    cat = Catalog(spark, sf_dir)
-    out_schema = "media_id long, content binary"
-    fb = _SCENE_FRAME_BYTES
-
-    def mux(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            content = []
-            for mid, text in zip(pdf["doc_id"], pdf["text"]):
-                b = (text or "").encode("utf-8")
-                n = max(1, math.ceil(len(b) / fb))
-                b = b.ljust(n * fb, b"\x00")
-                frames = [b[i * fb:(i + 1) * fb] for i in range(n)]
-                content.append(codecs.encode_avi(frames, 16, 1, fps=12))
-            yield pd.DataFrame({"media_id": pdf["doc_id"],
-                                "content": content})
-
-    media = cat.wide_table("documents").select("doc_id", "text").mapInPandas(
-        mux, out_schema)
+    media = _avi_from_documents(spark, sf_dir, _SCENE_FRAME_BYTES, 16, 1,
+                                fps=12)
     return (video_scene_deltas(media, threshold=_SCENE_CUT_THRESHOLD)
             .filter(F.col("demux_error").isNull())
             .select("media_id", "frame_idx", "sum_abs_delta", "is_cut"))

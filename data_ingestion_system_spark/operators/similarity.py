@@ -381,9 +381,7 @@ def topk_ivf_pq(corpus: DataFrame, centroids: np.ndarray, queries: DataFrame,
         "cid", ivf_assign_udf(centroids, 1)(F.col("embedding"))[0]
     ).withColumn("codes", pq_encode_udf(codebook)(F.col("embedding")))
 
-    probes = queries.withColumn(
-        "cids", ivf_assign_udf(centroids, nprobe)(F.col("qv"))
-    ).select("qid", F.explode("cids").alias("cid"))
+    probes = ivf_probes(queries, centroids, nprobe).select("qid", "cid")
     # qid -> LUT index as a literal map expression (codegen'd element_at;
     # the query set is driver-resident by construction, so no UDF and no
     # extra join)

@@ -44,7 +44,6 @@ from pyspark.sql.streaming import StreamingQuery
 
 from data_ingestion_system_spark.operators.dedup import (
     minhash_lsh_pairs,
-    normalized_text,
     word_shingles,
 )
 from data_ingestion_system_spark.operators.dedup_index import (
@@ -52,6 +51,7 @@ from data_ingestion_system_spark.operators.dedup_index import (
     probe_index,
     write_index,
 )
+from data_ingestion_system_spark.operators.text import fingerprint_md5
 from data_ingestion_system_spark.sources.versioned import (
     batch_committed,
     commit_stream_batch,
@@ -170,7 +170,7 @@ def start_curation_stream(
         try:
             # (1) within-batch exact dedup: min doc_id per normalized text
             fp = batch_df.withColumn(
-                "__fp", F.md5(normalized_text(F.col("text"))))
+                "__fp", fingerprint_md5(F.col("text")))
             keep = fp.groupBy("__fp").agg(F.min("doc_id").alias("doc_id"))
             batch = (fp.join(keep, ["__fp", "doc_id"], "left_semi")
                      .drop("__fp"))

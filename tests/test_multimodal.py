@@ -330,3 +330,123 @@ def test_scene_cuts_planted_deltas(spark, tmp_path):
         (4, 1): (36 * ord("a"), True),   # 3492 > 2000
     }
     shutil.rmtree(sf, ignore_errors=True)
+
+
+# -------------------------------------------- one quarantine rule
+
+
+def _valid_payload(kind: str) -> bytes:
+    """A small well-formed blob of each kind: a PNG, a 16-bit WAV and a
+    three-frame raw-DIB AVI."""
+    import io
+    import wave
+
+    from data_ingestion_system_spark.operators import codecs
+
+    rng = np.random.RandomState(5)
+    if kind == "image":
+        return codecs.encode_png(
+            rng.randint(0, 256, (6, 8), dtype=np.uint8), filter_type=4)
+    if kind == "audio":
+        buf = io.BytesIO()
+        with wave.open(buf, "wb") as f:
+            f.setnchannels(1)
+            f.setsampwidth(2)
+            f.setframerate(8000)
+            f.writeframes(rng.randint(-3000, 3000, 64).astype("<i2")
+                          .tobytes())
+        return buf.getvalue()
+    return codecs.encode_avi(
+        [rng.randint(0, 256, 192, dtype=np.uint8).tobytes()
+         for _ in range(3)], 16, 4, fps=25)
+
+
+_CORRUPT = b"\x00not a media container"
+
+
+@pytest.mark.parametrize("op, kind, error_col, decode", [
+    ("media_features_decoded", "image", "decode_error",
+     lambda b: decode_real(b, "image")),
+    ("video_demux_stats", "video", "demux_error", "demux_avi"),
+    ("audio_stats", "audio", "decode_error", "decode_wav"),
+    ("video_scene_deltas", "video", "demux_error", "demux_avi"),
+])
+def test_corrupt_blob_quarantines_into_one_null_row(spark, op, kind,
+                                                    error_col, decode):
+    """Every quarantining media op follows the one rule: a corrupt blob
+    beside a valid one in the same batch becomes exactly one row with its
+    media_id, ``"<ExceptionType>: <message>"`` in the error column and
+    every other column NULL, and the valid row comes out as it does
+    alone."""
+    from data_ingestion_system_spark.operators import codecs
+    from data_ingestion_system_spark.operators import multimodal as MM
+
+    if isinstance(decode, str):
+        decode = getattr(codecs, decode)
+    with pytest.raises(Exception) as raised:
+        decode(_CORRUPT)
+    expect = f"{type(raised.value).__name__}: {raised.value}"
+
+    def run(rows):
+        df = spark.createDataFrame(
+            rows, "media_id long, kind string, content binary").coalesce(1)
+        return [r.asDict() for r in getattr(MM, op)(df).collect()]
+
+    valid = (1, kind, bytearray(_valid_payload(kind)))
+    got = run([valid, (2, kind, bytearray(_CORRUPT))])
+    bad = [r for r in got if r["media_id"] == 2]
+    assert len(bad) == 1
+    assert bad[0][error_col] == expect
+    assert all(v is None for c, v in bad[0].items()
+               if c not in ("media_id", error_col))
+    good = [r for r in got if r["media_id"] == 1]
+    assert good and all(r[error_col] is None for r in good)
+    assert good == run([valid])
+
+
+def test_scene_deltas_skip_compressed_streams(spark):
+    """A compressed-fourcc stream demuxes but has no native pixel decode,
+    so video_scene_deltas yields no rows for it: neither deltas nor a
+    quarantine row."""
+    from data_ingestion_system_spark.operators.codecs import encode_avi
+    from data_ingestion_system_spark.operators.multimodal import (
+        video_scene_deltas,
+    )
+
+    mj = encode_avi([b"\xff\xd8data\xff\xd9"] * 3, 8, 8, fps=5,
+                    fourcc=b"MJPG")
+    df = spark.createDataFrame([(1, bytearray(mj))],
+                               "media_id long, content binary")
+    assert video_scene_deltas(df).collect() == []
+
+
+def test_map_rows_empty_output_partial_failure_and_loud_failure(spark):
+    """A kernel that yields nothing still gives well-formed (empty)
+    batches; a kernel that fails after yielding leaves only its
+    quarantine row; without an error column a kernel exception fails
+    the job."""
+    from pyspark.sql import functions as F
+
+    from data_ingestion_system_spark.operators.multimodal import _map_rows
+
+    df = spark.range(4).select(F.col("id").alias("media_id"))
+
+    def nothing(row):
+        return iter(())
+
+    out = _map_rows(df, "media_id long, note string", nothing)
+    assert out.columns == ["media_id", "note"] and out.collect() == []
+
+    def late(row):
+        yield {"media_id": row.media_id, "note": "partial"}
+        raise ValueError("late")
+
+    got = _map_rows(df, "media_id long, note string, err string", late,
+                    error_col="err").collect()
+    assert sorted(got) == [(i, None, "ValueError: late") for i in range(4)]
+
+    def boom(row):
+        raise ValueError(f"boom {row.media_id}")
+
+    with pytest.raises(Exception, match="ValueError: boom"):
+        _map_rows(df, "media_id long", boom).collect()

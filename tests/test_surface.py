@@ -71,3 +71,47 @@ def test_test_only_names_are_in_coverage():
     assert not unnamed, (
         "test-only package code not named in COVERAGE.md — name the "
         f"capability it alone provides, or delete it with its tests: {unnamed}")
+
+
+# Every handler in the package that catches everything (a bare
+# ``except``, ``Exception`` or ``BaseException``) and does not end in a
+# bare ``raise``, named as (module, enclosing function).  A catch that
+# swallows a failure is a decision; a new one fails here until it is
+# named.  Cleanup-and-re-raise handlers are not listed.
+_ALLOWED_BROAD_CATCHES = sorted([
+    # the media family's one quarantine rule: a corrupt blob becomes an
+    # error row instead of failing the batch
+    ("operators/multimodal.py", "_map_rows.run"),
+    # a cache backend error degrades to uncached serving (get, then put)
+    ("plans/cache.py", "CachedSearchService._serve"),
+    ("plans/cache.py", "CachedSearchService._serve"),
+])
+
+
+def _is_broad(handler: ast.ExceptHandler) -> bool:
+    types = (handler.type.elts if isinstance(handler.type, ast.Tuple)
+             else [handler.type])
+    return any(t is None or (isinstance(t, ast.Name)
+                             and t.id in ("Exception", "BaseException"))
+               for t in types)
+
+
+def _broad_catches(node: ast.AST, path: str, scope: str = ""):
+    for child in ast.iter_child_nodes(node):
+        inner = scope
+        if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef,
+                              ast.ClassDef)):
+            inner = f"{scope}.{child.name}" if scope else child.name
+        if isinstance(child, ast.ExceptHandler) and _is_broad(child):
+            last = child.body[-1]
+            if not (isinstance(last, ast.Raise) and last.exc is None):
+                yield path, scope
+        yield from _broad_catches(child, path, inner)
+
+
+def test_broad_catches_that_swallow_are_named():
+    found = sorted(
+        hit for p in PACKAGE.rglob("*.py")
+        for hit in _broad_catches(ast.parse(p.read_text()),
+                                  str(p.relative_to(PACKAGE))))
+    assert found == _ALLOWED_BROAD_CATCHES
